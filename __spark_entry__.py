@@ -288,12 +288,17 @@ def _fielded_searcher_for(spark: SparkSession, sf_dir: str) -> IndexSearcher:
     return s
 
 
-def _hits(spark, sf_dir, query, k) -> DataFrame:
-    s = _searcher_for(spark, sf_dir)
-    return s.search(query, k=k).select(
+def _scored(hits: DataFrame) -> DataFrame:
+    """(doc_id long, score double) — the oracles' column types; an f32
+    score widens to double exactly."""
+    return hits.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("score").cast("double").alias("score"),
     )
+
+
+def _hits(spark, sf_dir, query, k) -> DataFrame:
+    return _scored(_searcher_for(spark, sf_dir).search(query, k=k))
 
 
 # ----------------------------------------------------------------------
@@ -1110,7 +1115,7 @@ def _q_payload_max(spark, sf):
     concat, distributed posting+payload decode. Integer-valued f32
     payloads keep the scores hash-exact."""
     s = _payload_searcher_for(spark, sf)
-    return s.payload_score_topk(Q_TERM, k=K, fn="max")
+    return _scored(s.payload_score_topk(Q_TERM, k=K, fn="max"))
 
 
 
@@ -1163,7 +1168,7 @@ def _q_span_paycheck(spark, sf):
 
     s = _payload_searcher_for(spark, sf)
     q = SpanPayloadCheckQuery(SpanTermQuery(Q_TERM), (3.0,))
-    return s.search(q, k=K)
+    return _scored(s.search(q, k=K))
 
 
 _ADDED_SEARCHERS: dict[str, IndexSearcher] = {}
@@ -1229,7 +1234,7 @@ def _q_payload_near(spark, sf):
     q = PayloadNearQuery(
         (SpanTermQuery(Q_AND[0]), SpanTermQuery(Q_AND[1])), 0, True, "avg"
     )
-    return s.search(q, k=K)
+    return _scored(s.search(q, k=K))
 
 
 def _q_span_posrange(spark, sf):
@@ -1241,9 +1246,9 @@ def _q_span_posrange(spark, sf):
     )
 
     s = _searcher_for(spark, sf)
-    return s.search(
+    return _scored(s.search(
         SpanPositionRangeQuery(SpanTermQuery(Q_TERM), 2, 10), k=K
-    )
+    ))
 
 
 def _q_boosting(spark, sf):
@@ -1269,7 +1274,7 @@ def _q_terms_filter(spark, sf):
     from lucene_solr_spark.search.query import TermsQuery
 
     s = _searcher_for(spark, sf)
-    return s.search(TermsQuery(("vector", "dup", "window")), k=K)
+    return _scored(s.search(TermsQuery(("vector", "dup", "window")), k=K))
 
 
 def _q_luke(spark, sf):
@@ -3347,7 +3352,7 @@ def _q_checkindex(spark, sf):
 
 def _q_lm_tree(spark, sf):
     """Nested boolean tree under LM Dirichlet — the pluggable-leaf
-    _eval_tree path (searcher._search_simbase_tree): MUST + boosted
+    _eval_tree path (searcher._search_similarity): MUST + boosted
     SHOULD + MUST_NOT, boosts folding into stats.getTotalBoost()."""
     from lucene_solr_spark.search.parser import parse_query
 
@@ -4480,11 +4485,8 @@ def _q_frange_filter(spark, sf):
     docs = _docs(spark, sf).select(F.col("doc_id").cast("long"), "n_chars")
     fval = F.lit(1000.0) / (F.col("n_chars").cast("double") + F.lit(1000.0))
     keep = docs.filter((fval >= 0.80) & (fval <= 0.90)).select("doc_id")
-    return (
-        hits.join(keep, "doc_id")
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), "doc_id")
-        .limit(K)
+    return _scored(
+        hits.join(keep, "doc_id").orderBy(F.desc("score"), "doc_id").limit(K)
     )
 
 
@@ -5718,7 +5720,8 @@ def _q_spatial_box(spark, sf):
 def _q_spatial_distance(spark, sf):
     """GeoPointDistanceQuery analog: two-phase (conservative bbox
     range prefilter + exact haversine verify), nearest-first top-10.
-    Distance surfaced as float32 (same cast in the oracle)."""
+    Distance rounded to float32 (same cast in the oracle), surfaced
+    as double."""
     from lucene_solr_spark.search.spatial import distance_query
 
     g = _geo_docs(spark, sf)
@@ -5726,7 +5729,8 @@ def _q_spatial_distance(spark, sf):
         g, "lat", "lon", _GEO_SF[0], _GEO_SF[1], _GEO_RADIUS_M
     )
     return (
-        hits.select("doc_id", F.col("dist_m").cast("float").alias("dist_m"))
+        hits.select("doc_id", F.col("dist_m").cast("float").cast("double")
+                    .alias("dist_m"))
         .orderBy(F.col("dist_m").asc(), F.col("doc_id").asc())
         .limit(10)
     )
@@ -5757,7 +5761,7 @@ def _q_spatial_nearest(spark, sf):
     g = _geo_docs(spark, sf)
     return nearest(
         g, "lat", "lon", _GEO_PARIS[0], _GEO_PARIS[1], 10, "doc_id"
-    ).select("doc_id", "dist_m")
+    ).select("doc_id", F.col("dist_m").cast("double").alias("dist_m"))
 
 
 # facet.heatmap grid: a non-wrapping box split into 8x8 cells
@@ -5796,13 +5800,13 @@ def _spatial_sqls() -> dict[str, str]:
     )
     d_sf = haversine_sql(repr(_GEO_SF[0]), repr(_GEO_SF[1]), "lat", "lon")
     dist = (
-        f"WITH {geo} SELECT doc_id, CAST({d_sf} AS FLOAT) AS dist_m "
+        f"WITH {geo} SELECT doc_id, CAST(CAST({d_sf} AS FLOAT) AS DOUBLE) AS dist_m "
         f"FROM geo WHERE {d_sf} <= {_GEO_RADIUS_M!r} "
         "ORDER BY dist_m ASC, doc_id ASC LIMIT 10"
     )
     d_pa = haversine_sql(repr(_GEO_PARIS[0]), repr(_GEO_PARIS[1]), "lat", "lon")
     near = (
-        f"WITH {geo} SELECT doc_id, CAST({d_pa} AS FLOAT) AS dist_m "
+        f"WITH {geo} SELECT doc_id, CAST(CAST({d_pa} AS FLOAT) AS DOUBLE) AS dist_m "
         "FROM geo ORDER BY dist_m ASC, doc_id ASC LIMIT 10"
     )
     from lucene_solr_spark.search.spatial import polygon_sql
@@ -6614,7 +6618,7 @@ toks AS (
          unnest(range(len(l))) AS pos
   FROM s
 )
-SELECT doc_id, CAST(MAX(pos) AS REAL) AS score
+SELECT doc_id, CAST(CAST(MAX(pos) AS REAL) AS DOUBLE) AS score
 FROM toks WHERE tok = '{Q_TERM}'
 GROUP BY doc_id
 ORDER BY score DESC, doc_id ASC LIMIT {K}""",

@@ -2,20 +2,35 @@
 
 Query lifecycle mirrors IndexSearcher.search (SURVEY.md §3.1):
 
-1. rewrite(query) to fixpoint (logical plan).
-2. bind global stats: df per term from `term_stats` (pushdown `term IN`),
+1. rewrite(query) to fixpoint (logical plan), then _spec: a flat kind
+   (term/and/not/or/dismax/reqopt/phrase/...) or a nested tree.
+2. bind global stats: (df, cf) per term from the driver TermStates cache
+   (_term_states — one pushed-down `term IN` seek per never-seen term),
    maxDoc/sumTotalTermFreq from the manifest -> float32 idf, avgdl, the
    256-entry norm cache (BM25Similarity.computeWeight:200-212).
-3. per-shard physical plan: scan `postings` with `term IN (...)` pushed to
-   parquet (BlockTree term seek analog — Iceberg/parquet min-max pruning on
-   the term-sorted files), join the shard's norm blob, then ONE
-   applyInPandas group per shard = Lucene's leaf slice: decode blocks,
-   vectorized float32 scoring, bounded top-k ordered (score desc, doc asc)
+3. per-shard physical plan — ONE seam, _run_shards, for every scoring
+   caller (search, search_many, the similarity wrappers, early
+   termination, the term automaton): scan `postings` with `term IN
+   (...)` pushed to parquet (BlockTree term seek analog) minus the
+   positions/payload streams no spec reads, cogroup with the shard's
+   norms + liveDocs row (exchange-free on a preloaded searcher), then
+   ONE applyInPandas group per shard = Lucene's leaf slice running the
+   caller's kernel; the seam shifts docIDs by the generation offset.
+   The scoring kernel is _score_spec: decode blocks, vectorized float32
+   scoring, bounded top-k ordered (score desc, doc asc)
    (TopScoreDocCollector.java:63-80, HitQueue.java:76-81).
 4. driver reduce: ORDER BY score DESC, doc_id ASC LIMIT k. Global docIDs
    are monotone in (shard, local doc), so this reproduces TopDocs.merge's
    tie-breaks exactly (score desc, earlier shard, shard-internal order;
    TopDocs.java:94-116).
+
+Pluggable similarity (IndexSearcher.setSimilarity, SURVEY §2.6): the
+classic TF-IDF, SweetSpot and SimilarityBase (LM/DFR/IB/Multi) wrappers
+build a _Similarity on the driver and run the SAME spec, seam and
+kernels as BM25 — _score_spec / _eval_tree take a `leaf_fn(term, tf,
+norm_bytes, boost)` leaf scorer and a `coord` flag (ClassicSimilarity
+overlap/maxOverlap on disjunctions), so min_should_match, liveDocs and
+the leapfrog intersection hold for every similarity.
 
 Block-max fast paths (Ding & Suel SIGIR'11; north-rule addition, SURVEY §4.5),
 all output-identical to the exhaustive path (tested):
@@ -24,17 +39,21 @@ all output-identical to the exhaustive path (tested):
 - AND / NOT / req+opt: cost-sorted leapfrog — the globally rarest term
   leads; other terms decode only the 128-blocks overlapping the
   shrinking candidate set via the per-block last-docID skip entries
-  (_leapfrog; ConjunctionDISI.java:84-133 + advance()).
+  (_leapfrog; ConjunctionDISI.java:84-133 + advance()). Similarity-
+  independent: runs under every leaf_fn.
 - OR (sum-scored): block-max WAND — doc space segmented at block
   boundaries, per-segment bound = sum of covering blocks' max impacts,
-  visited bound-desc until the kth score wins (_score_or_wand).
+  visited bound-desc until the kth score wins (_score_or_wand). The
+  stored block maxima are BM25 impacts, so this and the pruned term
+  path are off under a leaf_fn.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from functools import reduce
+from functools import partial, reduce
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -169,6 +188,14 @@ class _LazyTerms:
                 ts.append(t)
             self._full[term] = (np.concatenate(ds), np.concatenate(ts))
         return self._full[term]
+
+    def tf_at(self, term: str, doc: int) -> int:
+        """The term's freq in `doc` (0 when absent) — explain lookups."""
+        if term not in self.rows:
+            return 0
+        d, tf = self.full(term)
+        p = int(np.searchsorted(d, doc))
+        return int(tf[p]) if p < len(d) and d[p] == doc else 0
 
     def pos_stream(self, term: str) -> bytes | None:
         if not self.has_pos:
@@ -326,12 +353,24 @@ def _score_spec(
     deleted: np.ndarray | None = None,
     prune_min: int = 0,
     cursor: tuple[float, int] | None = None,
+    leaf_fn=None,
+    coord: bool = False,
 ) -> pd.DataFrame:
     """Score one decoded shard against one query spec -> top-k rows.
 
     `caches` maps field key ('' = default field) -> the 256-float norm
     cache of that field (per-field avgdl, BM25Similarity.java:206-211);
     a bare array is accepted as the single-field shorthand.
+
+    Pluggable similarity (IndexSearcher.setSimilarity, SURVEY §2.6):
+    `leaf_fn(term, tf, norm_bytes, boost) -> f32 scores` replaces the
+    BM25 leaf everywhere (flat kinds and _eval_tree); `coord=True`
+    multiplies disjunction sums by overlap/maxOverlap
+    (ClassicSimilarity.coord). The block-max impact paths
+    (_score_term_pruned, _score_or_wand, the tree's term/WAND routing)
+    bound BM25 scores only, so they are off under a leaf_fn; the
+    docID-skipping _leapfrog does not depend on the similarity and
+    stays on.
 
     `prune_min`: the block-skip fast paths only pay off when the
     shard-local decode work is large — per-block skip reads carry
@@ -350,17 +389,22 @@ def _score_spec(
         if cost < prune_min:
             prune = False
 
+    # block-max impact pruning: BM25 bounds, bounded heap
+    blockmax = prune and k is not None and leaf_fn is None
+
+    def leaf(term: str, tf: np.ndarray, docs: np.ndarray) -> np.ndarray:
+        nrm, cch = _nc(term, norms_map, caches)
+        if leaf_fn is not None:
+            return leaf_fn(term, tf, nrm[docs - base], np.float32(1.0))
+        return bm25.score_term(tf, nrm[docs - base], idfs[term], cch)
+
     def term_scores(term: str) -> tuple[np.ndarray, np.ndarray]:
         d, t = lt.full(term)
-        nrm, cch = _nc(term, norms_map, caches)
-        s = bm25.score_term(t, nrm[d - base], idfs[term], cch)
-        return d, s
+        return d, leaf(term, t, d)
 
     def scores_at(term: str, d_src, t_src, docs: np.ndarray) -> np.ndarray:
         """Per-doc scores for `docs` (must all exist in d_src)."""
-        idx = np.searchsorted(d_src, docs)
-        nrm, cch = _nc(term, norms_map, caches)
-        return bm25.score_term(t_src[idx], nrm[docs - base], idfs[term], cch)
+        return leaf(term, t_src[np.searchsorted(d_src, docs)], docs)
 
     kind = spec["kind"]
     empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
@@ -370,7 +414,7 @@ def _score_spec(
         term = spec["terms"][0]
         if term not in lt:
             return empty
-        if prune and k is not None:
+        if blockmax:
             nrm, cch = _nc(term, norms_map, caches)
             docs, scores = _score_term_pruned(
                 pdf, term, base, nrm, idfs, cch, k, deleted,
@@ -405,8 +449,7 @@ def _score_spec(
             d, tf = lt.decode_for(t, inter) if prune else lt.full(t)
             if len(d) == 0:
                 continue
-            nrm, cch = _nc(t, norms_map, caches)
-            s = bm25.score_term(tf, nrm[d - base], idfs[t], cch)
+            s = leaf(t, tf, d)
             pos = np.searchsorted(d, inter)
             pos = np.minimum(pos, len(d) - 1)
             hit = d[pos] == inter
@@ -448,7 +491,7 @@ def _score_spec(
 
     if kind == "tree":
         node = spec["tree"]
-        if prune and k is not None:
+        if blockmax:
             # top-level shape routing (BooleanWeight.java:232-359):
             # bare term leaf -> block-max term; pure-SHOULD-of-terms
             # -> block-max WAND — boost folds into the leaf weight
@@ -481,7 +524,8 @@ def _score_spec(
         # threads candidate sets down required-clause chains so term
         # leaves block-skip (liveDocs applied at collection time)
         docs, scores = _eval_tree(
-            node, lt, base, norms_map, idfs, caches, prune=prune
+            node, lt, base, norms_map, idfs, caches, prune=prune,
+            leaf_fn=leaf_fn,
         )
         if deleted is not None and len(deleted) and len(docs):
             m = ~np.isin(docs, deleted)
@@ -515,7 +559,7 @@ def _score_spec(
         if not present:
             return empty
         msm = spec.get("min_should_match", 1)
-        if prune and kind == "or" and msm <= 1 and k is not None and len(present) > 1:
+        if blockmax and kind == "or" and msm <= 1 and len(present) > 1:
             docs, scores = _score_or_wand(
                 lt, present, base, norms_map, idfs, caches, k, deleted,
                 cursor=cursor,
@@ -546,6 +590,10 @@ def _score_spec(
             total = (mx + (acc32 - mx) * tie).astype(np.float32)
         else:
             total = acc64.astype(np.float32)
+            if coord:  # ClassicSimilarity.coord = overlap / maxOverlap
+                max_overlap = np.float32(len(spec["terms"]))
+                coords = nmatch.astype(np.float32) / max_overlap
+                total = (total * coords).astype(np.float32)
         if deleted is not None and len(deleted):
             live = ~np.isin(union, deleted)
             union, total, nmatch = union[live], total[live], nmatch[live]
@@ -1196,13 +1244,7 @@ def _explain_node(
         out["df"] = int(lt.dfs.get(t, 0))
         out["idf"] = float(idfs.get(t, np.float32(0.0)))
         out["boost"] = float(boost)
-        tf = 0
-        if t in lt:
-            td, ttf = lt.full(t)
-            p = int(np.searchsorted(td, doc_local))
-            if p < len(td) and td[p] == doc_local:
-                tf = int(ttf[p])
-        out["tf"] = tf
+        out["tf"] = lt.tf_at(t, doc_local)
         nrm, cch = _nc(t, norms_map, caches)
         nb = int(nrm[doc_local - base]) if 0 <= doc_local - base < len(nrm) else 0
         out["norm_byte"] = nb
@@ -1307,7 +1349,7 @@ def _spec_needs_positions(spec: dict) -> bool:
     Lucene50PostingsReader.java:189-204). _decode_shard handles the
     column's absence, so dropping it prunes the parquet ReadSchema."""
     k = spec["kind"]
-    if k in ("phrase", "multi_phrase", "spans"):
+    if k in ("phrase", "multi_phrase", "spans", "automaton"):
         return True
     if k == "tree":
         return _tree_has_phrase(spec["tree"])
@@ -1322,6 +1364,17 @@ def _spec_needs_payloads(spec: dict) -> bool:
     from lucene_solr_spark.search.spans import span_needs_payloads
 
     return span_needs_payloads(spec["node"])
+
+
+def _unread_dropped(matched: DataFrame, specs: list[dict]) -> DataFrame:
+    """Posting rows without the positions / payload streams no spec
+    reads — pruned before the shard exchange (and from the parquet
+    ReadSchema); _decode_shard handles either column's absence."""
+    if not any(_spec_needs_positions(s) for s in specs):
+        return matched.drop("pos_enc", "pay_enc")
+    if not any(_spec_needs_payloads(s) for s in specs):
+        return matched.drop("pay_enc")
+    return matched
 
 
 def _tree_has_field_exists(node: dict) -> bool:
@@ -1617,6 +1670,42 @@ def _score_term_pruned(pdf, term, base, norms, idfs, cache, k,
 PRUNE_MIN_POSTINGS = 16384
 
 
+class _Similarity(NamedTuple):
+    """A non-BM25 similarity for the shared kernels (the
+    IndexSearcher.setSimilarity seam, SURVEY §2.6). Built on the driver
+    per query; only its leaf scorers ship to the shard tasks."""
+
+    # (clause_terms, {term: (df, cf)}) -> {term: (leaf, explain stats)}
+    # with leaf(tf, norm_bytes, boost=1.0) -> f32 scores
+    weigh: Callable
+    coord: bool  # ClassicSimilarity coord: overlap/maxOverlap on disjunctions
+    trees: bool  # nested boolean trees accepted (SimilarityBase family)
+    norm: tuple  # (explain key, 256-entry decode of the doc's norm byte)
+    head: dict  # explain fields naming the similarity
+    description: str
+
+
+def _simbase_similarity(make_leaf, detail, model: str) -> _Similarity:
+    """SimilarityBase flavor (LM/DFR/IB): per-term leaves from the
+    term's (df, cf), coord disabled (Similarity.coord() stays 1)."""
+    from lucene_solr_spark.functions.lm import DOCLEN_TABLE
+
+    def weigh(clause_terms, stats):
+        return {
+            t: (make_leaf(t, *stats[t]), detail(t, *stats[t]))
+            for t in clause_terms
+        }
+
+    return _Similarity(
+        weigh, coord=False, trees=True, norm=("doc_len", DOCLEN_TABLE),
+        head={"model": model},
+        description=(
+            "SimilarityBase: f64 sum of per-term f32 leaves, one "
+            "f32 cast (coord disabled)"
+        ),
+    )
+
+
 class IndexSearcher:
     """Searcher over an index directory produced by build_index."""
 
@@ -1649,11 +1738,11 @@ class IndexSearcher:
         self._norms = self._io.read("norms")
         self._term_stats = self._io.read("term_stats")
         # driver-side TermStates cache (Lucene caches TermStates per
-        # query term at createWeight time): term -> global df. Bounded
-        # by the distinct terms ever queried on this reader instance;
-        # df never changes within a reader generation (deletes don't
-        # touch df, NRT appends open a NEW searcher).
-        self._df_cache: dict[str, int] = {}
+        # query term at createWeight time): term -> global (df, cf).
+        # Bounded by the distinct terms ever queried on this reader
+        # instance; neither changes within a reader generation (deletes
+        # don't touch them, NRT appends open a NEW searcher).
+        self._ts_cache: dict[str, tuple[int, int]] = {}
         self._rev_stats: DataFrame | None = None  # lazy reversed dict
         self._doc_map = None
         # multi-generation state (NRT delta segments; see streaming/nrt.py):
@@ -1944,20 +2033,24 @@ class IndexSearcher:
         return norms
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Global df per term, driver-cached (the TermStates pull —
-        one tiny pushed-down dictionary seek per never-seen term set,
-        free afterwards). Absent terms cache as 0."""
-        missing = sorted({t for t in terms if t not in self._df_cache})
+        """Global df per term, driver-cached (see _term_states)."""
+        return {t: st[0] for t, st in self._term_states(terms).items()}
+
+    def _term_states(self, terms) -> dict[str, tuple[int, int]]:
+        """Global (df, cf) per term, driver-cached (the TermStates pull
+        — one tiny pushed-down dictionary seek per never-seen term set,
+        free afterwards). Absent terms cache as (0, 0)."""
+        missing = sorted({t for t in terms if t not in self._ts_cache})
         if missing:
             rows = (
                 self._term_stats.where(F.col("term").isin(missing))
-                .select("term", "df")
+                .select("term", "df", "cf")
                 .collect()
             )
-            found = {r.term: int(r.df) for r in rows}
+            found = {r.term: (int(r.df), int(r.cf)) for r in rows}
             for t in missing:
-                self._df_cache[t] = found.get(t, 0)
-        return {t: self._df_cache[t] for t in terms}
+                self._ts_cache[t] = found.get(t, (0, 0))
+        return {t: self._ts_cache[t] for t in terms}
 
     def _expand_mtq(self, q) -> list[str]:
         """Dictionary expansion for prefix/wildcard/regexp (the automaton
@@ -2388,6 +2481,57 @@ class IndexSearcher:
             "df_total", mapping[F.col("term")].cast("long")
         )
 
+    def _run_shards(
+        self, terms: list[str], specs: list[dict], kernel, schema: str,
+        all_shards: bool = False,
+    ) -> DataFrame:
+        """The one per-shard execution seam (Lucene's leaf-slice loop):
+        the pushed-down term seek (_matched) without the positions /
+        payload streams no spec reads, the shard-keyed cogroup with the
+        norms + liveDocs side (_cogroup_inputs — exchange-free on a
+        preloaded searcher), then ONE applyInPandas group per shard.
+
+        `kernel(left, decoded, deleted, off)` scores one shard: `left`
+        is its posting rows, `decoded` the _decode_shard tuple,
+        `deleted` its generation-local liveDocs complement and `off`
+        its generation's docID offset. It returns rows of `schema` with
+        generation-local doc_ids (None = no rows); the seam shifts them
+        by `off`. all_shards=True also runs shards no query term
+        touches. Returns the per-shard frame."""
+        matched, norms_side = self._cogroup_inputs(
+            _unread_dropped(self._matched(terms), specs), all_shards
+        )
+        default_field = self._default_field
+        codec = self._codec
+        offsets = dict(self._doc_offsets)
+        pd_types = {"long": "int64", "int": "int32", "float": "float32",
+                    "string": "object"}
+        empty = pd.DataFrame({
+            name: pd.Series(dtype=pd_types[typ])
+            for name, typ in (f.split() for f in schema.split(","))
+        })
+
+        def per_shard(left: pd.DataFrame, nr: pd.DataFrame) -> pd.DataFrame:
+            if len(nr) == 0 or (len(left) == 0 and not all_shards):
+                return empty
+            # the norms row names the shard even when no term matched
+            off = offsets.get(int(nr["shard"].iloc[0]), 0)
+            out = kernel(
+                left, _decode_shard(left, nr, default_field, codec),
+                _local_deleted(nr, off), off,
+            )
+            if out is None:
+                return empty
+            if off:
+                out["doc_id"] = out["doc_id"] + off
+            return out
+
+        return (
+            matched.groupBy("shard")
+            .cogroup(norms_side.groupBy("shard"))
+            .applyInPandas(per_shard, schema)
+        )
+
     def search(self, query: Query, k: int | None = 10, prune: bool = True,
                cursor: tuple[float, int] | None = None,
                df_override: dict[str, int] | None = None) -> DataFrame:
@@ -2443,57 +2587,45 @@ class IndexSearcher:
                 return self.search(BooleanAnd(should), k, prune, cursor)
             return self.search(BooleanMustShould(must, should), k, prune,
                                cursor)
-        spec = self._spec(q)
-        terms = sorted(set(spec["terms"]))
+        return self._search_spec(self._spec(q), k, prune, cursor, df_override)
+
+    def _search_spec(
+        self, spec: dict, k: int | None, prune: bool = True,
+        cursor: tuple[float, int] | None = None,
+        df_override: dict[str, int] | None = None,
+        leaf_fn=None, coord: bool = False,
+    ) -> DataFrame:
+        """Score one spec on every shard through _run_shards, then the
+        global merge (TakeOrderedAndProject: score desc, doc_id asc).
+        `leaf_fn`/`coord` plug a non-BM25 similarity into the same
+        kernels (see _score_spec and _search_similarity)."""
         # FieldValueQuery clauses match docs in shards no query term
         # touches — those shards must still reach the scoring stage
         all_shards = spec["kind"] == "tree" and _tree_has_field_exists(
             spec["tree"]
         )
-        m = self._matched(terms)
-        if not _spec_needs_positions(spec):
-            m = m.drop("pos_enc", "pay_enc")  # prune the heaviest columns pre-shuffle
-        elif not _spec_needs_payloads(spec):
-            m = m.drop("pay_enc")  # positions needed; payloads only for paycheck
-        matched, norms_side = self._cogroup_inputs(m, all_shards)
-
         caches = dict(self._caches)
-        default_field = self._default_field
-        codec = self._codec
         max_doc = self.max_doc
         use_prune = _prune_eligible(spec, k, prune)
         prune_min = self.prune_min
-        offsets = dict(self._doc_offsets)
+        ov = df_override or {}
 
-        def score_group(left: pd.DataFrame, nr: pd.DataFrame) -> pd.DataFrame:
-            if len(nr) == 0 or (len(left) == 0 and not all_shards):
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"),
-                     "score": pd.Series(dtype="float32")}
-                )
-            decoded = _decode_shard(left, nr, default_field, codec)
-            ov = df_override or {}
+        def kernel(left, decoded, deleted, off):
             idfs = {t: bm25.idf(ov.get(t, d), max_doc)
                     for t, d in decoded[3].items()}
-            off = offsets.get(int(nr["shard"].iloc[0]), 0)
-            del_local = _local_deleted(nr, off)
             # the cursor's after_doc is GLOBAL; kernel docIDs are
-            # generation-local (off added below), so shift the cursor
+            # generation-local (the seam adds off back)
             cur_local = (
                 None if cursor is None else (cursor[0], cursor[1] - off)
             )
-            out = _score_spec(
-                left, decoded, spec, idfs, caches, k, use_prune, del_local,
-                prune_min, cursor=cur_local,
+            return _score_spec(
+                left, decoded, spec, idfs, caches, k, use_prune, deleted,
+                prune_min, cursor=cur_local, leaf_fn=leaf_fn, coord=coord,
             )
-            if off:
-                out["doc_id"] = out["doc_id"] + off
-            return out
 
-        per_shard = (
-            matched.groupBy("shard")
-            .cogroup(norms_side.groupBy("shard"))
-            .applyInPandas(score_group, "doc_id long, score float")
+        per_shard = self._run_shards(
+            sorted(set(spec["terms"])), [spec], kernel,
+            "doc_id long, score float", all_shards,
         )
         ordered = per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
         return ordered if k is None else ordered.limit(k)
@@ -2532,64 +2664,37 @@ class IndexSearcher:
         only sees live docs)."""
         if max_docs_per_shard <= 0:
             raise ValueError("max_docs_per_shard must be > 0")
-        q = rewrite(query)
-        spec = self._spec(q)
+        spec = self._spec(rewrite(query))
         kind = spec["kind"]
-        if kind == "term":
-            clause_terms = list(spec["terms"])
-        elif kind == "and":
-            clause_terms = list(spec["must"])
-        elif kind == "or":
-            clause_terms = list(spec["terms"])
-        else:
+        if kind not in ("term", "and", "or"):
             raise ValueError(
                 "early-terminated collection supports term/and/or queries"
             )
+        clause_terms = list(spec["terms"])  # == must for "and"
         msm = int(spec.get("min_should_match", 1)) if kind == "or" else 1
-        terms = sorted(set(clause_terms))
-        matched, norms_side = self._cogroup_inputs(
-            self._matched(terms).drop(
-                *( ["pos_enc", "pay_enc"] if "pos_enc" in self._postings.columns else [])
-            )
-        )
         caches = dict(self._caches)
-        default_field = self._default_field
-        codec = self._codec
         max_doc = self.max_doc
-        offsets = dict(self._doc_offsets)
         budget = int(max_docs_per_shard)
 
-        def score_group(left: pd.DataFrame, nr: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float32"),
-                 "shard": pd.Series(dtype="int32"),
-                 "n_collected": pd.Series(dtype="int64"),
-                 "n_scanned": pd.Series(dtype="int64")}
-            )
-            if len(left) == 0 or len(nr) == 0:
-                return empty
-            decoded = _decode_shard(left, nr, default_field, codec)
+        def kernel(left, decoded, deleted, off):
             base, norms_map, lt, dfs, _ = decoded
             idfs = {t: bm25.idf(d, max_doc) for t, d in dfs.items()}
-            shard = int(nr["shard"].iloc[0])
-            off = offsets.get(shard, 0)
-            deleted = _local_deleted(nr, off)
+            shard = int(left["shard"].iloc[0])
             # match set in docID order (the collect order of the
             # reference's leaf walk)
             if kind == "term":
                 t = clause_terms[0]
                 if t not in lt:
-                    return empty
+                    return None
                 docs = lt.full(t)[0]
             elif kind == "and":
                 if any(t not in lt for t in clause_terms):
-                    return empty
+                    return None
                 docs, _src = _leapfrog(lt, clause_terms, False)
             else:
                 present = [t for t in clause_terms if t in lt]
                 if len(present) < msm:
-                    return empty
+                    return None
                 docs = reduce(np.union1d, [lt.full(t)[0] for t in present])
                 if msm > 1:
                     # MinShouldMatchSumScorer membership: the delegate
@@ -2602,7 +2707,7 @@ class IndexSearcher:
                     docs = docs[cnt >= msm]
             docs = _alive(docs, deleted)
             if len(docs) == 0:
-                return empty
+                return None
             truncated = len(docs) > budget
             cut = docs[:budget]
             n_collected = len(cut)
@@ -2628,21 +2733,17 @@ class IndexSearcher:
                 )
                 acc64[hit] += s.astype(np.float64)
             return pd.DataFrame(
-                {"doc_id": cut + off,
+                {"doc_id": cut,
                  "score": acc64.astype(np.float32),
                  "shard": np.full(len(cut), shard, np.int32),
                  "n_collected": np.full(len(cut), n_collected, np.int64),
                  "n_scanned": np.full(len(cut), n_scanned, np.int64)}
             )
 
-        return (
-            matched.groupBy("shard")
-            .cogroup(norms_side.groupBy("shard"))
-            .applyInPandas(
-                score_group,
-                "doc_id long, score float, shard int, "
-                "n_collected long, n_scanned long",
-            )
+        return self._run_shards(
+            sorted(set(clause_terms)), [spec], kernel,
+            "doc_id long, score float, shard int, "
+            "n_collected long, n_scanned long",
         )
 
     def search_early_terminated(
@@ -2665,10 +2766,8 @@ class IndexSearcher:
         Term / BooleanAnd / BooleanOr over the default field; unlike
         BM25, the coord factor multiplies boolean sums
         (ClassicSimilarity.coord = overlap/maxOverlap)."""
-        from lucene_solr_spark.functions import tfidf
-
-        return self._search_tfidf_family(
-            query, k, tfidf.score_term, "search_classic"
+        return self._search_similarity(
+            query, k, self._classic_similarity(), "search_classic"
         )
 
     def search_sweetspot(
@@ -2690,17 +2789,10 @@ class IndexSearcher:
         in tests/test_sweetspot.py). Norm decode derives the quantized
         doc length from the stored byte — see functions/sweetspot.py
         for the documented deviation."""
-        from lucene_solr_spark.functions import sweetspot
-
-        table = sweetspot.sweet_norm_decode_table(ln_min, ln_max, steepness)
-        tb, tm = float(tf_base), float(tf_min)
-
-        def score_fn(tf_arr, nb, value):
-            return sweetspot.score_term_sweet(tf_arr, nb, value, table, tb, tm)
-
-        return self._search_tfidf_family(
-            query, k, score_fn, "search_sweetspot"
+        sim = self._sweetspot_similarity(
+            ln_min, ln_max, steepness, tf_base, tf_min
         )
+        return self._search_similarity(query, k, sim, "search_sweetspot")
 
     def search_term_automaton(
         self, query, k: int | None = 10
@@ -2749,28 +2841,12 @@ class IndexSearcher:
                 idf_sum + bm25.idf(dfs.get(t, 0), self.max_doc)
             )
         tid_of = {t: i for i, t in enumerate(terms) if t is not None}
-        matched, norms_side = self._cogroup_inputs(
-            self._matched(real).drop("pay_enc")
-        )
-        offsets = dict(self._doc_offsets)
-        default_field = self._default_field
-        codec = self._codec
         caches = dict(self._caches)
         accept_set = set(accepts)
         step_map = dict(step)
 
-        def score_group(left: pd.DataFrame, nr: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float32")}
-            )
-            if len(left) == 0 or len(nr) == 0:
-                return empty
-            base, norms_map, lt, _d, _ = _decode_shard(
-                left, nr, default_field, codec
-            )
-            off = offsets.get(int(left["shard"].iloc[0]), 0)
-            del_local = _local_deleted(nr, off)
+        def kernel(left, decoded, del_local, off):
+            base, norms_map, lt, _d, _ = decoded
             doc_parts, pos_parts, tid_parts = [], [], []
             for t in sorted(set(real)):
                 if t not in lt:
@@ -2788,7 +2864,7 @@ class IndexSearcher:
                     np.full(int(tf.sum()), tid_of[t], np.int64)
                 )
             if not doc_parts:
-                return empty
+                return None
             ev_doc = np.concatenate(doc_parts)
             ev_pos = np.concatenate(pos_parts)
             ev_tid = np.concatenate(tid_parts)
@@ -2838,139 +2914,25 @@ class IndexSearcher:
                     out_docs.append(udocs[di])
                     out_freqs.append(freq)
             if not out_docs:
-                return empty
+                return None
             docs = np.asarray(out_docs, np.int64)
             freqs = np.asarray(out_freqs, np.int64)
             if del_local is not None and len(del_local):
                 m = ~np.isin(docs, del_local)
                 docs, freqs = docs[m], freqs[m]
             if len(docs) == 0:
-                return empty
+                return None
             nrm, cch = _nc(real[0], norms_map, caches)
             scores = bm25.score_term(
                 freqs, nrm[docs - base], idf_sum, cch
             ).astype(np.float32)
             docs, scores = _topk_arrays(docs, scores, k)
-            out = pd.DataFrame({"doc_id": docs, "score": scores})
-            if off:
-                out["doc_id"] = out["doc_id"] + off
-            return out
+            return pd.DataFrame({"doc_id": docs, "score": scores})
 
-        per_shard = (
-            matched.groupBy("shard")
-            .cogroup(norms_side.groupBy("shard"))
-            .applyInPandas(score_group, "doc_id long, score float")
-        )
-        ordered = per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        return ordered if k is None else ordered.limit(k)
-
-    def _search_tfidf_family(
-        self, query: Query, k: int | None, score_fn, name: str
-    ) -> DataFrame:
-        """Shared DefaultSimilarity-family execution (classic TF-IDF
-        and SweetSpot): identical idf/queryNorm/coord float chain,
-        per-term leaf scoring swapped via `score_fn(tf, norm_bytes,
-        weightValue) -> f32 scores`."""
-        from lucene_solr_spark.functions import tfidf
-
-        q = rewrite(query)
-        spec = self._spec(q)
-        kind = spec["kind"]
-        if kind == "term":
-            clause_terms = list(spec["terms"])
-        elif kind == "and":
-            clause_terms = list(spec["must"])
-        elif kind == "or":
-            clause_terms = list(spec["terms"])
-        else:
-            raise ValueError(
-                f"{name} supports term/and/or queries"
-            )
-        if any(FIELD_SEP in t for t in clause_terms):
-            raise ValueError(
-                f"{name} supports the default field only"
-            )
-        dfs = self.term_dfs(sorted(set(clause_terms)))
-        idfs = [tfidf.idf(dfs.get(t, 0), self.max_doc) for t in clause_terms]
-        values = tfidf.term_values(idfs)
-        vmap = {t: v for t, v in zip(clause_terms, values)}
-        maxcoord = len(clause_terms)
-        matched, norms_side = self._cogroup_inputs(
-            self._matched(sorted(set(clause_terms)))
-        )
-        offsets = dict(self._doc_offsets)
-        default_field = self._default_field
-        codec = self._codec
-
-        def score_group(left: pd.DataFrame, nr: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float32")}
-            )
-            if len(left) == 0 or len(nr) == 0:
-                return empty
-            base, norms_map, lt, _d, _ = _decode_shard(
-                left, nr, default_field, codec
-            )
-            nrm = norms_map[""]
-            off = offsets.get(int(left["shard"].iloc[0]), 0)
-            del_local = _local_deleted(nr, off)
-            if kind == "term":
-                t = clause_terms[0]
-                if t not in lt:
-                    return empty
-                d, tf_arr = lt.full(t)
-                docs = d
-                total = score_fn(tf_arr, nrm[d - base], vmap[t])
-            elif kind == "and":
-                if any(t not in lt for t in clause_terms):
-                    return empty
-                docs = reduce(
-                    lambda a, b: a[np.isin(a, b, assume_unique=True)],
-                    [lt.full(t)[0] for t in clause_terms],
-                )
-                if len(docs) == 0:
-                    return empty
-                acc64 = np.zeros(len(docs), np.float64)
-                for t in clause_terms:
-                    d, tf_arr = lt.full(t)
-                    idx = np.searchsorted(d, docs)
-                    s = score_fn(
-                        tf_arr[idx], nrm[docs - base], vmap[t]
-                    )
-                    acc64 += s.astype(np.float64)
-                # coord(n, n) == 1 for a pure conjunction
-                total = acc64.astype(np.float32)
-            else:  # or
-                present = [t for t in clause_terms if t in lt]
-                if not present:
-                    return empty
-                docs = reduce(np.union1d, [lt.full(t)[0] for t in present])
-                acc64 = np.zeros(len(docs), np.float64)
-                nmatch = np.zeros(len(docs), np.int32)
-                for t in present:
-                    d, tf_arr = lt.full(t)
-                    s = score_fn(tf_arr, nrm[d - base], vmap[t])
-                    pos = np.searchsorted(docs, d)
-                    acc64[pos] += s.astype(np.float64)
-                    nmatch[pos] += 1
-                coords = nmatch.astype(np.float32) / np.float32(maxcoord)
-                total = (acc64.astype(np.float32) * coords).astype(np.float32)
-            if del_local is not None and len(docs):
-                m = ~np.isin(docs, del_local)
-                docs, total = docs[m], total[m]
-            docs, total = _topk_arrays(docs, total, k)
-            out = pd.DataFrame(
-                {"doc_id": docs, "score": total.astype(np.float32)}
-            )
-            if off:
-                out["doc_id"] = out["doc_id"] + off
-            return out
-
-        per_shard = (
-            matched.groupBy("shard")
-            .cogroup(norms_side.groupBy("shard"))
-            .applyInPandas(score_group, "doc_id long, score float")
+        # the automaton walks positions; payloads are never read
+        per_shard = self._run_shards(
+            real, [{"kind": "automaton", "terms": real}], kernel,
+            "doc_id long, score float",
         )
         ordered = per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
         return ordered if k is None else ordered.limit(k)
@@ -2990,8 +2952,8 @@ class IndexSearcher:
         Term / BooleanAnd / BooleanOr over the default field."""
         if model not in ("dirichlet", "jm"):
             raise ValueError("model must be 'dirichlet' or 'jm'")
-        make_leaf, _ = self._simbase_conf(model, mu=mu, lam=lam)
-        return self._search_simbase(query, k, make_leaf, "search_lm")
+        sim = self._simbase_conf(model, mu=mu, lam=lam)
+        return self._search_similarity(query, k, sim, "search_lm")
 
     def search_dfr(
         self, query: Query, k: int | None = 10, c: float = 1.0,
@@ -3007,11 +2969,11 @@ class IndexSearcher:
         functions/dfr.py for the per-component float discipline.
         Supports Term / BooleanAnd / BooleanOr over the default
         field."""
-        make_leaf, _ = self._simbase_conf(
+        sim = self._simbase_conf(
             "dfr", c=c, basic_model=basic_model, after_effect=after_effect,
             normalization=normalization, mu_h3=mu, z=z,
         )
-        return self._search_simbase(query, k, make_leaf, "search_dfr")
+        return self._search_similarity(query, k, sim, "search_dfr")
 
     def search_ib(
         self, query: Query, k: int | None = 10, c: float = 1.0,
@@ -3024,11 +2986,11 @@ class IndexSearcher:
         Defaults = SPL-DF-H2, bitwise the pre-matrix behavior.
         Supports Term / BooleanAnd / BooleanOr over the default
         field."""
-        make_leaf, _ = self._simbase_conf(
+        sim = self._simbase_conf(
             "ib", c=c, distribution=distribution, lam_kind=lam_kind,
             normalization=normalization, mu_h3=mu, z=z,
         )
-        return self._search_simbase(query, k, make_leaf, "search_ib")
+        return self._search_similarity(query, k, sim, "search_ib")
 
     def search_multi_sim(
         self, query: Query, k: int | None = 10,
@@ -3042,107 +3004,33 @@ class IndexSearcher:
         is a kwargs dict for _simbase_conf (e.g. {"model": "jm",
         "lam": 0.2}, {"model": "dfr", "basic_model": "g"}). Supports
         Term / BooleanAnd / BooleanOr over the default field."""
-        confs = [self._simbase_conf(**m)[0] for m in models]
+        sims = [self._simbase_conf(**m) for m in models]
 
-        def make_leaf(term, df, cf):
-            subs = [c(term, df, cf) for c in confs]
+        def weigh(clause_terms, stats):
+            subs = [sm.weigh(clause_terms, stats) for sm in sims]
 
-            def leaf(tf, nb, boost=1.0):
+            def leaf(t, tf, nb, boost=1.0):
                 acc = None
-                for s in subs:
-                    v = s(tf, nb, boost)
+                for sub in subs:
+                    v = sub[t][0](tf, nb, boost)
                     acc = v if acc is None else (acc + v).astype(np.float32)
                 return acc
 
-            return leaf
+            return {t: (partial(leaf, t), {}) for t in clause_terms}
 
-        return self._search_simbase(query, k, make_leaf, "search_multi_sim")
-
-    def _search_simbase_tree(
-        self, spec: dict, k: int | None, make_leaf, name: str,
-    ) -> DataFrame:
-        """Nested-tree execution for the SimilarityBase family: the
-        SAME candidate-threaded _eval_tree kernel as BM25 trees
-        (BooleanWeight composition, boosts folding down the tree into
-        stats.getTotalBoost()), with the per-term leaf scorer swapped
-        via leaf_fn. Phrase leaves stay BM25-only (SimilarityBase
-        phrase stats need MultiStats averaging — out of scope) and
-        raise loudly."""
-        tree = spec["tree"]
-        terms = sorted(set(spec["terms"]))
-        if any(FIELD_SEP in t for t in terms):
-            raise ValueError(f"{name} supports the default field only")
-        if _tree_has_phrase(tree):
-            raise ValueError(
-                "phrase leaves are BM25-only (pluggable-similarity "
-                "trees support term/const/dismax/bool nodes)"
-            )
-        stat_rows = (
-            self._term_stats.where(F.col("term").isin(terms))
-            .select("term", "df", "cf")
-            .collect()
-        )
-        stats = {r.term: (int(r.df), int(r.cf)) for r in stat_rows}
-        leaves = {t: make_leaf(t, *stats.get(t, (0, 0))) for t in terms}
-
-        def leaf_fn(t, tf, nb, boost):
-            return leaves[t](tf, nb, float(boost))
-
-        matched, norms_side = self._cogroup_inputs(
-            self._matched(terms).drop("pos_enc", "pay_enc")
-        )
-        offsets = dict(self._doc_offsets)
-        default_field = self._default_field
-        codec = self._codec
-        caches = dict(self._caches)
-
-        def score_group(left: pd.DataFrame, nr: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float32")}
-            )
-            if len(left) == 0 or len(nr) == 0:
-                return empty
-            base, norms_map, lt, _d, _ = _decode_shard(
-                left, nr, default_field, codec
-            )
-            off = offsets.get(int(left["shard"].iloc[0]), 0)
-            del_local = _local_deleted(nr, off)
-            d, sc = _eval_tree(
-                tree, lt, base, norms_map, {}, caches, prune=True,
-                leaf_fn=leaf_fn,
-            )
-            if len(d) == 0:
-                return empty
-            if del_local is not None:
-                m = ~np.isin(d, del_local)
-                d, sc = d[m], sc[m]
-            d, sc = _topk_arrays(d, sc, k)
-            out = pd.DataFrame(
-                {"doc_id": d, "score": sc.astype(np.float32)}
-            )
-            if off:
-                out["doc_id"] = out["doc_id"] + off
-            return out
-
-        per_shard = (
-            matched.groupBy("shard")
-            .cogroup(norms_side.groupBy("shard"))
-            .applyInPandas(score_group, "doc_id long, score float")
-        )
-        ordered = per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        return ordered if k is None else ordered.limit(k)
+        sim = sims[0]._replace(weigh=weigh)
+        return self._search_similarity(query, k, sim, "search_multi_sim")
 
     def _simbase_conf(
         self, model: str, mu: float = 2000.0, lam: float = 0.1,
         c: float = 1.0, basic_model: str = "in", after_effect: str = "l",
         normalization: str = "h2", distribution: str = "spl",
         lam_kind: str = "df", mu_h3: float = 800.0, z: float = 0.30,
-    ):
-        """(make_leaf, detail) pair for a SimilarityBase flavor:
-        make_leaf(term, df, cf) -> f32 leaf scorer; detail(term, df,
-        cf) -> the Explanation stats the reference's
-        SimilarityBase.explain surfaces (BasicStats fill)."""
+    ) -> _Similarity:
+        """_Similarity of a SimilarityBase flavor, from make_leaf(term,
+        df, cf) -> f32 leaf scorer and detail(term, df, cf) -> the
+        Explanation stats the reference's SimilarityBase.explain
+        surfaces (BasicStats fill)."""
         from lucene_solr_spark.functions import dfr, lm
 
         field_tokens = int(self._field_stats[self._default_field])
@@ -3171,7 +3059,7 @@ class IndexSearcher:
                 )
                 return d
 
-            return make_leaf, detail
+            return _simbase_similarity(make_leaf, detail, model)
         avg = dfr.avg_field_length(field_tokens, n)
         if model == "dfr":
             def make_leaf(term, df, cf):
@@ -3189,7 +3077,7 @@ class IndexSearcher:
                         "after_effect": after_effect.upper(),
                         "normalization": normalization.upper()}
 
-            return make_leaf, detail
+            return _simbase_similarity(make_leaf, detail, model)
         if model == "ib":
             def make_leaf(term, df, cf):
                 return lambda tf, nb, boost=1.0: dfr.score_ib(
@@ -3209,8 +3097,106 @@ class IndexSearcher:
                         "lambda": lam_kind.upper(),
                         "normalization": normalization.upper()}
 
-            return make_leaf, detail
+            return _simbase_similarity(make_leaf, detail, model)
         raise ValueError(f"unknown SimilarityBase flavor {model!r}")
+
+    def _classic_similarity(self) -> _Similarity:
+        from lucene_solr_spark.functions import tfidf
+
+        return self._tfidf_similarity(
+            tfidf.score_term, tfidf.DECODE, "classic",
+            "classic TF-IDF: sqrt(tf) * weightValue * decodeNorm "
+            "per term, f64 sum, coord = overlap/maxOverlap on "
+            "disjunctions (ClassicSimilarity)",
+        )
+
+    def _sweetspot_similarity(
+        self, ln_min: int, ln_max: int, steepness: float, tf_base: float,
+        tf_min: float,
+    ) -> _Similarity:
+        from lucene_solr_spark.functions import sweetspot
+
+        table = sweetspot.sweet_norm_decode_table(ln_min, ln_max, steepness)
+        tb, tm = float(tf_base), float(tf_min)
+
+        def score_fn(tf_arr, nb, value):
+            return sweetspot.score_term_sweet(tf_arr, nb, value, table, tb, tm)
+
+        return self._tfidf_similarity(
+            score_fn, table, "sweetspot",
+            "SweetSpotSimilarity: baselineTf(tf) * weightValue * "
+            "plateau-norm decode per term, f64 sum, coord on "
+            "disjunctions (lucene/misc SweetSpotSimilarity)",
+        )
+
+    def _tfidf_similarity(
+        self, score_fn, decode_table, name: str, description: str
+    ) -> _Similarity:
+        """DefaultSimilarity family (classic TF-IDF, SweetSpot): the
+        shared idf / queryNorm chain over the clause terms in clause
+        order, the leaf swapped via score_fn(tf, norm_bytes,
+        weightValue) -> f32, coord on disjunctions."""
+        from lucene_solr_spark.functions import tfidf
+
+        n = self.max_doc
+
+        def weigh(clause_terms, stats):
+            idfs = [tfidf.idf(stats[t][0], n) for t in clause_terms]
+            out = {}
+            for t, i, v in zip(clause_terms, idfs, tfidf.term_values(idfs)):
+                out[t] = (
+                    lambda tf, nb, boost=1.0, v=v: score_fn(tf, nb, v),
+                    {"df": stats[t][0], "idf": float(i),
+                     "weight_value": float(v)},
+                )
+            return out
+
+        return _Similarity(
+            weigh, coord=True, trees=False,
+            norm=("decoded_norm", decode_table), head={"similarity": name},
+            description=description,
+        )
+
+    def _sim_weights(self, query: Query, sim: _Similarity, name: str,
+                     trees: bool):
+        """Driver half of a similarity query: the spec, checked against
+        the kinds the similarity accepts, and its per-term (leaf,
+        explain stats) from the TermStates cache (BasicStats fill at
+        createWeight time)."""
+        spec = self._spec(rewrite(query))
+        kind = spec["kind"]
+        if kind not in ("term", "and", "or") and not (
+            trees and kind == "tree"
+        ):
+            raise ValueError(
+                f"{name} supports term/and/or and nested boolean queries"
+                if trees else f"{name} supports term/and/or queries"
+            )
+        terms = list(spec["terms"])  # clause order (== must for "and")
+        if any(FIELD_SEP in t for t in terms):
+            raise ValueError(f"{name} supports the default field only")
+        if kind == "tree" and _tree_has_phrase(spec["tree"]):
+            # SimilarityBase phrase stats need MultiStats averaging
+            raise ValueError(
+                "phrase leaves are BM25-only (pluggable-similarity "
+                "trees support term/const/dismax/bool nodes)"
+            )
+        return spec, sim.weigh(terms, self._term_states(terms))
+
+    def _search_similarity(
+        self, query: Query, k: int | None, sim: _Similarity, name: str
+    ) -> DataFrame:
+        """search() under a non-BM25 similarity: the same spec, seam and
+        kernels (leapfrog AND, min_should_match, liveDocs, nested
+        trees), with the similarity's leaf scorer and coord policy
+        plugged into _score_spec."""
+        spec, weights = self._sim_weights(query, sim, name, sim.trees)
+        leaves = {t: w[0] for t, w in weights.items()}
+
+        def leaf_fn(t, tf, nb, boost):
+            return leaves[t](tf, nb, float(boost))
+
+        return self._search_spec(spec, k, leaf_fn=leaf_fn, coord=sim.coord)
 
     def explain_classic(self, query: Query, doc_id: int) -> dict:
         """Classic TF-IDF explain (TFIDFSimilarity.explainScore /
@@ -3220,13 +3206,8 @@ class IndexSearcher:
         through the SAME float chain as search_classic (f64 sum of f32
         leaves, coord multiply, one f32 cast) — bitwise the search
         score."""
-        from lucene_solr_spark.functions import tfidf
-
-        return self._explain_tfidf_family(
-            query, doc_id, tfidf.score_term, tfidf.DECODE, "classic",
-            "classic TF-IDF: sqrt(tf) * weightValue * decodeNorm "
-            "per term, f64 sum, coord = overlap/maxOverlap on "
-            "disjunctions (ClassicSimilarity)",
+        return self._explain_similarity(
+            query, doc_id, self._classic_similarity(), "explain_classic"
         )
 
     def explain_sweetspot(
@@ -3243,128 +3224,12 @@ class IndexSearcher:
         with baselineTf leaves and the plateau-norm decode table;
         root score recomposes search_sweetspot bitwise (pinned in
         tests/test_sweetspot.py)."""
-        from lucene_solr_spark.functions import sweetspot
-
-        table = sweetspot.sweet_norm_decode_table(ln_min, ln_max, steepness)
-        tb, tm = float(tf_base), float(tf_min)
-
-        def score_fn(tf_arr, nb, value):
-            return sweetspot.score_term_sweet(tf_arr, nb, value, table, tb, tm)
-
-        return self._explain_tfidf_family(
-            query, doc_id, score_fn, table, "sweetspot",
-            "SweetSpotSimilarity: baselineTf(tf) * weightValue * "
-            "plateau-norm decode per term, f64 sum, coord on "
-            "disjunctions (lucene/misc SweetSpotSimilarity)",
+        sim = self._sweetspot_similarity(
+            ln_min, ln_max, steepness, tf_base, tf_min
         )
-
-    def _explain_tfidf_family(
-        self, query: Query, doc_id: int, score_fn, decode_table,
-        sim_name: str, description: str,
-    ) -> dict:
-        from lucene_solr_spark.functions import tfidf
-
-        q = rewrite(query)
-        spec = self._spec(q)
-        kind = spec["kind"]
-        if kind == "term":
-            clause_terms = list(spec["terms"])
-        elif kind == "and":
-            clause_terms = list(spec["must"])
-        elif kind == "or":
-            clause_terms = list(spec["terms"])
-        else:
-            raise ValueError(
-                f"explain_{sim_name} supports term/and/or queries"
-            )
-        if any(FIELD_SEP in t for t in clause_terms):
-            raise ValueError(
-                f"explain_{sim_name} supports the default field only"
-            )
-        no = {"doc_id": int(doc_id), "match": False, "score": 0.0,
-              "similarity": sim_name, "terms": []}
-        dmr = self.doc_map().where(F.col("doc_id") == int(doc_id)).collect()
-        if not dmr:
-            return {**no, "description": "no such doc"}
-        shard = int(dmr[0].shard)
-        off = int(self._doc_offsets.get(shard, 0))
-        local = int(doc_id) - off
-        if self._has_tombstones():
-            if (
-                self.deleted_df()
-                .where(F.col("doc_id") == int(doc_id))
-                .count()
-            ):
-                return {**no, "description": "doc is deleted (liveDocs)"}
-        dfs = self.term_dfs(sorted(set(clause_terms)))
-        idfs = [
-            tfidf.idf(dfs.get(t, 0), self.max_doc) for t in clause_terms
-        ]
-        values = tfidf.term_values(idfs)
-        vmap = {t: v for t, v in zip(clause_terms, values)}
-        imap = {t: i for t, i in zip(clause_terms, idfs)}
-        maxcoord = len(clause_terms)
-        pdf = (
-            self._matched(sorted(set(clause_terms)))
-            .where(F.col("shard") == shard)
-            .drop("pos_enc", "pay_enc")
-            .toPandas()
+        return self._explain_similarity(
+            query, doc_id, sim, "explain_sweetspot"
         )
-        if len(pdf) == 0:
-            return {**no, "description": "no query term in this shard"}
-        nr = (
-            self._norms_for_query(None)
-            .where(F.col("shard") == shard)
-            .toPandas()
-        )
-        base, norms_map, lt, _dfs, _ = _decode_shard(
-            pdf, nr, self._default_field, self._codec
-        )
-        nrm = norms_map[""]
-        nb = np.array([nrm[local - base]], np.uint8)
-        nodes, acc = [], np.float64(0.0)
-        matched_terms = 0
-        for t in clause_terms:
-            tf = 0
-            if t in lt:
-                d, tf_arr = lt.full(t)
-                p = int(np.searchsorted(d, local))
-                if p < len(d) and d[p] == local:
-                    tf = int(tf_arr[p])
-            node = {"term": t, "tf": tf, "df": dfs.get(t, 0),
-                    "idf": float(imap[t]),
-                    "weight_value": float(vmap[t]),
-                    "norm_byte": int(nb[0]),
-                    "decoded_norm": float(decode_table[nb[0]])}
-            if tf > 0:
-                s = score_fn(np.array([tf], np.float32), nb, vmap[t])
-                node["leaf_score"] = float(s[0])
-                acc += np.float64(s[0])
-                matched_terms += 1
-            else:
-                node["leaf_score"] = 0.0
-            nodes.append(node)
-        hit = (
-            matched_terms == len(clause_terms)
-            if kind == "and" else matched_terms > 0
-        )
-        if kind == "or":
-            coord = np.float32(np.float32(matched_terms)
-                               / np.float32(maxcoord))
-            total = np.float32(np.float32(acc) * coord)
-        else:
-            coord = np.float32(1.0)
-            total = np.float32(acc)
-        return {
-            "doc_id": int(doc_id),
-            "match": bool(hit),
-            "score": float(total) if hit else 0.0,
-            "similarity": sim_name,
-            "kind": kind,
-            "coord": float(coord),
-            "terms": nodes,
-            "description": description,
-        }
 
     def explain_simbase(
         self, query: Query, doc_id: int, model: str = "dirichlet",
@@ -3381,212 +3246,64 @@ class IndexSearcher:
         IB matrix points exactly like search_dfr/search_ib
         (basic_model/after_effect/normalization/distribution/lam_kind/
         mu_h3/z)."""
-        from lucene_solr_spark.functions.lm import DOCLEN_TABLE
+        sim = self._simbase_conf(model, mu, lam, c, **matrix)
+        return self._explain_similarity(query, doc_id, sim, "explain_simbase")
 
-        make_leaf, detail = self._simbase_conf(model, mu, lam, c, **matrix)
-        q = rewrite(query)
-        spec = self._spec(q)
+    def _explain_similarity(
+        self, query: Query, doc_id: int, sim: _Similarity, name: str
+    ) -> dict:
+        """Flat term/and/or explain under a non-BM25 similarity: per-term
+        tf, norm byte + its decode, the similarity's stats and the leaf
+        score; the root recomposes _score_spec's chain (f64 sum of f32
+        leaves, one f32 cast, coord on disjunctions, min_should_match),
+        so `score` is bitwise the search score."""
+        spec, weights = self._sim_weights(query, sim, name, trees=False)
         kind = spec["kind"]
-        if kind == "term":
-            clause_terms = list(spec["terms"])
-        elif kind == "and":
-            clause_terms = list(spec["must"])
-        elif kind == "or":
-            clause_terms = list(spec["terms"])
-        else:
-            raise ValueError("explain_simbase supports term/and/or queries")
-        if any(FIELD_SEP in t for t in clause_terms):
-            raise ValueError(
-                "explain_simbase supports the default field only"
-            )
+        clause_terms = list(spec["terms"])
         no = {"doc_id": int(doc_id), "match": False, "score": 0.0,
-              "model": model, "terms": []}
-        dmr = self.doc_map().where(F.col("doc_id") == int(doc_id)).collect()
-        if not dmr:
-            return {**no, "description": "no such doc"}
-        shard = int(dmr[0].shard)
-        off = int(self._doc_offsets.get(shard, 0))
-        local = int(doc_id) - off
-        if self._has_tombstones():
-            if (
-                self.deleted_df()
-                .where(F.col("doc_id") == int(doc_id))
-                .count()
-            ):
-                return {**no, "description": "doc is deleted (liveDocs)"}
-        stat_rows = (
-            self._term_stats.where(
-                F.col("term").isin(sorted(set(clause_terms)))
-            )
-            .select("term", "df", "cf")
-            .collect()
-        )
-        stats = {r.term: (int(r.df), int(r.cf)) for r in stat_rows}
-        pdf = (
-            self._matched(sorted(set(clause_terms)))
-            .where(F.col("shard") == shard)
-            .drop("pos_enc", "pay_enc")
-            .toPandas()
-        )
-        if len(pdf) == 0:
+              **sim.head, "terms": []}
+        at = self._locate(doc_id)
+        if isinstance(at, str):
+            return {**no, "description": at}
+        _dm, shard, local = at
+        base, norms_map, lt, _dfs, _ = self._decode_doc_shard(spec, shard)
+        if not lt.rows:
             return {**no, "description": "no query term in this shard"}
-        nr = (
-            self._norms_for_query(None)
-            .where(F.col("shard") == shard)
-            .toPandas()
-        )
-        base, norms_map, lt, _dfs, _ = _decode_shard(
-            pdf, nr, self._default_field, self._codec
-        )
-        nrm = norms_map[""]
-        nb = np.array([nrm[local - base]], np.uint8)
-        nodes, acc = [], np.float64(0.0)
-        matched_terms = 0
+        nb = np.array([norms_map[""][local - base]], np.uint8)
+        norm_key, decode = sim.norm
+        nodes, acc, overlap = [], np.float64(0.0), 0
         for t in clause_terms:
-            df, cf = stats.get(t, (0, 0))
-            tf = 0
-            if t in lt:
-                d, tf_arr = lt.full(t)
-                p = int(np.searchsorted(d, local))
-                if p < len(d) and d[p] == local:
-                    tf = int(tf_arr[p])
+            leaf, stats = weights[t]
+            tf = lt.tf_at(t, local)
             node = {"term": t, "tf": tf, "norm_byte": int(nb[0]),
-                    "doc_len": float(DOCLEN_TABLE[nb[0]]),
-                    **detail(t, df, cf)}
+                    norm_key: float(decode[nb[0]]), **stats,
+                    "leaf_score": 0.0}
             if tf > 0:
-                s = make_leaf(t, df, cf)(np.array([tf]), nb)
+                s = leaf(np.array([tf]), nb)
                 node["leaf_score"] = float(s[0])
                 acc += np.float64(s[0])
-                matched_terms += 1
-            else:
-                node["leaf_score"] = 0.0
+                overlap += 1
             nodes.append(node)
-        hit = (
-            matched_terms == len(clause_terms)
-            if kind == "and" else matched_terms > 0
-        )
+        if kind == "and":
+            hit = overlap == len(clause_terms)
+        else:
+            hit = overlap >= max(int(spec.get("min_should_match", 1)), 1)
+        coord = np.float32(1.0)
+        if sim.coord and kind == "or":
+            coord = np.float32(
+                np.float32(overlap) / np.float32(len(clause_terms))
+            )
+        total = np.float32(np.float32(acc) * coord)
         return {
             "doc_id": int(doc_id),
             "match": bool(hit),
-            "score": float(np.float32(acc)) if hit else 0.0,
-            "model": model,
+            "score": float(total) if hit else 0.0,
+            **sim.head,
             "kind": kind,
+            "coord": float(coord),
             "terms": nodes,
-            "description": (
-                "SimilarityBase: f64 sum of per-term f32 leaves, one "
-                "f32 cast (coord disabled)"
-            ),
+            "description": sim.description,
         }
-
-    def _search_simbase(
-        self, query: Query, k: int | None, make_leaf, name: str,
-    ) -> DataFrame:
-        """Shared kernel for the SimilarityBase family (LM/DFR/IB):
-        per-term f32 leaf scorers built on the driver from dictionary
-        stats (BasicStats fill at createWeight time), f64-accumulated
-        boolean sums, one f32 cast — coord disabled
-        (SimilarityBase similarities leave Similarity.coord() at 1)."""
-        q = rewrite(query)
-        spec = self._spec(q)
-        kind = spec["kind"]
-        if kind == "tree":
-            return self._search_simbase_tree(spec, k, make_leaf, name)
-        if kind == "term":
-            clause_terms = list(spec["terms"])
-        elif kind == "and":
-            clause_terms = list(spec["must"])
-        elif kind == "or":
-            clause_terms = list(spec["terms"])
-        else:
-            raise ValueError(
-                f"{name} supports term/and/or and nested boolean queries"
-            )
-        if any(FIELD_SEP in t for t in clause_terms):
-            raise ValueError(f"{name} supports the default field only")
-        stat_rows = (
-            self._term_stats.where(
-                F.col("term").isin(sorted(set(clause_terms)))
-            )
-            .select("term", "df", "cf")
-            .collect()
-        )
-        stats = {r.term: (int(r.df), int(r.cf)) for r in stat_rows}
-        leaves = {
-            t: make_leaf(t, *stats.get(t, (0, 0))) for t in clause_terms
-        }
-        matched, norms_side = self._cogroup_inputs(
-            self._matched(sorted(set(clause_terms)))
-        )
-        offsets = dict(self._doc_offsets)
-        default_field = self._default_field
-        codec = self._codec
-
-        def score_group(left: pd.DataFrame, nr: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float32")}
-            )
-            if len(left) == 0 or len(nr) == 0:
-                return empty
-            base, norms_map, lt, _d, _ = _decode_shard(
-                left, nr, default_field, codec
-            )
-            nrm = norms_map[""]
-            off = offsets.get(int(left["shard"].iloc[0]), 0)
-            del_local = _local_deleted(nr, off)
-            if kind == "term":
-                t = clause_terms[0]
-                if t not in lt:
-                    return empty
-                d, tf_arr = lt.full(t)
-                docs = d
-                total = leaves[t](tf_arr, nrm[d - base])
-            elif kind == "and":
-                if any(t not in lt for t in clause_terms):
-                    return empty
-                docs = reduce(
-                    lambda a, b: a[np.isin(a, b, assume_unique=True)],
-                    [lt.full(t)[0] for t in clause_terms],
-                )
-                if len(docs) == 0:
-                    return empty
-                acc64 = np.zeros(len(docs), np.float64)
-                for t in clause_terms:
-                    d, tf_arr = lt.full(t)
-                    idx = np.searchsorted(d, docs)
-                    s = leaves[t](tf_arr[idx], nrm[docs - base])
-                    acc64 += s.astype(np.float64)
-                total = acc64.astype(np.float32)
-            else:  # or — sum over present clauses, NO coord
-                present = [t for t in clause_terms if t in lt]
-                if not present:
-                    return empty
-                docs = reduce(np.union1d, [lt.full(t)[0] for t in present])
-                acc64 = np.zeros(len(docs), np.float64)
-                for t in present:
-                    d, tf_arr = lt.full(t)
-                    s = leaves[t](tf_arr, nrm[d - base])
-                    pos = np.searchsorted(docs, d)
-                    acc64[pos] += s.astype(np.float64)
-                total = acc64.astype(np.float32)
-            if del_local is not None and len(docs):
-                m = ~np.isin(docs, del_local)
-                docs, total = docs[m], total[m]
-            docs, total = _topk_arrays(docs, total, k)
-            out = pd.DataFrame(
-                {"doc_id": docs, "score": total.astype(np.float32)}
-            )
-            if off:
-                out["doc_id"] = out["doc_id"] + off
-            return out
-
-        per_shard = (
-            matched.groupBy("shard")
-            .cogroup(norms_side.groupBy("shard"))
-            .applyInPandas(score_group, "doc_id long, score float")
-        )
-        ordered = per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        return ordered if k is None else ordered.limit(k)
 
     def search_many(
         self, queries: dict[str, Query], k: int = 10, prune: bool = True
@@ -3603,48 +3320,25 @@ class IndexSearcher:
 
         specs = {qid: self._spec(rewrite(q)) for qid, q in queries.items()}
         all_terms = sorted({t for s in specs.values() for t in s["terms"]})
-        m = self._matched(all_terms)
-        if not any(_spec_needs_positions(s) for s in specs.values()):
-            m = m.drop("pos_enc", "pay_enc")  # prune the heaviest columns pre-shuffle
-        elif not any(_spec_needs_payloads(s) for s in specs.values()):
-            m = m.drop("pay_enc")  # positions needed; payloads only for paycheck
-        matched, norms_side = self._cogroup_inputs(m)
-
         caches = dict(self._caches)
-        default_field = self._default_field
-        codec = self._codec
         max_doc = self.max_doc
         prune_min = self.prune_min
-        offsets = dict(self._doc_offsets)
 
-        def score_group(left: pd.DataFrame, nr: pd.DataFrame) -> pd.DataFrame:
-            if len(left) == 0 or len(nr) == 0:
-                return pd.DataFrame(
-                    {"qid": pd.Series(dtype="object"),
-                     "doc_id": pd.Series(dtype="int64"),
-                     "score": pd.Series(dtype="float32")}
-                )
-            decoded = _decode_shard(left, nr, default_field, codec)
+        def kernel(left, decoded, deleted, off):
             idfs = {t: bm25.idf(d, max_doc) for t, d in decoded[3].items()}
-            off = offsets.get(int(left["shard"].iloc[0]), 0)
-            del_local = _local_deleted(nr, off)
             outs = []
             for qid, spec in specs.items():
-                use_prune = _prune_eligible(spec, k, prune)
                 r = _score_spec(
-                    left, decoded, spec, idfs, caches, k, use_prune, del_local,
-                    prune_min,
+                    left, decoded, spec, idfs, caches, k,
+                    _prune_eligible(spec, k, prune), deleted, prune_min,
                 )
-                if off:
-                    r["doc_id"] = r["doc_id"] + off
                 r.insert(0, "qid", qid)
                 outs.append(r)
             return pd.concat(outs, ignore_index=True)
 
-        per_shard = (
-            matched.groupBy("shard")
-            .cogroup(norms_side.groupBy("shard"))
-            .applyInPandas(score_group, "qid string, doc_id long, score float")
+        per_shard = self._run_shards(
+            all_terms, list(specs.values()), kernel,
+            "qid string, doc_id long, score float",
         )
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
@@ -4068,6 +3762,34 @@ class IndexSearcher:
             cursor=(float(np.float32(after_score)), int(after_doc)),
         )
 
+    def _locate(self, doc_id: int):
+        """(doc_map row, shard, generation-local docID) of `doc_id`, or
+        the reason it cannot match: "no such doc" / "doc is deleted
+        (liveDocs)" — the explain preamble."""
+        dmr = self.doc_map().where(F.col("doc_id") == int(doc_id)).collect()
+        if not dmr:
+            return "no such doc"
+        dm = dmr[0]
+        shard = int(dm.shard)
+        if self._has_tombstones() and (
+            self.deleted_df().where(F.col("doc_id") == int(doc_id)).count()
+        ):
+            return "doc is deleted (liveDocs)"
+        return dm, shard, int(doc_id) - int(self._doc_offsets.get(shard, 0))
+
+    def _decode_doc_shard(self, spec: dict, shard: int):
+        """_decode_shard of ONE shard's posting rows for the spec's terms
+        (the explain slow path: the seam's seek + column pruning,
+        collected to the driver)."""
+        m = _unread_dropped(self._matched(sorted(set(spec["terms"]))), [spec])
+        pdf = m.where(F.col("shard") == shard).toPandas()
+        nr = (
+            self._norms_for_query(None)
+            .where(F.col("shard") == shard)
+            .toPandas()
+        )
+        return _decode_shard(pdf, nr, self._default_field, self._codec)
+
     def explain(self, query: Query, doc_id: int) -> dict:
         """IndexSearcher.explain analog (IndexSearcher.java:561-588,
         BM25Similarity.explain:244-268): decompose `doc_id`'s score
@@ -4090,39 +3812,16 @@ class IndexSearcher:
         kind = spec["kind"]
         terms = list(dict.fromkeys(spec["terms"]))
 
-        dmr = self.doc_map().where(F.col("doc_id") == int(doc_id)).collect()
-        if not dmr:
+        at = self._locate(doc_id)
+        if isinstance(at, str):
             return {"doc_id": int(doc_id), "match": False, "score": 0.0,
-                    "description": "no such doc"}
-        dm = dmr[0]
-        shard = int(dm.shard)
-        off = int(self._doc_offsets.get(shard, 0))
-        local = int(doc_id) - off
-        if self._has_tombstones():
-            if (
-                self.deleted_df()
-                .where(F.col("doc_id") == int(doc_id))
-                .count()
-            ):
-                return {"doc_id": int(doc_id), "match": False, "score": 0.0,
-                        "description": "doc is deleted (liveDocs)"}
+                    "description": at}
+        dm, shard, local = at
 
         if kind in ("tree", "phrase", "multi_phrase", "spans"):
-            m = self._matched(sorted(set(terms)))
-            if not _spec_needs_positions(spec):
-                m = m.drop("pos_enc", "pay_enc")  # heaviest columns; boolean trees
-            elif not _spec_needs_payloads(spec):
-                m = m.drop("pay_enc")
-            pdf = m.where(F.col("shard") == shard).toPandas()
-            nr = (
-                self._norms_for_query(None)
-                .where(F.col("shard") == shard)
-                .toPandas()
+            _base, norms_map, lt, dfs, _ = self._decode_doc_shard(
+                spec, shard
             )
-            decoded = _decode_shard(
-                pdf, nr, self._default_field, self._codec
-            )
-            _base, norms_map, lt, dfs, _ = decoded
             idfs = {
                 t: bm25.idf(d, self.max_doc) for t, d in dfs.items()
             }

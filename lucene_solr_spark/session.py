@@ -15,8 +15,27 @@ import zipfile
 _SHIPPED: set[str] = set()
 
 
+def _package_files() -> list[tuple[str, str]]:
+    """(path, archive name) of every .py file of the package, sorted."""
+    import lucene_solr_spark
+
+    pkg_dir = os.path.dirname(os.path.abspath(lucene_solr_spark.__file__))
+    out = []
+    for root, _dirs, files in os.walk(pkg_dir):
+        if "__pycache__" in root:
+            continue
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                rel = os.path.join(
+                    "lucene_solr_spark", os.path.relpath(full, pkg_dir)
+                )
+                out.append((full, rel))
+    return sorted(out, key=lambda x: x[1])
+
+
 def package_zip(dest_dir: str | None = None) -> str:
-    """Build (once) a zip of the lucene_solr_spark package; returns its path."""
+    """Build a zip of the lucene_solr_spark package; returns its path."""
     import lucene_solr_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(lucene_solr_spark.__file__))
@@ -24,17 +43,37 @@ def package_zip(dest_dir: str | None = None) -> str:
     os.makedirs(dest_dir, exist_ok=True)
     zpath = os.path.join(dest_dir, "lucene_solr_spark.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for f in files:
-                if not f.endswith(".py"):
-                    continue
-                full = os.path.join(root, f)
-                rel = os.path.join(
-                    "lucene_solr_spark", os.path.relpath(full, pkg_dir)
-                )
-                zf.write(full, rel)
+        for full, rel in _package_files():
+            zf.write(full, rel)
+    return zpath
+
+
+def _shared_package_zip() -> str:
+    """The package zip in ONE temp directory per package content
+    (`lss_pyfiles_<content hash>`), shared by every application and
+    process shipping the same code. It is never deleted — a running
+    application may still serve it to executors — and a content change
+    gets a new directory, so the temp dir holds one zip per code
+    version instead of one per application. Built in a private
+    subdirectory and renamed into place, so concurrent builders never
+    expose a partial zip."""
+    import hashlib
+    import shutil
+    import tempfile
+
+    h = hashlib.sha1()
+    for full, rel in _package_files():
+        with open(full, "rb") as fh:
+            h.update(rel.encode() + b"\0" + fh.read() + b"\0")
+    d = os.path.join(tempfile.gettempdir(), f"lss_pyfiles_{h.hexdigest()[:16]}")
+    zpath = os.path.join(d, "lucene_solr_spark.zip")
+    if not os.path.exists(zpath):
+        os.makedirs(d, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".build_", dir=d)
+        try:
+            os.replace(package_zip(tmp), zpath)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
     return zpath
 
 
@@ -44,10 +83,7 @@ def ensure_on_workers(spark) -> None:
     if app_id in _SHIPPED:
         return
     try:
-        import tempfile
-
-        zpath = package_zip(tempfile.mkdtemp(prefix="lss_pyfiles_"))
-        spark.sparkContext.addPyFile(zpath)
+        spark.sparkContext.addPyFile(_shared_package_zip())
     except Exception:
         # already importable on workers (e.g. launched via --py-files or
         # from the repo root) — addPyFile duplicates raise; either is fine

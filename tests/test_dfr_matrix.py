@@ -43,7 +43,7 @@ def _stats():
 
 def _brute(terms, score_fn, **kw):
     """Per-doc f64 sum of f32 leaves over the OR clause terms, f32
-    cast — mirrors the boolean composition of _search_simbase."""
+    cast — mirrors the boolean composition of _score_spec."""
     toks, cf, df, total = _stats()
     n = len(DOCS)
     avg = dfr.avg_field_length(total, n)

@@ -309,3 +309,38 @@ def test_simbase_tree_rejects_phrase(lm_index):
 
     with pytest.raises(ValueError, match="BM25-only"):
         lm_index.search_lm(parse_query('+table "table scan"'), k=5)
+
+
+# search method + kwargs, explain method + kwargs (None: no explain)
+SIMILARITIES = {
+    "classic": ("search_classic", {}, "explain_classic", {}),
+    "sweetspot": ("search_sweetspot", {}, "explain_sweetspot", {}),
+    "dirichlet": ("search_lm", {}, "explain_simbase", {}),
+    "jm": ("search_lm", {"model": "jm"}, "explain_simbase", {"model": "jm"}),
+    "dfr": ("search_dfr", {}, "explain_simbase", {"model": "dfr"}),
+    "ib": ("search_ib", {}, "explain_simbase", {"model": "ib"}),
+    "multi_sim": ("search_multi_sim", {}, None, None),
+}
+
+
+@pytest.mark.parametrize("sim", sorted(SIMILARITIES))
+def test_similarity_min_should_match(lm_index, sim):
+    """BooleanOr min_should_match holds under every similarity, as in
+    BM25 search: doc 4 ("sort sort sort table") matches one of the
+    three clauses, so msm=2 leaves docs 0 and 2; explain agrees."""
+    from lucene_solr_spark.search.query import BooleanOr
+
+    q = BooleanOr(("merge", "sort", "join"), min_should_match=2)
+    bm25_docs = sorted(r.doc_id for r in lm_index.search(q, k=10).collect())
+    assert bm25_docs == [0, 2]
+    method, kw, explain, ekw = SIMILARITIES[sim]
+    hits = getattr(lm_index, method)(q, k=10, **kw).collect()
+    assert sorted(r.doc_id for r in hits) == bm25_docs
+    if explain is None:
+        return
+    for r in hits:
+        ex = getattr(lm_index, explain)(q, int(r.doc_id), **ekw)
+        assert ex["match"] is True
+        assert np.float32(ex["score"]) == np.float32(r.score)
+    ex4 = getattr(lm_index, explain)(q, 4, **ekw)
+    assert ex4["match"] is False and ex4["score"] == 0.0

@@ -1,7 +1,14 @@
 """Driver emulator: run every queries() entry through Spark AND its
 oracle_sql() through DuckDB at sf0.01, compare row count, column names,
-and order-insensitive values (sorted by all columns). Mirrors the real
-driver's CORRECTNESS gate so regressions surface before a round ends.
+column dtypes and order-insensitive values (sorted by all columns).
+Mirrors the real driver's CORRECTNESS gate so regressions surface
+before a round ends.
+
+Dtypes compare by class (every integer width is "int"; float32 and
+float64 differ) because a result hash reads a float column's bytes at
+its own width: an f32 column never hashes like the oracle's doubles
+even when every value widens exactly. Any Spark FloatType output
+column fails outright.
 
 Usage: python tools/check_entry.py [sf_dir] [query_name ...]
 """
@@ -25,6 +32,45 @@ def norm_cell(v):
             return "nan"
         return f"{v:.10g}"
     return str(v)
+
+
+_INTS = {"tinyint", "smallint", "int", "integer", "bigint", "hugeint",
+         "utinyint", "usmallint", "uinteger", "ubigint"}
+
+
+def dtype_class(t: str) -> str:
+    """Comparable class of a Spark simpleString / DuckDB type name."""
+    t = t.strip().lower()
+    if t.endswith("[]"):
+        return f"array<{dtype_class(t[:-2])}>"
+    if t.startswith("array<"):
+        return f"array<{dtype_class(t[6:-1])}>"
+    if t in _INTS:
+        return "int"
+    if t in ("float", "real"):
+        return "float32"
+    if t == "double":
+        return "float64"
+    if t in ("string", "varchar"):
+        return "string"
+    if t == "blob":
+        return "binary"
+    if t.startswith("timestamp"):
+        return "timestamp"
+    return t.split("(")[0].split("<")[0]
+
+
+def dtype_problems(spark_schema, duck_cols, duck_types) -> list[str]:
+    """Per-column dtype mismatches; any FloatType column is one."""
+    duck = {c: dtype_class(str(t)) for c, t in zip(duck_cols, duck_types)}
+    out = []
+    for f in spark_schema.fields:
+        sc = dtype_class(f.dataType.simpleString())
+        if sc == "float32":
+            out.append(f"{f.name}: FloatType (cast to double)")
+        elif f.name in duck and duck[f.name] != sc:
+            out.append(f"{f.name}: spark {sc} vs oracle {duck[f.name]}")
+    return out
 
 
 def rows_key(rows, cols):
@@ -78,15 +124,19 @@ def main():
             duck_cols = rel.columns
             duck_rows = rel.fetchall()
             ok_cols = sorted(spark_cols) == sorted(duck_cols)
+            bad_types = dtype_problems(df.schema, duck_cols, rel.types)
+            ok_types = not bad_types
             ok_count = len(spark_rows) == len(duck_rows)
             ok_vals = rows_key(spark_rows, spark_cols) == rows_key(duck_rows, duck_cols)
-            ok = ok_cols and ok_count and ok_vals
+            ok = ok_cols and ok_types and ok_count and ok_vals
             n_pass += ok
             n_fail += not ok
             status = "PASS" if ok else "FAIL"
-            print(f"  {name:28s} {status} rows={len(spark_rows)}/{len(duck_rows)} cols={ok_cols} vals={ok_vals}")
+            print(f"  {name:28s} {status} rows={len(spark_rows)}/{len(duck_rows)} cols={ok_cols} types={ok_types} vals={ok_vals}")
             if not ok:
                 print(f"    spark cols: {spark_cols}  duck cols: {duck_cols}")
+                for p in bad_types:
+                    print(f"    dtype {p}")
                 sk = rows_key(spark_rows, spark_cols)
                 dk = rows_key(duck_rows, duck_cols)
                 for a, b in list(zip(sk, dk))[:8]:
