@@ -172,7 +172,7 @@ _ENGLISH_SEARCHERS: dict[str, IndexSearcher] = {}
 def _english_searcher_for(spark: SparkSession, sf_dir: str) -> IndexSearcher:
     """Index analyzed with the EnglishAnalyzer chain (en/EnglishAnalyzer.
     java:104-113: standard tokens -> possessive strip -> stop ->
-    PorterStemFilter). The arrow engine stems the pyarrow term
+    PorterStemFilter). The segment builder stems the pyarrow term
     DICTIONARY (per unique term, not per token); 'queries' and 'query'
     collapse to the same posting ('queri')."""
     key = f"{sf_dir}:english:{_engine_fingerprint()}"

@@ -521,7 +521,7 @@ ANALYZERS_POS = {
 }
 
 # analyzers whose stemming step runs on the term DICTIONARY in the
-# arrow engine (|vocab| python calls per segment, never per token);
+# segment builder (|vocab| python calls per segment, never per token);
 # the JVM tokens column for these is the unstemmed standard+possessive
 # chain and the arrow builder stems the pyarrow dictionary.
 DICT_STEMMERS: dict = {}
@@ -540,15 +540,3 @@ _register_dict_stemmers()
 def doc_lengths(token_lists: pd.Series) -> np.ndarray:
     """Norm field length = emitted token count (DefaultIndexingChain.java:637)."""
     return token_lists.str.len().to_numpy(dtype=np.int64)
-
-# discountOverlaps norm lengths (BM25Similarity.java:141) — pandas
-# twins of analysis/jvm.JVM_NORM_LEN, used by the pandas segment
-# engine so both engines write identical norm bytes.
-NORM_LEN_FNS = {
-    "shingle": lambda texts: (
-        texts.fillna("")
-        .str.findall(_TOKEN_RE)
-        .map(lambda ts: sum(1 for t in ts if len(t) <= MAX_TOKEN_LENGTH))
-    ),
-    "edge_ngram": lambda texts: tokenize_standard(texts).str.len(),
-}

@@ -75,7 +75,7 @@ def whitespace_tokens_col(text: Column) -> Column:
 
     Leading whitespace stripped first: a leading-whitespace split would
     otherwise yield an empty first element, shifting every position by
-    one relative to the pandas engine (which drops empties before
+    one relative to the pandas analyzer (which drops empties before
     enumerating)."""
     return F.filter(F.split(_lstrip_ws(text), "\\s+"), lambda t: t != F.lit(""))
 
@@ -198,7 +198,7 @@ def english_tokens_pos_col(text: Column) -> Column:
 
 
 # UAX29URLEmailTokenizer analog (see analyzers.URL_EMAIL_PAT for the
-# grammar-subset notes). The SAME pattern source as the pandas engine
+# grammar-subset notes). The SAME pattern source as the pandas analyzer
 # (ASCII URL/email classes + the UAX#29 word alternation — Python's re
 # and Java's with (?U) agree on every construct used: literal classes,
 # ranges, alternation, non-capturing groups).
@@ -316,7 +316,7 @@ def edge_ngram_tokens_col(text: Column) -> Column:
 # chain doc). Whitespace split -> boundary-insert -> delimiter split,
 # lowercase; positions sequential over the flattened parts, overlong
 # parts dropped with their position consumed. Pattern SOURCES are
-# shared with the pandas engine (drift-proof by construction).
+# shared with the pandas analyzer (drift-proof by construction).
 WDF_BOUNDARY_JAVA = "(?U)(?:" + WDF_BOUNDARY_PAT + ")"
 WDF_DELIM_JAVA = "(?U)" + WDF_DELIM_PAT
 

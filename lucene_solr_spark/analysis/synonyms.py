@@ -23,9 +23,10 @@ Semantics mirrored from the reference (analysis/common/.../synonym/):
 
 The map is compiled into a Spark MAP literal and applied with
 ``transform``/``flatten`` — constant-folded, whole-stage-codegen, no
-Python in the token hot path. The pandas engine mirrors it for parity
-tests; stemming analyzers ("english*") reject synonyms because the two
-engines would order the stem/synonym steps differently.
+Python in the token hot path. The pandas functions below are the
+reference used by tests; stemming analyzers ("english*") reject
+synonyms because the builder stems the term dictionary after
+expansion, which would stem the injected synonyms too.
 """
 
 from __future__ import annotations
@@ -93,7 +94,7 @@ def expand_tokens_pos_col(pairs: Column, mapping: dict) -> Column:
 
 
 def expand_token_lists(token_lists: pd.Series, mapping: dict) -> pd.Series:
-    """pandas engine analog of expand_tokens_col."""
+    """pandas reference used by tests (expand_tokens_col)."""
     m = _norm_map(mapping)
 
     def one(toks):
@@ -107,7 +108,7 @@ def expand_token_lists(token_lists: pd.Series, mapping: dict) -> pd.Series:
 
 
 def expand_token_pos_lists(tp_lists: pd.Series, mapping: dict) -> pd.Series:
-    """pandas engine analog of expand_tokens_pos_col."""
+    """pandas reference used by tests (expand_tokens_pos_col)."""
     m = _norm_map(mapping)
 
     def one(pairs):

@@ -3,9 +3,11 @@
 Mirrors the reference's indexing lifecycle (SURVEY.md §3.4) Spark-first:
 
 - DWPT / flush  (index/DocumentsWriterPerThread.java, DefaultIndexingChain.java:277)
-    -> one `applyInPandas` group per SEGMENT: tokenize vectorized, build
-       sorted (term, doc) postings with numpy, encode 128-entry VByte
-       delta blocks + per-block max metadata in ONE vectorized pass.
+    -> one `applyInArrow` group per SEGMENT (index/arrow_builder.py):
+       tokens arrive JVM-analyzed, each field is inverted in turn into
+       sorted (term, doc) postings with pyarrow/numpy, and 128-entry
+       delta blocks + per-block max metadata are encoded in ONE
+       vectorized pass.
 - SegmentMerger docBase remap  (index/SegmentMerger.java:74-130, MergeState.java:129-142)
     -> segments are doc-disjoint ascending runs, so the shard-level merge
        is an ordered CONCATENATION: only each run's first varint (absolute
@@ -32,7 +34,6 @@ counts in g order — the MergeState.docBase concatenation rule.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 from dataclasses import asdict, dataclass
@@ -51,8 +52,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from lucene_solr_spark.analysis.analyzers import ANALYZERS
-
 import sys as _sys
 import time as _time
 
@@ -70,8 +69,7 @@ class _PhaseTimer:
             print(f"[build-phase] {name}: {now - self.t:.2f}s", file=_sys.stderr)
             self.t = now
 
-from lucene_solr_spark.functions.smallfloat import encode_norm
-from lucene_solr_spark.index.codec import encode_posting_lists, vbyte_encode
+from lucene_solr_spark.index.codec import vbyte_encode
 
 
 # Term = (field, bytes) (index/Term.java:36). Internally a non-default
@@ -90,19 +88,14 @@ class IndexConfig:
     text_col: str = "text"
     # additional analyzed fields (source columns), each with its own
     # postings (field-prefixed terms), doc lengths, norms and
-    # collection stats (FieldInfos analog, index/FieldInfos.java).
-    # Positions are indexed for the default field only. Multi-field
-    # builds run the pandas segment engine.
+    # collection stats (FieldInfos analog, index/FieldInfos.java),
+    # analyzed with the same `analyzer`. Positions, payloads and
+    # synonyms apply to the default field only.
     extra_fields: tuple = ()
     sharding: str = "range_int"  # 'range_int' | 'hash'
     # write the .pos analog (per-doc delta position streams) — needed
     # for PhraseQuery; off by default (DOCS_AND_FREQS IndexOptions)
     index_positions: bool = False
-    # segment-build engine: 'arrow' tokenizes JVM-side and inverts via
-    # pyarrow dictionary_encode (no per-token Python objects — the
-    # scale path); 'pandas' is the reference implementation. Outputs
-    # are identical (tested).
-    engine: str = "arrow"
     # merge-time skew handling: a segment-level posting with df above this
     # marks the term hot; hot terms merge into doc-range parts of at most
     # `hot_segs_per_part` segments each (salted two-level reduce).
@@ -117,7 +110,7 @@ class IndexConfig:
     # raw <f4 aligned 1:1 with pos_enc — FieldInfo.IndexOptions
     # ..._AND_PAYLOADS). Requires index_positions and an analyzer
     # whose token structs carry a `pay` field (delimited_payload).
-    # Arrow engine only; incompatible with index-time synonyms.
+    # Single-field only; incompatible with index-time synonyms.
     index_payloads: bool = False
     # index-time synonym map {term: (syn, ...)} applied to the DEFAULT
     # field after the analyzer chain (SynonymFilter analog with
@@ -173,213 +166,6 @@ POSTINGS_SCHEMA = StructType(
         StructField("pay_enc", BinaryType()),
     ]
 )
-
-
-def _make_segment_builder(
-    analyzer_name: str,
-    segs_per_shard: int,
-    key_kind: str = "l",
-    index_positions: bool = False,
-    fields: tuple = (("text", "text"),),
-    codec: str = "vbyte",
-    synonyms: dict | None = None,
-):
-    """Returns the applyInPandas function building ONE segment's rows.
-
-    key_kind 'l' = int64 keys (dense ids), 's' = utf-8 string keys
-    (e.g. urls — the Solr uniqueKey analog). String keys sort by
-    codepoint, which equals utf-8 bytewise order (Lucene's term/key
-    comparison contract, index/Term.java:49-57).
-
-    index_positions additionally emits the .pos analog for the DEFAULT
-    field: per (term, doc) position lists with Lucene position-
-    increment semantics (stopped / overlong tokens advance positions
-    but are not emitted — FilteringTokenFilter.java:49-62).
-
-    `fields` is an ordered [(field_name, frame_col)]; fields[0] is the
-    default field (unprefixed terms); later fields get field-prefixed
-    terms (FIELD_SEP) and their own doc lengths / norms meta rows —
-    the FieldInfos / per-field invert of DefaultIndexingChain
-    (index/DefaultIndexingChain.java:461-499)."""
-    tokenize = ANALYZERS[analyzer_name]
-    if index_positions:
-        from lucene_solr_spark.analysis.analyzers import ANALYZERS_POS
-        from lucene_solr_spark.index.codec import encode_position_lists
-
-        tokenize_pos = ANALYZERS_POS[analyzer_name]
-
-    def invert(series: pd.Series, with_pos: bool, expand: dict | None = None):
-        """-> (doc_lens, norms, parts|None) where parts =
-        (uniques, dfs, cfs, enc, pos_encs). `expand` = synonym map for
-        this field (analysis/synonyms.py — injected tokens share the
-        position; they count toward doc_len/sum_dl but NOT toward the
-        norm byte: discountOverlaps, BM25Similarity.java:141)."""
-        from lucene_solr_spark.analysis.analyzers import NORM_LEN_FNS
-
-        n_docs = len(series)
-        pre_lens = None
-        if with_pos:
-            tp_lists = tokenize_pos(series)
-            if expand:
-                from lucene_solr_spark.analysis.synonyms import (
-                    expand_token_pos_lists,
-                )
-
-                pre_lens = tp_lists.str.len().to_numpy(np.int64)
-                tp_lists = expand_token_pos_lists(tp_lists, expand)
-            doc_lens = tp_lists.str.len().to_numpy(np.int64)
-        else:
-            token_lists = tokenize(series)
-            if expand:
-                from lucene_solr_spark.analysis.synonyms import (
-                    expand_token_lists,
-                )
-
-                pre_lens = token_lists.str.len().to_numpy(np.int64)
-                token_lists = expand_token_lists(token_lists, expand)
-            doc_lens = token_lists.str.len().to_numpy(np.int64)
-        if analyzer_name in NORM_LEN_FNS:
-            norm_lens = (
-                NORM_LEN_FNS[analyzer_name](series).to_numpy(np.int64)
-            )
-        elif pre_lens is not None:
-            norm_lens = pre_lens
-        else:
-            norm_lens = doc_lens
-        norms = encode_norm(norm_lens)
-        total = int(doc_lens.sum())
-        if not total:
-            return doc_lens, norms, None
-        if with_pos:
-            flat = np.empty(total, dtype=object)
-            flat_pos = np.empty(total, np.int64)
-            w = 0
-            for lst in tp_lists:
-                for t, p in lst:
-                    flat[w] = t
-                    flat_pos[w] = p
-                    w += 1
-            codes, uniques = pd.factorize(flat, sort=True)
-            doc_ord = np.repeat(np.arange(n_docs, dtype=np.int64), doc_lens)
-            order = np.lexsort((flat_pos, doc_ord, codes))
-            c_s = codes.astype(np.int64)[order]
-            d_s = doc_ord[order]
-            p_s = flat_pos[order]
-            newrun = np.empty(total, bool)
-            newrun[0] = True
-            newrun[1:] = (c_s[1:] != c_s[:-1]) | (d_s[1:] != d_s[:-1])
-            run_id = np.cumsum(newrun) - 1
-            tfs = np.bincount(run_id).astype(np.int64)
-            doc_local = d_s[newrun]
-            term_of_run = c_s[newrun]
-            dfs = np.bincount(term_of_run, minlength=len(uniques)).astype(np.int64)
-            cfs = np.add.reduceat(tfs, np.cumsum(dfs) - dfs).astype(np.int64)
-            enc = encode_posting_lists(
-                dfs, doc_local, tfs, norms[doc_local], codec=codec
-            )
-            pos_per_term = np.bincount(c_s, minlength=len(uniques)).astype(np.int64)
-            pos_encs = encode_position_lists(p_s, tfs, pos_per_term)
-        else:
-            flat = np.empty(total, dtype=object)
-            pos = 0
-            for lst in token_lists:
-                ln = len(lst)
-                flat[pos : pos + ln] = lst
-                pos += ln
-            codes, uniques = pd.factorize(flat, sort=True)
-            doc_ord = np.repeat(np.arange(n_docs, dtype=np.int64), doc_lens)
-            # (term, doc) counts, sorted by (term, doc) for free via np.unique
-            pair = codes.astype(np.int64) * n_docs + doc_ord
-            upair, tfs = np.unique(pair, return_counts=True)
-            term_id = upair // n_docs
-            doc_local = upair % n_docs
-            dfs = np.bincount(term_id, minlength=len(uniques)).astype(np.int64)
-            cfs = np.add.reduceat(tfs, np.cumsum(dfs) - dfs).astype(np.int64)
-            enc = encode_posting_lists(
-                dfs, doc_local, tfs, norms[doc_local], codec=codec
-            )
-            pos_encs = None
-        return doc_lens, norms, (uniques, dfs, cfs, enc, pos_encs)
-
-    def build_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in SEGMENT_SCHEMA.fields])
-        g = int(pdf["g"].iloc[0])
-        pdf = pdf.sort_values("key", kind="mergesort").reset_index(drop=True)
-        if key_kind == "s":
-            key_list = pdf["key"].astype(str).tolist()
-            assert all("\n" not in k for k in key_list), "string keys must not contain newlines"
-            keys_b = "\n".join(key_list).encode("utf-8")
-        else:
-            keys = pdf["key"].to_numpy(np.int64)
-            keys_b = keys.astype("<i8").tobytes()
-        n_docs = len(pdf)
-
-        frames: list[pd.DataFrame] = []
-        for fi, (fname, fcol) in enumerate(fields):
-            with_pos = index_positions and fi == 0
-            doc_lens, norms, parts = invert(
-                pdf[fcol], with_pos, synonyms if fi == 0 else None
-            )
-            if parts is not None:
-                uniques, dfs, cfs, enc, pos_encs = parts
-                term_out = uniques.astype(str)
-                if fi > 0:
-                    term_out = np.array(
-                        [f"{fname}{FIELD_SEP}{t}" for t in term_out],
-                        dtype=object,
-                    )
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "g": g,
-                            "kind": "p",
-                            "term": term_out,
-                            "df": dfs,
-                            "cf": cfs,
-                            "doc_enc": enc["doc_enc"],
-                            "tf_enc": enc["tf_enc"],
-                            "block_last": enc["block_last"],
-                            "block_doc_off": enc["block_doc_off"],
-                            "block_tf_off": enc["block_tf_off"],
-                            "block_max_tf": enc["block_max_tf"],
-                            "block_max_norm": enc["block_max_norm"],
-                            "pos_enc": pos_encs if pos_encs is not None else None,
-                            "pay_enc": None,  # pandas engine: no payloads
-                        }
-                    )
-                )
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "g": [g],
-                        "kind": ["m"],
-                        "field": [fname],
-                        "sum_dl": [int(doc_lens.sum())],
-                        "keys_enc": [keys_b if fi == 0 else None],
-                        "doc_lens_enc": [doc_lens.astype("<i4").tobytes()],
-                        "norms_enc": [norms.astype(np.uint8).tobytes()],
-                        "n_docs": [n_docs],
-                        "fingerprint": [
-                            hashlib.sha256(keys_b).hexdigest()[:16]
-                            if fi == 0
-                            else None
-                        ],
-                    }
-                )
-            )
-        out = pd.concat(frames, ignore_index=True)
-        for f in SEGMENT_SCHEMA.fields:
-            if f.name not in out.columns:
-                out[f.name] = None
-            else:
-                # pd.concat fills missing cells with NaN; Arrow needs None
-                col = out[f.name]
-                if col.isna().any():
-                    out[f.name] = col.astype(object).where(col.notna(), None)
-        return out[[f.name for f in SEGMENT_SCHEMA.fields]]
-
-    return build_segment
 
 
 def _read_first_varint(buf: bytes) -> tuple[int, int]:
@@ -546,16 +332,17 @@ def build_index(
         if cfg.analyzer in DICT_STEMMERS:
             raise ValueError(
                 "synonyms are incompatible with stemming analyzers: the "
-                "arrow engine stems AFTER expansion and the pandas engine "
-                "before it — configure one or the other"
+                "stemmer runs on the term dictionary, after expansion, so "
+                "injected synonyms would be stemmed too — configure one "
+                "or the other"
             )
     if cfg.index_payloads:
         if not cfg.index_positions:
             raise ValueError("index_payloads requires index_positions")
-        if cfg.engine != "arrow" or cfg.extra_fields or cfg.synonyms:
+        if cfg.extra_fields or cfg.synonyms:
             raise ValueError(
-                "index_payloads is an arrow-engine, single-field, "
-                "no-synonyms path (the .pay stream mirrors pos_enc)"
+                "index_payloads is a single-field, no-synonyms path "
+                "(the .pay stream mirrors pos_enc)"
             )
         if cfg.analyzer != "delimited_payload":
             raise ValueError(
@@ -614,31 +401,31 @@ def build_index(
     if done:
         todo = with_g.where(~F.col("g").isin([int(x) for x in done]))
 
-    fields = ((cfg.text_col, "text"),) + tuple(
-        (xf, f"xf{i}") for i, xf in enumerate(cfg.extra_fields)
+    # ---- per-field JVM analysis + one applyInArrow segment stage ----
+    from lucene_solr_spark.analysis.analyzers import DICT_STEMMERS
+    from lucene_solr_spark.analysis.jvm import (
+        JVM_ANALYZERS,
+        JVM_ANALYZERS_POS,
+        JVM_NORM_LEN,
     )
-    if cfg.engine == "arrow" and not cfg.extra_fields:
-        from lucene_solr_spark.analysis.jvm import JVM_ANALYZERS, JVM_ANALYZERS_POS
-        from lucene_solr_spark.index.arrow_builder import make_arrow_segment_builder
+    from lucene_solr_spark.index.arrow_builder import make_arrow_segment_builder
 
-        tok_col = (
-            JVM_ANALYZERS_POS[cfg.analyzer]
-            if cfg.index_positions
-            else JVM_ANALYZERS[cfg.analyzer]
-        )
-        from lucene_solr_spark.analysis.analyzers import DICT_STEMMERS
-
-        toks_expr = tok_col(F.col("text"))
+    text_cols = ["text"] + [f"xf{i}" for i in range(len(cfg.extra_fields))]
+    seg_cols = []
+    for fi, text_col in enumerate(text_cols):
+        text = F.col(text_col)
+        positions = cfg.index_positions and fi == 0
+        toks_expr = (JVM_ANALYZERS_POS if positions else JVM_ANALYZERS)[
+            cfg.analyzer
+        ](text)
         # discountOverlaps (BM25Similarity.java:141): overlap-emitting
         # chains / synonym expansion ship a norm-length column =
         # tokens minus same-position overlaps (for synonyms that is
         # the pre-expansion size — includeOrig keeps every original)
-        from lucene_solr_spark.analysis.jvm import JVM_NORM_LEN
-
         nlen_expr = None
         if cfg.analyzer in JVM_NORM_LEN:
-            nlen_expr = JVM_NORM_LEN[cfg.analyzer](F.col("text"))
-        if cfg.synonyms:
+            nlen_expr = JVM_NORM_LEN[cfg.analyzer](text)
+        if cfg.synonyms and fi == 0:
             from lucene_solr_spark.analysis.synonyms import (
                 expand_tokens_col,
                 expand_tokens_pos_col,
@@ -648,33 +435,21 @@ def build_index(
                 nlen_expr = F.size(toks_expr)
             toks_expr = (
                 expand_tokens_pos_col(toks_expr, cfg.synonyms)
-                if cfg.index_positions
+                if positions
                 else expand_tokens_col(toks_expr, cfg.synonyms)
             )
-        todo_tok = todo.withColumn("toks", toks_expr)
+        seg_cols.append(toks_expr.alias(f"toks{fi}"))
         if nlen_expr is not None:
-            todo_tok = todo_tok.withColumn(
-                "nlen", nlen_expr.cast("long")
-            )
-        todo_tok = todo_tok.drop("text")
-        seg_rows = todo_tok.groupBy("g").applyInArrow(
-            make_arrow_segment_builder(
-                key_kind, cfg.index_positions, field_name=cfg.text_col,
-                codec=cfg.codec, stem=DICT_STEMMERS.get(cfg.analyzer),
-                with_payloads=cfg.index_payloads,
-            ),
-            SEGMENT_SCHEMA,
-        )
-    else:
-        # multi-field builds run the pandas engine (per-field invert)
-        seg_rows = todo.groupBy("g").applyInPandas(
-            _make_segment_builder(
-                cfg.analyzer, cfg.segs_per_shard, key_kind,
-                cfg.index_positions, fields, cfg.codec,
-                synonyms=cfg.synonyms,
-            ),
-            SEGMENT_SCHEMA,
-        )
+            seg_cols.append(nlen_expr.cast("long").alias(f"nlen{fi}"))
+    seg_rows = todo.select("key", "g", *seg_cols).groupBy("g").applyInArrow(
+        make_arrow_segment_builder(
+            key_kind, cfg.index_positions,
+            fields=(cfg.text_col,) + tuple(cfg.extra_fields),
+            codec=cfg.codec, stem=DICT_STEMMERS.get(cfg.analyzer),
+            with_payloads=cfg.index_payloads,
+        ),
+        SEGMENT_SCHEMA,
+    )
     mode = "append" if done else "overwrite"
     seg_rows.write.mode(mode).parquet(seg_path)
     _pt.mark("seg_build_write")

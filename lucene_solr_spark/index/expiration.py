@@ -78,10 +78,14 @@ def delete_expired(
     (deleteByQuery "expire_at:[* TO NOW]",
     DocExpirationUpdateProcessorFactory.java:328). Tombstones are
     written straight from the filtered DataFrame — executor-bound at
-    any corpus size. Keys already tombstoned by a prior sweep are
-    anti-joined away first, so repeated sweeps over the same stored
-    frame are idempotent (the tombstone table does not grow) and the
-    return value is the number of NEWLY expired keys this sweep."""
+    any corpus size. Keys already tombstoned at this sweep's watermark
+    or above are anti-joined away first, so repeated sweeps over the
+    same stored frame are idempotent (the tombstone table does not
+    grow) and the return value is the number of NEWLY expired keys
+    this sweep. A tombstone only deletes docIDs below its watermark:
+    an older one (e.g. from update_documents, whose new version got a
+    docID past it) does not cover the live version, so it does not
+    suppress the new tombstone."""
     import json
 
     from lucene_solr_spark.index.deletes import _current_total_docs
@@ -101,9 +105,8 @@ def delete_expired(
     )
     tomb_dir = os.path.join(index_dir, "tombstones")
     if os.path.exists(tomb_dir):
-        tomb = tomb.join(
-            spark.read.parquet(tomb_dir).select("key"), "key", "left_anti"
-        )
+        covered = spark.read.parquet(tomb_dir).where(F.col("wm") >= wm)
+        tomb = tomb.join(covered.select("key"), "key", "left_anti")
     n = tomb.count()
     if n:
         tomb.write.mode("append").parquet(tomb_dir)

@@ -9,7 +9,7 @@ we mirror with idempotent, fingerprinted batch appends.
 
 Spark mapping:
 - a micro-batch == one flush generation: each batch builds NEW segments
-  (fresh g ids beyond the existing range) with the same applyInPandas
+  (fresh g ids beyond the existing range) with the same applyInArrow
   segment kernel, appends postings/doc_map/norms partitions, and
   bumps the manifest (the segments_N commit analog — last write wins,
   readers see a consistent snapshot because all data files land before
@@ -27,6 +27,7 @@ Spark mapping:
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 
@@ -54,23 +55,24 @@ def append_batch(
     with open(_manifest_path(index_dir)) as fh:
         manifest = json.load(fh)
     if not os.path.exists(_manifest_path(gen_dir)):
-        cfg_d = dict(manifest["config"])
-        cfg_d.pop("sharding", None)
-        base_cfg = IndexConfig(**{**cfg_d, "sharding": manifest["config"]["sharding"]})
+        # only IndexConfig fields: older manifests carry retired keys
+        # (e.g. "engine") that the dataclass no longer accepts
+        known = {f.name for f in dataclasses.fields(IndexConfig)}
+        base_cfg = IndexConfig(
+            **{k: v for k, v in manifest["config"].items() if k in known}
+        )
         n = batch.count()
         if n == 0:
             return manifest
-        # delta generations use few segments (mini-flush)
-        delta_cfg = IndexConfig(
+        # delta generations use few segments (mini-flush); every other
+        # setting (analyzer, fields, positions, payloads, synonyms,
+        # codec) is the base index's
+        delta_cfg = dataclasses.replace(
+            base_cfg,
             n_shards=max(1, min(base_cfg.n_shards, 2)),
             segs_per_shard=1,
-            analyzer=base_cfg.analyzer,
-            id_col=base_cfg.id_col,
-            text_col=base_cfg.text_col,
             sharding=base_cfg.sharding if base_cfg.sharding != "range_int" else "hash",
-            index_positions=getattr(base_cfg, "index_positions", False),
-            extra_fields=tuple(getattr(base_cfg, "extra_fields", ()) or ()),
-            codec=getattr(base_cfg, "codec", "vbyte"),
+            extra_fields=tuple(base_cfg.extra_fields),
         )
         build_index(spark, batch, gen_dir, delta_cfg, resume=False)
     # register generation in the top-level manifest (commit point)

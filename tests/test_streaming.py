@@ -110,3 +110,68 @@ def test_index_stream_foreachbatch(spark, base_index, tmp_path):
     s = IndexSearcher.open(spark, base_index)
     hits = s.search(TermQuery("streamedterm"), k=10).collect()
     assert len(hits) == 2
+
+
+def _keys(s, term):
+    from lucene_solr_spark.search.query import TermQuery
+
+    return sorted(
+        r.key for r in s.search_with_keys(TermQuery(term), k=None).collect()
+    )
+
+
+def test_nrt_delta_keeps_base_synonyms(spark, tmp_path):
+    """A delta generation is analyzed like its base index: the base's
+    index-time synonyms are applied to appended docs too."""
+    from lucene_solr_spark.index.builder import IndexConfig, build_index
+    from lucene_solr_spark.search.searcher import IndexSearcher
+    from lucene_solr_spark.streaming.nrt import append_batch
+
+    ix = str(tmp_path / "syn_nrt")
+    build_index(
+        spark,
+        spark.createDataFrame([(0, "fast car")], "doc_id long, text string"),
+        ix,
+        IndexConfig(n_shards=1, segs_per_shard=1, synonyms={"fast": ("quick",)}),
+    )
+    append_batch(
+        spark,
+        spark.createDataFrame([(10, "fast train")], "doc_id long, text string"),
+        ix,
+        batch_id=0,
+    )
+    s = IndexSearcher.open(spark, ix)
+    assert _keys(s, "fast") == [0, 10]
+    assert _keys(s, "quick") == [0, 10]
+
+
+def test_nrt_append_on_manifest_with_retired_engine_key(spark, tmp_path):
+    """Manifests written while IndexConfig had an `engine` field still
+    accept appends: keys that are not IndexConfig fields are ignored."""
+    import json
+    import os
+
+    from lucene_solr_spark.index.builder import IndexConfig, build_index
+    from lucene_solr_spark.search.searcher import IndexSearcher
+    from lucene_solr_spark.streaming.nrt import append_batch
+
+    ix = str(tmp_path / "old_nrt")
+    build_index(
+        spark,
+        spark.createDataFrame([(0, "table scan")], "doc_id long, text string"),
+        ix,
+        IndexConfig(n_shards=1, segs_per_shard=1),
+    )
+    path = os.path.join(ix, "manifest.json")
+    with open(path) as fh:
+        manifest = json.load(fh)
+    manifest["config"]["engine"] = "pandas"
+    with open(path, "w") as fh:
+        json.dump(manifest, fh)
+    append_batch(
+        spark,
+        spark.createDataFrame([(10, "table sort")], "doc_id long, text string"),
+        ix,
+        batch_id=0,
+    )
+    assert _keys(IndexSearcher.open(spark, ix), "table") == [0, 10]

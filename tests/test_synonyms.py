@@ -67,43 +67,58 @@ def test_jvm_column_matches_pandas(spark):
 
 
 @pytest.fixture(scope="module")
-def syn_indexes(spark, tmp_path_factory):
-    """The same synonym index built by BOTH engines."""
+def syn_index(spark, tmp_path_factory):
+    """The synonym index (positions on, so injected tokens share slots)."""
     from lucene_solr_spark.index.builder import IndexConfig, build_index
 
     src = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    outs = {}
-    for engine in ("arrow", "pandas"):
-        out = str(tmp_path_factory.mktemp("synidx") / engine)
-        build_index(
-            spark, src, out,
-            IndexConfig(n_shards=2, segs_per_shard=2, engine=engine,
-                        id_col="doc_id", text_col="text",
-                        sharding="range_int", index_positions=True,
-                        synonyms=SYN),
-        )
-        outs[engine] = out
-    return outs
-
-
-def test_engines_agree_on_synonym_index(spark, syn_indexes):
-    a = spark.read.parquet(f"{syn_indexes['arrow']}/postings").select(
-        "shard", "term", "df", "cf"
+    out = str(tmp_path_factory.mktemp("synidx") / "ix")
+    build_index(
+        spark, src, out,
+        IndexConfig(n_shards=2, segs_per_shard=2,
+                    id_col="doc_id", text_col="text",
+                    sharding="range_int", index_positions=True,
+                    synonyms=SYN),
     )
-    b = spark.read.parquet(f"{syn_indexes['pandas']}/postings").select(
-        "shard", "term", "df", "cf"
+    return out
+
+
+def test_synonym_index_df_cf(spark, syn_index):
+    """Every term's global df/cf equals counts taken from the pandas
+    reference chain (tokenize_standard_with_positions +
+    expand_token_pos_lists) over the source texts."""
+    from collections import Counter
+
+    from lucene_solr_spark.analysis.analyzers import (
+        tokenize_standard_with_positions,
     )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+    texts = spark.read.parquet(f"{SF_SMALL}/documents.parquet").toPandas()["text"]
+    expanded = expand_token_pos_lists(
+        tokenize_standard_with_positions(texts), SYN
+    )
+    df, cf = Counter(), Counter()
+    for pairs in expanded:
+        terms = [t for t, _ in pairs]
+        cf.update(terms)
+        df.update(set(terms))
+    exp = {t: (df[t], cf[t]) for t in cf}
+    assert exp["quick"] == exp["fast"] and exp["large"] == exp["big"]
+    got = {
+        r.term: (int(r.df), int(r.cf))
+        for r in spark.read.parquet(f"{syn_index}/term_stats").collect()
+    }
+    assert got == exp
 
 
-def test_synonym_search_and_norms(spark, syn_indexes):
+def test_synonym_search_and_norms(spark, syn_index):
     import pyspark.sql.functions as F
 
     from lucene_solr_spark.search.query import TermQuery
     from lucene_solr_spark.search.searcher import IndexSearcher
 
     src = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    s = IndexSearcher(spark, syn_indexes["arrow"])
+    s = IndexSearcher(spark, syn_index)
     # 'quick' never occurs raw in the corpus — hits == docs with 'fast'
     expect = {
         r["doc_id"]
@@ -148,19 +163,19 @@ def test_synonyms_reject_stemming_analyzer(spark, tmp_path):
         )
 
 
-def test_synonym_phrase_matches_at_same_position(spark, syn_indexes):
+def test_synonym_phrase_matches_at_same_position(spark, syn_index):
     """'quick' sits AT the position of 'fast': a phrase 'quick X'
     matches wherever 'fast X' does."""
     from lucene_solr_spark.search.parser import parse_query
     from lucene_solr_spark.search.searcher import IndexSearcher
 
-    s = IndexSearcher(spark, syn_indexes["arrow"])
+    s = IndexSearcher(spark, syn_index)
     base = {r["doc_id"] for r in s.search(parse_query('"fast scan"'), k=None).collect()}
     syn = {r["doc_id"] for r in s.search(parse_query('"quick scan"'), k=None).collect()}
     assert syn == base
 
 
-def test_synonym_norm_discounts_overlaps(spark, syn_indexes):
+def test_synonym_norm_discounts_overlaps(spark, syn_index):
     """The norm byte encodes the PRE-expansion length (overlaps
     discounted) even though doc_len / sum_dl count injected tokens."""
     import numpy as np
@@ -176,14 +191,13 @@ def test_synonym_norm_discounts_overlaps(spark, syn_indexes):
         d: len(tokenize_standard(pd.Series([t])).iloc[0])
         for d, t in texts.items()
     }
-    for engine in ("arrow", "pandas"):
-        s = IndexSearcher(spark, syn_indexes[engine])
-        got = {
-            int(r.doc_id): int(r.norm)
-            for r in s.doc_map().select("doc_id", "norm").collect()
-        }
-        exp = {
-            d: int(encode_norm(np.array([l]))[0])
-            for d, l in base_lens.items()
-        }
-        assert got == exp, engine
+    s = IndexSearcher(spark, syn_index)
+    got = {
+        int(r.doc_id): int(r.norm)
+        for r in s.doc_map().select("doc_id", "norm").collect()
+    }
+    exp = {
+        d: int(encode_norm(np.array([l]))[0])
+        for d, l in base_lens.items()
+    }
+    assert got == exp

@@ -45,7 +45,6 @@ def main() -> None:
     ap.add_argument("--sharding", default="hash", choices=["hash", "range_int"])
     ap.add_argument("--analyzer", default="standard")
     ap.add_argument("--positions", action="store_true")
-    ap.add_argument("--engine", default="arrow", choices=["arrow", "pandas"])
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument(
         "--publish",
@@ -76,7 +75,6 @@ def main() -> None:
             text_col=args.text_col,
             sharding=args.sharding,
             index_positions=args.positions,
-            engine=args.engine,
         ),
         resume=not args.no_resume,
     )
