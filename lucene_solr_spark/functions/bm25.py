@@ -69,14 +69,3 @@ def score_term(
     c = cache[np.asarray(norm_bytes, dtype=np.uint8)]
     return ((weight_value * tff) / (tff + c)).astype(np.float32)
 
-
-def sum_bool(scores: list[np.ndarray]) -> np.ndarray:
-    """Boolean sum over aligned per-clause score arrays: f64 sum -> f32.
-
-    ConjunctionScorer.score(): double accumulator over sub-scorers, final
-    (float) cast; DisjunctionSumScorer.java:44-48 identically.
-    """
-    acc = np.zeros_like(scores[0], dtype=np.float64)
-    for s in scores:
-        acc += s.astype(np.float64)
-    return acc.astype(np.float32)

@@ -30,15 +30,21 @@ DuckDB oracle can replay the whole tree.
 Semantics pinned to the reference:
 - terms buckets sort count desc, tie bucket value asc ("index"),
   `limit` buckets kept PER PARENT bucket (FacetFieldProcessor
-  bucket-limit); limit defaults 10; sort "index" supported.
+  bucket-limit); limit defaults 10, a negative limit keeps every
+  bucket (FacetField.java:562); sort "index" supported.
 - query facets have one bucket, named by the node key, matching rows
   filtered by the `q` expression (FacetQuery).
 - range facets bucket [start, start+gap), ... up to end, lower edge
   inclusive (FacetRange default include); bucket value = the range
-  start, like the reference's `val`.
+  start, like the reference's `val`. Documented deviation: only
+  buckets holding at least one row are emitted — the reference's
+  mincount=0 gap spine (zero-count buckets for empty ranges) is not
+  generated.
 - stats: count / sum / avg / min / max / unique over a column
   (AggValueSource; unique is exact countDistinct here — the
   reference's hll/unique approximation is a documented deviation).
+  A stat may not be named `count`, `facet` or `bucket_path`: those
+  are the bucket table's own columns (ValueError).
 
 Scale shape: every level is a hash aggregate keyed by the bucket-path
 prefix — the child's shuffle key extends the parent's, so AQE can
@@ -59,6 +65,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _STAT_PAT = re.compile(r"^\s*(count|sum|avg|min|max|unique)\s*\(\s*([\w.]*)\s*\)\s*$")
+# output columns of the bucket table a stat alias would overwrite
+_RESERVED = ("facet", "bucket_path", "count")
 
 
 @dataclass
@@ -105,6 +113,11 @@ def _parse(name: str, spec: dict) -> _Node:
         raise ValueError(f"unsupported sort {node.sort!r} at {name!r}")
     for key, sub in (spec.get("facet") or {}).items():
         if isinstance(sub, str):
+            if key in _RESERVED:
+                raise ValueError(
+                    f"stat alias {key!r} at {name!r} is reserved (an "
+                    f"output column)"
+                )
             m = _STAT_PAT.match(sub)
             if not m:
                 raise ValueError(f"unparseable stat {sub!r} at {name!r}")
@@ -231,7 +244,7 @@ def json_facet(df: DataFrame, request: dict | None = None,
         )
         if node.kind in ("terms", "range") and node.mincount > 1:
             agg = agg.where(F.col("_cnt") >= node.mincount)
-        if node.kind == "terms":
+        if node.kind == "terms" and node.limit >= 0:
             order = (
                 [F.desc("_cnt"), F.asc(vcol)]
                 if node.sort == "count" else [F.asc(vcol)]

@@ -2,8 +2,11 @@
 
 Query lifecycle mirrors IndexSearcher.search (SURVEY.md §3.1):
 
-1. rewrite(query) to fixpoint (logical plan), then _spec: a flat kind
-   (term/and/not/or/dismax/reqopt/phrase/...) or a nested tree.
+1. rewrite(query) to fixpoint (logical plan), then _spec: ONE boolean
+   representation — term, AND, OR (incl. min_should_match), NOT,
+   req+opt, dismax and every nested BooleanQuery compile through _tree
+   to the term/bool/dismax node tree; only phrase, multi_phrase and
+   spans keep their own positional kernels.
 2. bind global stats: (df, cf) per term from the driver TermStates cache
    (_term_states — one pushed-down `term IN` seek per never-seen term),
    maxDoc/sumTotalTermFreq from the manifest -> float32 idf, avgdl, the
@@ -29,23 +32,27 @@ classic TF-IDF, SweetSpot and SimilarityBase (LM/DFR/IB/Multi) wrappers
 build a _Similarity on the driver and run the SAME spec, seam and
 kernels as BM25 — _score_spec / _eval_tree take a `leaf_fn(term, tf,
 norm_bytes, boost)` leaf scorer and a `coord` flag (ClassicSimilarity
-overlap/maxOverlap on disjunctions), so min_should_match, liveDocs and
-the leapfrog intersection hold for every similarity.
+overlap/maxOverlap on the root disjunction), so min_should_match,
+liveDocs and the candidate-threaded intersection hold for every
+similarity.
 
 Block-max fast paths (Ding & Suel SIGIR'11; north-rule addition, SURVEY §4.5),
 all output-identical to the exhaustive path (tested):
-- TermQuery: blocks visited in upper-bound order, decode stops when the
-  kth score beats every remaining block bound (_score_term_pruned).
-- AND / NOT / req+opt: cost-sorted leapfrog — the globally rarest term
-  leads; other terms decode only the 128-blocks overlapping the
-  shrinking candidate set via the per-block last-docID skip entries
-  (_leapfrog; ConjunctionDISI.java:84-133 + advance()). Similarity-
-  independent: runs under every leaf_fn.
-- OR (sum-scored): block-max WAND — doc space segmented at block
-  boundaries, per-segment bound = sum of covering blocks' max impacts,
-  visited bound-desc until the kth score wins (_score_or_wand). The
-  stored block maxima are BM25 impacts, so this and the pruned term
-  path are off under a leaf_fn.
+- bare term root: blocks visited in upper-bound order, decode stops
+  when the kth score beats every remaining block bound
+  (_score_term_pruned).
+- required clauses (AND / NOT / req+opt, at any depth): _eval_tree
+  evaluates them cheapest-first (_tree_cost, the shard-local postings
+  count) and threads the shrinking candidate set down, so later term
+  leaves decode only the 128-blocks overlapping it via the per-block
+  last-docID skip entries (ConjunctionDISI.java:84-133 + advance()).
+  Similarity-independent: runs under every leaf_fn.
+- pure-SHOULD root of term leaves (OR, msm <= 1): block-max WAND — doc
+  space segmented at block boundaries, per-segment bound = sum of
+  covering blocks' max impacts, visited bound-desc until the kth score
+  wins (_score_or_wand). The stored block maxima are BM25 impacts, so
+  this and the pruned term path are off under a leaf_fn and need a
+  bounded k.
 """
 
 from __future__ import annotations
@@ -103,6 +110,15 @@ from lucene_solr_spark.search.query import (
     SpanPayloadCheckQuery,
     SpanPositionRangeQuery,
 )
+
+
+# Query classes _spec compiles through _tree. The flat ones are what the
+# similarity wrappers and early termination accept; the SimilarityBase
+# family also takes the nested ones. BooleanNot / BooleanMustShould /
+# DisjunctionMax compile to the tree too, for search and explain only.
+_FLAT_QUERIES = (TermQuery, BooleanAnd, BooleanOr)
+_NESTED_QUERIES = (BooleanQuery, BoostQuery, ConstantScoreQuery, DisMaxQuery,
+                   MatchAllDocsQuery)
 
 
 def _topk_arrays(docs: np.ndarray, scores: np.ndarray, k: int):
@@ -364,13 +380,12 @@ def _score_spec(
 
     Pluggable similarity (IndexSearcher.setSimilarity, SURVEY §2.6):
     `leaf_fn(term, tf, norm_bytes, boost) -> f32 scores` replaces the
-    BM25 leaf everywhere (flat kinds and _eval_tree); `coord=True`
-    multiplies disjunction sums by overlap/maxOverlap
-    (ClassicSimilarity.coord). The block-max impact paths
-    (_score_term_pruned, _score_or_wand, the tree's term/WAND routing)
+    BM25 leaf of _eval_tree; `coord=True` multiplies the root
+    disjunction's sum by overlap/maxOverlap (ClassicSimilarity.coord).
+    The block-max impact paths (_score_term_pruned, _score_or_wand)
     bound BM25 scores only, so they are off under a leaf_fn; the
-    docID-skipping _leapfrog does not depend on the similarity and
-    stays on.
+    tree's candidate-threaded skip reads do not depend on the
+    similarity and stay on.
 
     `prune_min`: the block-skip fast paths only pay off when the
     shard-local decode work is large — per-block skip reads carry
@@ -389,109 +404,11 @@ def _score_spec(
         if cost < prune_min:
             prune = False
 
-    # block-max impact pruning: BM25 bounds, bounded heap
-    blockmax = prune and k is not None and leaf_fn is None
-
-    def leaf(term: str, tf: np.ndarray, docs: np.ndarray) -> np.ndarray:
-        nrm, cch = _nc(term, norms_map, caches)
-        if leaf_fn is not None:
-            return leaf_fn(term, tf, nrm[docs - base], np.float32(1.0))
-        return bm25.score_term(tf, nrm[docs - base], idfs[term], cch)
-
-    def term_scores(term: str) -> tuple[np.ndarray, np.ndarray]:
-        d, t = lt.full(term)
-        return d, leaf(term, t, d)
-
-    def scores_at(term: str, d_src, t_src, docs: np.ndarray) -> np.ndarray:
-        """Per-doc scores for `docs` (must all exist in d_src)."""
-        return leaf(term, t_src[np.searchsorted(d_src, docs)], docs)
-
     kind = spec["kind"]
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float32")})
-
-    if kind == "term":
-        term = spec["terms"][0]
-        if term not in lt:
-            return empty
-        if blockmax:
-            nrm, cch = _nc(term, norms_map, caches)
-            docs, scores = _score_term_pruned(
-                pdf, term, base, nrm, idfs, cch, k, deleted,
-                codec=lt.codec, cursor=cursor,
-            )
-        else:
-            docs, scores = term_scores(term)
-            if deleted is not None and len(deleted):
-                m = ~np.isin(docs, deleted)
-                docs, scores = docs[m], scores[m]
-            docs, scores = _apply_cursor(
-                docs, scores.astype(np.float32), cursor
-            )
-            docs, scores = _topk_arrays(docs, scores, k)
-        return pd.DataFrame({"doc_id": docs, "score": scores.astype(np.float32)})
-
-    if kind == "reqopt":
-        must = spec["must"]
-        opts = spec["should"]
-        if any(t not in lt for t in must):
-            return empty
-        inter, src = _leapfrog(lt, must, prune)
-        inter = _alive(inter, deleted)
-        if len(inter) == 0:
-            return empty
-        req_scores = [scores_at(t, *src[t], inter) for t in must]
-        req = bm25.sum_bool(req_scores)  # f32(f64 sum)
-        opt64 = np.zeros(len(inter), np.float64)
-        for t in opts:
-            if t not in lt:
-                continue
-            d, tf = lt.decode_for(t, inter) if prune else lt.full(t)
-            if len(d) == 0:
-                continue
-            s = leaf(t, tf, d)
-            pos = np.searchsorted(d, inter)
-            pos = np.minimum(pos, len(d) - 1)
-            hit = d[pos] == inter
-            opt64[hit] += s[pos[hit]].astype(np.float64)
-        # ReqOptSumScorer.score(): float req + float opt
-        total = (req + opt64.astype(np.float32)).astype(np.float32)
-        inter, total = _apply_cursor(inter, total, cursor)
-        docs, scores = _topk_arrays(inter, total, k)
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    if kind == "phrase":
-        udocs, scores = _eval_phrase(
-            spec["terms"], lt, base, norms_map, idfs, caches,
-            deleted=deleted, slop=int(spec.get("slop", 0)),
-        )
-        udocs, scores = _apply_cursor(udocs, scores, cursor)
-        docs, scores = _topk_arrays(udocs, scores, k)
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    if kind == "multi_phrase":
-        udocs, scores = _eval_multi_phrase(
-            spec["positions"], lt, base, norms_map,
-            np.float32(spec["idf_sum"]), caches, deleted=deleted,
-        )
-        udocs, scores = _apply_cursor(udocs, scores, cursor)
-        docs, scores = _topk_arrays(udocs, scores, k)
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    if kind == "spans":
-        from lucene_solr_spark.search.spans import eval_spans
-
-        udocs, scores = eval_spans(
-            spec["node"], lt, base, norms_map, idfs, caches,
-            deleted=deleted,
-        )
-        udocs, scores = _apply_cursor(udocs, scores, cursor)
-        docs, scores = _topk_arrays(udocs, scores, k)
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
     if kind == "tree":
         node = spec["tree"]
-        if blockmax:
+        if prune and k is not None and leaf_fn is None:
+            # block-max impact pruning (BM25 bounds, bounded heap);
             # top-level shape routing (BooleanWeight.java:232-359):
             # bare term leaf -> block-max term; pure-SHOULD-of-terms
             # -> block-max WAND — boost folds into the leaf weight
@@ -520,93 +437,39 @@ def _score_spec(
                         cursor=cursor,
                     )
                     return pd.DataFrame({"doc_id": docs, "score": scores})
-        # nested BooleanQuery / boosts / constant-score; prune=True
-        # threads candidate sets down required-clause chains so term
-        # leaves block-skip (liveDocs applied at collection time)
+        # prune=True threads candidate sets down required-clause chains
+        # so term leaves block-skip; liveDocs apply at collection time,
+        # after per-doc accumulation (BulkScorer.score(collector,
+        # liveDocs) semantics)
         docs, scores = _eval_tree(
             node, lt, base, norms_map, idfs, caches, prune=prune,
-            leaf_fn=leaf_fn,
+            leaf_fn=leaf_fn, coord=coord,
         )
         if deleted is not None and len(deleted) and len(docs):
             m = ~np.isin(docs, deleted)
             docs, scores = docs[m], scores[m]
-        docs, scores = _apply_cursor(docs, scores, cursor)
-        docs, scores = _topk_arrays(docs, scores, k)
-        return pd.DataFrame({"doc_id": docs, "score": scores.astype(np.float32)})
+    elif kind == "phrase":
+        docs, scores = _eval_phrase(
+            spec["terms"], lt, base, norms_map, idfs, caches,
+            deleted=deleted, slop=int(spec.get("slop", 0)),
+        )
+    elif kind == "multi_phrase":
+        docs, scores = _eval_multi_phrase(
+            spec["positions"], lt, base, norms_map,
+            np.float32(spec["idf_sum"]), caches, deleted=deleted,
+        )
+    elif kind == "spans":
+        from lucene_solr_spark.search.spans import eval_spans
 
-    present = [t for t in spec["terms"] if t in lt]
-    if kind in ("and", "not"):
-        must = [t for t in (spec.get("must") or spec["terms"])]
-        if any(t not in lt for t in must):
-            return empty
-        inter, src = _leapfrog(lt, must, prune)
-        if kind == "not" and len(inter):
-            for t in spec["must_not"]:
-                if t in lt:
-                    d, _ = lt.decode_for(t, inter) if prune else lt.full(t)
-                    inter = inter[~np.isin(inter, d, assume_unique=True)]
-        inter = _alive(inter, deleted)
-        if len(inter) == 0:
-            return empty
-        # sum in `must` (query clause) order so pruned == unpruned bitwise
-        clause_scores = [scores_at(t, *src[t], inter) for t in must]
-        total = bm25.sum_bool(clause_scores)
-        inter, total = _apply_cursor(inter, total, cursor)
-        docs, scores = _topk_arrays(inter, total, k)
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    if kind in ("or", "dismax"):
-        if not present:
-            return empty
-        msm = spec.get("min_should_match", 1)
-        if blockmax and kind == "or" and msm <= 1 and len(present) > 1:
-            docs, scores = _score_or_wand(
-                lt, present, base, norms_map, idfs, caches, k, deleted,
-                cursor=cursor,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-        # Accumulate over the UNFILTERED union (each term's doc array may
-        # contain tombstoned docs; scattering into a liveDocs-filtered
-        # union would misalign positions). liveDocs apply at collection
-        # time, after per-doc accumulation — exactly BulkScorer
-        # .score(collector, liveDocs) semantics.
-        union = reduce(np.union1d, [lt.full(t)[0] for t in present])
-        # OR sums sub-scores in DOUBLE (DisjunctionSumScorer.java:44-48);
-        # DISMAX accumulates in FLOAT (DisjunctionMaxScorer.java:
-        # `float scoreSum/scoreMax`), clause order = sorted terms here.
-        acc64 = np.zeros(len(union), np.float64)
-        acc32 = np.zeros(len(union), np.float32)
-        mx = np.full(len(union), -np.inf, np.float32)
-        nmatch = np.zeros(len(union), np.int32)
-        for t in present:
-            d, s = term_scores(t)
-            pos = np.searchsorted(union, d)
-            acc64[pos] += s.astype(np.float64)
-            acc32[pos] += s
-            np.maximum.at(mx, pos, s)
-            nmatch[pos] += 1
-        if kind == "dismax":
-            tie = np.float32(spec.get("tie", 0.0))
-            total = (mx + (acc32 - mx) * tie).astype(np.float32)
-        else:
-            total = acc64.astype(np.float32)
-            if coord:  # ClassicSimilarity.coord = overlap / maxOverlap
-                max_overlap = np.float32(len(spec["terms"]))
-                coords = nmatch.astype(np.float32) / max_overlap
-                total = (total * coords).astype(np.float32)
-        if deleted is not None and len(deleted):
-            live = ~np.isin(union, deleted)
-            union, total, nmatch = union[live], total[live], nmatch[live]
-        if msm > 1:
-            keep = nmatch >= msm
-            union, total = union[keep], total[keep]
-        union, total = _apply_cursor(union, total, cursor)
-        if len(union) == 0:
-            return empty
-        docs, scores = _topk_arrays(union, total, k)
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    raise ValueError(f"unknown query kind {kind}")
+        docs, scores = eval_spans(
+            spec["node"], lt, base, norms_map, idfs, caches,
+            deleted=deleted,
+        )
+    else:
+        raise ValueError(f"unknown query kind {kind}")
+    docs, scores = _apply_cursor(docs, scores, cursor)
+    docs, scores = _topk_arrays(docs, scores, k)
+    return pd.DataFrame({"doc_id": docs, "score": scores.astype(np.float32)})
 
 
 def _sloppy_freq(pos_lists: list[list[int]], slop: int) -> float:
@@ -944,6 +807,7 @@ def _eval_tree(
     prune: bool = False,
     cand: np.ndarray | None = None,
     leaf_fn=None,
+    coord: bool = False,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Recursive nested-query evaluation -> (sorted docs, f32 scores).
 
@@ -967,7 +831,12 @@ def _eval_tree(
     cand it passed down, so spill never reaches the output (top-level
     cand is None => exact full results). Score ACCUMULATION stays in
     clause order regardless of evaluation order, so pruned output is
-    bitwise identical to exhaustive (tested)."""
+    bitwise identical to exhaustive (tested).
+
+    `coord=True` (ClassicSimilarity.coord, only for THIS node — the
+    classic family accepts flat term/and/or queries, so only a root
+    disjunction carries it): a pure disjunction's f32 sum is multiplied
+    by f32(matching clauses) / f32(SHOULD clauses), then cast to f32."""
     E = (np.empty(0, np.int64), np.empty(0, np.float32))
     boost = np.float32(np.float32(pboost) * np.float32(node.get("boost", 1.0)))
     kind = node["kind"]
@@ -1201,6 +1070,10 @@ def _eval_tree(
         union, total = union[keep], acc64[keep].astype(np.float32)
         if len(union) == 0:
             return E
+        if coord:
+            n_should = sum(occ == "SHOULD" for occ, _ in clauses)
+            overlap = nmatch[keep].astype(np.float32) / np.float32(n_should)
+            total = (total * overlap).astype(np.float32)
         return union, total
 
     raise ValueError(f"unknown tree node kind {kind}")
@@ -1214,7 +1087,7 @@ def _explain_node(
     idfs: dict,
     caches: dict,
     doc_local: int,
-    max_doc: int,
+    leaf_stats: dict,
     pboost: float = 1.0,
 ) -> dict:
     """Recursive Explanation tree for ONE doc (IndexSearcher.java:
@@ -1222,8 +1095,11 @@ def _explain_node(
     (match, score) comes from the SAME kernel the search runs
     (_eval_tree with the identical boost cascade), so the root score is
     bitwise the search score; term leaves add the BM25 decomposition
-    (df, f32 idf, tf, norm byte, norm cache — BM25Similarity.explain:
-    244-268)."""
+    (field, global df and f32 idf, weightValue = f32 idf*boost*(k1+1),
+    tf, norm byte, norm cache, avgdl — BM25Similarity.explain:244-268).
+    `leaf_stats` maps each term to its driver-side {field, df, idf,
+    avgdl} (the TermStates pull), so a leaf absent from the doc's
+    shard still reports the global statistics."""
     d, s = _eval_tree(
         node, lt, base, norms_map, idfs, caches, pboost, prune=False
     )
@@ -1241,9 +1117,11 @@ def _explain_node(
     if kind == "term":
         t = node["term"]
         out["term"] = t
-        out["df"] = int(lt.dfs.get(t, 0))
-        out["idf"] = float(idfs.get(t, np.float32(0.0)))
+        out.update(leaf_stats[t])
         out["boost"] = float(boost)
+        out["weight_value"] = float(
+            (np.float32(out["idf"]) * boost) * (np.float32(K1) + np.float32(1.0))
+        )
         out["tf"] = lt.tf_at(t, doc_local)
         nrm, cch = _nc(t, norms_map, caches)
         nb = int(nrm[doc_local - base]) if 0 <= doc_local - base < len(nrm) else 0
@@ -1270,7 +1148,7 @@ def _explain_node(
         out["description"] = "constant score over wrapped matches"
         out["details"] = [
             _explain_node(node["query"], lt, base, norms_map, idfs,
-                          caches, doc_local, max_doc, 1.0)
+                          caches, doc_local, leaf_stats, 1.0)
         ]
     elif kind == "spans":
         from lucene_solr_spark.search.spans import span_all_terms
@@ -1286,7 +1164,7 @@ def _explain_node(
         out["description"] = "max(sub) + tie*(sum-max) (DisjunctionMax)"
         out["details"] = [
             _explain_node(sub, lt, base, norms_map, idfs, caches,
-                          doc_local, max_doc, boost)
+                          doc_local, leaf_stats, boost)
             for sub in node["clauses"]
         ]
     elif kind == "bool":
@@ -1299,7 +1177,7 @@ def _explain_node(
             {
                 "occur": occ,
                 **_explain_node(sub, lt, base, norms_map, idfs, caches,
-                                doc_local, max_doc, boost),
+                                doc_local, leaf_stats, boost),
             }
             for occ, sub in node["clauses"]
         ]
@@ -1440,45 +1318,6 @@ def _mtq_cond(q, field_prefix: str = ""):
         for ch in q.pattern
     ) + "$"
     return F.col("term").rlike(regex) & scope
-
-
-def _prune_eligible(spec: dict, k: int | None, prune: bool) -> bool:
-    """Gate for the block-skip fast paths (leapfrog AND / block-max
-    WAND OR / block-max term). Every eligible kind dispatches to an
-    output-identical pruned kernel inside _score_spec; kinds without a
-    pruned kernel (dismax, msm>1, phrase) fall back internally, so the
-    gate is simply `prune` for every multi-term kind. A single term
-    additionally needs a bounded k (block-max needs a heap floor)."""
-    if not prune:
-        return False
-    if spec["kind"] == "term":
-        return k is not None
-    return True
-
-
-def _leapfrog(lt: _LazyTerms, must: list[str], prune: bool):
-    """Cost-sorted skip intersection (ConjunctionDISI.java:84-133).
-
-    Lead = globally-rarest term (df_total); every other term decodes
-    ONLY the 128-blocks overlapping the shrinking candidate set, using
-    the per-block last-docID skip entries. Returns (inter, src) where
-    src[t] = (docs, tfs) arrays guaranteed to contain every inter doc."""
-    order = sorted(must, key=lambda t: (lt.dfs[t], t)) if prune else list(must)
-    src: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    lead = order[0]
-    d0, t0 = lt.full(lead)
-    src[lead] = (d0, t0)
-    inter = d0
-    for t in order[1:]:
-        if t in src:
-            continue
-        if len(inter) == 0:
-            src[t] = lt.full(t) if not prune else (np.empty(0, np.int64),) * 2
-            continue
-        d, tf = lt.decode_for(t, inter) if prune else lt.full(t)
-        src[t] = (d, tf)
-        inter = inter[np.isin(inter, d, assume_unique=True)]
-    return inter, src
 
 
 def _score_or_wand(lt: _LazyTerms, present, base, norms_map, idfs, caches,
@@ -2357,29 +2196,10 @@ class IndexSearcher:
                 "node": node,
                 "terms": list(dict.fromkeys(span_all_terms(node))),
             }
-        if isinstance(q, (BooleanQuery, BoostQuery, ConstantScoreQuery,
-                          DisMaxQuery, MatchAllDocsQuery)):
+        if isinstance(q, _FLAT_QUERIES + _NESTED_QUERIES + (
+                BooleanNot, BooleanMustShould, DisjunctionMax)):
             tree = self._tree(q)
             return {"kind": "tree", "tree": tree, "terms": _tree_terms(tree)}
-        if isinstance(q, TermQuery):
-            return {"kind": "term", "terms": [self._iterm(q.field, q.term)]}
-        if isinstance(q, BooleanAnd):
-            return {"kind": "and", "terms": list(q.must), "must": list(q.must)}
-        if isinstance(q, BooleanNot):
-            return {
-                "kind": "not",
-                "terms": list(q.must) + list(q.must_not),
-                "must": list(q.must),
-                "must_not": list(q.must_not),
-            }
-        if isinstance(q, BooleanOr):
-            return {
-                "kind": "or",
-                "terms": list(q.should),
-                "min_should_match": q.min_should_match,
-            }
-        if isinstance(q, DisjunctionMax):
-            return {"kind": "dismax", "terms": list(q.should), "tie": q.tie}
         if isinstance(q, PhraseQuery):
             return {
                 "kind": "phrase",
@@ -2407,13 +2227,6 @@ class IndexSearcher:
                 "positions": positions,
                 "terms": [t for p in positions for t in p],
                 "idf_sum": float(idf_sum),
-            }
-        if isinstance(q, BooleanMustShould):
-            return {
-                "kind": "reqopt",
-                "terms": list(q.must) + list(q.should),
-                "must": list(q.must),
-                "should": list(q.should),
             }
         raise TypeError(f"unsupported query {q!r}")
 
@@ -2606,7 +2419,6 @@ class IndexSearcher:
         )
         caches = dict(self._caches)
         max_doc = self.max_doc
-        use_prune = _prune_eligible(spec, k, prune)
         prune_min = self.prune_min
         ov = df_override or {}
 
@@ -2619,7 +2431,7 @@ class IndexSearcher:
                 None if cursor is None else (cursor[0], cursor[1] - off)
             )
             return _score_spec(
-                left, decoded, spec, idfs, caches, k, use_prune, deleted,
+                left, decoded, spec, idfs, caches, k, prune, deleted,
                 prune_min, cursor=cur_local, leaf_fn=leaf_fn, coord=coord,
             )
 
@@ -2659,19 +2471,24 @@ class IndexSearcher:
         shard was exhausted. Scores are bitwise the normal engine's
         (same f32 per-term kernels, f64 boolean accumulation).
 
-        Flat term/and/or kinds (the shapes Solr's collector wraps in
-        practice); deleted docs never consume budget (the delegate
-        only sees live docs)."""
+        Term / BooleanAnd / BooleanOr queries (the shapes Solr's
+        collector wraps in practice): the match set is collected first
+        — a term is a one-clause AND, an AND the np.intersect1d reduce
+        of its clauses' doc lists, an OR their union filtered to
+        min_should_match — then only the collected docs are scored.
+        Deleted docs never consume budget (the delegate only sees live
+        docs)."""
         if max_docs_per_shard <= 0:
             raise ValueError("max_docs_per_shard must be > 0")
-        spec = self._spec(rewrite(query))
-        kind = spec["kind"]
-        if kind not in ("term", "and", "or"):
+        q = rewrite(query)
+        spec = self._spec(q)
+        if not isinstance(q, _FLAT_QUERIES):
             raise ValueError(
                 "early-terminated collection supports term/and/or queries"
             )
-        clause_terms = list(spec["terms"])  # == must for "and"
-        msm = int(spec.get("min_should_match", 1)) if kind == "or" else 1
+        clause_terms = list(spec["terms"])  # clause order
+        disj = isinstance(q, BooleanOr)
+        msm = int(q.min_should_match) if disj else 1
         caches = dict(self._caches)
         max_doc = self.max_doc
         budget = int(max_docs_per_shard)
@@ -2682,15 +2499,12 @@ class IndexSearcher:
             shard = int(left["shard"].iloc[0])
             # match set in docID order (the collect order of the
             # reference's leaf walk)
-            if kind == "term":
-                t = clause_terms[0]
-                if t not in lt:
-                    return None
-                docs = lt.full(t)[0]
-            elif kind == "and":
+            if not disj:
                 if any(t not in lt for t in clause_terms):
                     return None
-                docs, _src = _leapfrog(lt, clause_terms, False)
+                docs = reduce(
+                    np.intersect1d, [lt.full(t)[0] for t in clause_terms]
+                )
             else:
                 present = [t for t in clause_terms if t in lt]
                 if len(present) < msm:
@@ -3159,43 +2973,44 @@ class IndexSearcher:
 
     def _sim_weights(self, query: Query, sim: _Similarity, name: str,
                      trees: bool):
-        """Driver half of a similarity query: the spec, checked against
-        the kinds the similarity accepts, and its per-term (leaf,
-        explain stats) from the TermStates cache (BasicStats fill at
-        createWeight time)."""
-        spec = self._spec(rewrite(query))
-        kind = spec["kind"]
-        if kind not in ("term", "and", "or") and not (
-            trees and kind == "tree"
-        ):
+        """Driver half of a similarity query: the rewritten query and its
+        spec, checked against the query classes the similarity accepts
+        (Term / BooleanAnd / BooleanOr, plus nested boolean trees when
+        `trees`), its per-term (leaf, explain stats) from the TermStates
+        cache (BasicStats fill at createWeight time), and the
+        `leaf_fn(term, tf, norm_bytes, boost)` _eval_tree plugs in."""
+        q = rewrite(query)
+        spec = self._spec(q)
+        if not isinstance(q, _FLAT_QUERIES + (_NESTED_QUERIES if trees else ())):
             raise ValueError(
                 f"{name} supports term/and/or and nested boolean queries"
                 if trees else f"{name} supports term/and/or queries"
             )
-        terms = list(spec["terms"])  # clause order (== must for "and")
+        terms = list(spec["terms"])  # clause order
         if any(FIELD_SEP in t for t in terms):
             raise ValueError(f"{name} supports the default field only")
-        if kind == "tree" and _tree_has_phrase(spec["tree"]):
+        if _tree_has_phrase(spec["tree"]):
             # SimilarityBase phrase stats need MultiStats averaging
             raise ValueError(
                 "phrase leaves are BM25-only (pluggable-similarity "
                 "trees support term/const/dismax/bool nodes)"
             )
-        return spec, sim.weigh(terms, self._term_states(terms))
-
-    def _search_similarity(
-        self, query: Query, k: int | None, sim: _Similarity, name: str
-    ) -> DataFrame:
-        """search() under a non-BM25 similarity: the same spec, seam and
-        kernels (leapfrog AND, min_should_match, liveDocs, nested
-        trees), with the similarity's leaf scorer and coord policy
-        plugged into _score_spec."""
-        spec, weights = self._sim_weights(query, sim, name, sim.trees)
+        weights = sim.weigh(terms, self._term_states(terms))
         leaves = {t: w[0] for t, w in weights.items()}
 
         def leaf_fn(t, tf, nb, boost):
             return leaves[t](tf, nb, float(boost))
 
+        return q, spec, weights, leaf_fn
+
+    def _search_similarity(
+        self, query: Query, k: int | None, sim: _Similarity, name: str
+    ) -> DataFrame:
+        """search() under a non-BM25 similarity: the same spec, seam and
+        kernels (candidate-threaded AND, min_should_match, liveDocs,
+        nested trees), with the similarity's leaf scorer and coord
+        policy plugged into _score_spec."""
+        _q, spec, _w, leaf_fn = self._sim_weights(query, sim, name, sim.trees)
         return self._search_spec(spec, k, leaf_fn=leaf_fn, coord=sim.coord)
 
     def explain_classic(self, query: Query, doc_id: int) -> dict:
@@ -3252,13 +3067,16 @@ class IndexSearcher:
     def _explain_similarity(
         self, query: Query, doc_id: int, sim: _Similarity, name: str
     ) -> dict:
-        """Flat term/and/or explain under a non-BM25 similarity: per-term
-        tf, norm byte + its decode, the similarity's stats and the leaf
-        score; the root recomposes _score_spec's chain (f64 sum of f32
-        leaves, one f32 cast, coord on disjunctions, min_should_match),
-        so `score` is bitwise the search score."""
-        spec, weights = self._sim_weights(query, sim, name, trees=False)
-        kind = spec["kind"]
+        """Term/and/or explain under a non-BM25 similarity: per-term tf,
+        norm byte + its decode, the similarity's stats and the leaf
+        score; the root `score` is the doc's entry in the same
+        _eval_tree evaluation search runs (same leaves, coord,
+        min_should_match), so it is bitwise the search score."""
+        q, spec, weights, leaf_fn = self._sim_weights(
+            query, sim, name, trees=False
+        )
+        kind = ("or" if isinstance(q, BooleanOr)
+                else "and" if isinstance(q, BooleanAnd) else "term")
         clause_terms = list(spec["terms"])
         no = {"doc_id": int(doc_id), "match": False, "score": 0.0,
               **sim.head, "terms": []}
@@ -3271,7 +3089,7 @@ class IndexSearcher:
             return {**no, "description": "no query term in this shard"}
         nb = np.array([norms_map[""][local - base]], np.uint8)
         norm_key, decode = sim.norm
-        nodes, acc, overlap = [], np.float64(0.0), 0
+        nodes, overlap = [], 0
         for t in clause_terms:
             leaf, stats = weights[t]
             tf = lt.tf_at(t, local)
@@ -3279,25 +3097,24 @@ class IndexSearcher:
                     norm_key: float(decode[nb[0]]), **stats,
                     "leaf_score": 0.0}
             if tf > 0:
-                s = leaf(np.array([tf]), nb)
-                node["leaf_score"] = float(s[0])
-                acc += np.float64(s[0])
+                node["leaf_score"] = float(leaf(np.array([tf]), nb)[0])
                 overlap += 1
             nodes.append(node)
-        if kind == "and":
-            hit = overlap == len(clause_terms)
-        else:
-            hit = overlap >= max(int(spec.get("min_should_match", 1)), 1)
+        d, s = _eval_tree(
+            spec["tree"], lt, base, norms_map, {}, dict(self._caches),
+            leaf_fn=leaf_fn, coord=sim.coord,
+        )
+        p = int(np.searchsorted(d, local))
+        hit = p < len(d) and d[p] == local
         coord = np.float32(1.0)
         if sim.coord and kind == "or":
             coord = np.float32(
                 np.float32(overlap) / np.float32(len(clause_terms))
             )
-        total = np.float32(np.float32(acc) * coord)
         return {
             "doc_id": int(doc_id),
             "match": bool(hit),
-            "score": float(total) if hit else 0.0,
+            "score": float(s[p]) if hit else 0.0,
             **sim.head,
             "kind": kind,
             "coord": float(coord),
@@ -3329,8 +3146,8 @@ class IndexSearcher:
             outs = []
             for qid, spec in specs.items():
                 r = _score_spec(
-                    left, decoded, spec, idfs, caches, k,
-                    _prune_eligible(spec, k, prune), deleted, prune_min,
+                    left, decoded, spec, idfs, caches, k, prune, deleted,
+                    prune_min,
                 )
                 r.insert(0, "qid", qid)
                 outs.append(r)
@@ -3792,25 +3609,21 @@ class IndexSearcher:
 
     def explain(self, query: Query, doc_id: int) -> dict:
         """IndexSearcher.explain analog (IndexSearcher.java:561-588,
-        BM25Similarity.explain:244-268): decompose `doc_id`'s score
-        for `query` into per-term Explanation nodes — df, f32 idf,
-        boost-folded weightValue, tf, norm byte, the norm cache value,
-        and the leaf f32 score — plus the boolean composition, using
-        the SAME kernels as search (the returned `score` is bitwise
-        the search score). Nested tree and phrase kinds recurse
-        clause-by-clause through _explain_node (which evaluates every
-        sub-node with the identical _eval_tree kernel and boost
-        cascade — IndexSearcher.java:561-588); multi_phrase explains
-        as one leaf via _eval_multi_phrase; span queries explain as
-        one leaf via eval_spans (node tree, scoring terms, idf sum).
-        Slow path by design: decodes just the (term, shard-of-doc)
-        posting rows."""
-        from lucene_solr_spark.index.codec import decode_posting_list
-
-        q = rewrite(query)
-        spec = self._spec(q)
+        BM25Similarity.explain:244-268): decompose `doc_id`'s score for
+        `query` with the SAME kernels as search, so the returned `score`
+        is bitwise the search score. `details` is always `[root]`:
+        every boolean shape (term, AND, OR, NOT, req+opt, dismax,
+        nested trees) and phrase recurses clause-by-clause through
+        _explain_node (each sub-node evaluated by the identical
+        _eval_tree kernel and boost cascade), down to term leaves with
+        field, global df, f32 idf, boost-folded weightValue, tf, norm
+        byte, norm cache, avgdl and leaf score; multi_phrase explains
+        as one leaf via _eval_multi_phrase; span queries as one leaf
+        via eval_spans (node tree, scoring terms, idf sum). Slow path
+        by design: decodes just the (term, shard-of-doc) posting
+        rows."""
+        spec = self._spec(rewrite(query))
         kind = spec["kind"]
-        terms = list(dict.fromkeys(spec["terms"]))
 
         at = self._locate(doc_id)
         if isinstance(at, str):
@@ -3818,205 +3631,94 @@ class IndexSearcher:
                     "description": at}
         dm, shard, local = at
 
-        if kind in ("tree", "phrase", "multi_phrase", "spans"):
-            _base, norms_map, lt, dfs, _ = self._decode_doc_shard(
-                spec, shard
+        _base, norms_map, lt, dfs, _ = self._decode_doc_shard(spec, shard)
+        # the kernels see the shard's terms only, as in search
+        idfs = {t: bm25.idf(d, self.max_doc) for t, d in dfs.items()}
+        if kind == "spans":
+            from lucene_solr_spark.search.spans import (
+                _resolve,
+                _scoring_terms,
+                eval_spans,
             )
-            idfs = {
-                t: bm25.idf(d, self.max_doc) for t, d in dfs.items()
-            }
-            if kind == "spans":
-                from lucene_solr_spark.search.spans import (
-                    _resolve,
-                    _scoring_terms,
-                    eval_spans,
-                )
 
-                d, s = eval_spans(
-                    spec["node"], lt, _base, norms_map, idfs,
-                    dict(self._caches),
-                )
-                p = int(np.searchsorted(d, local))
-                hit = p < len(d) and d[p] == local
-                resolved = _resolve(spec["node"], lt)
-                sterms = (
-                    sorted(set(_scoring_terms(resolved)))
-                    if resolved is not None else []
-                )
-                idf_sum = np.float32(0.0)
-                for t in sterms:
-                    if t in idfs:
-                        idf_sum = np.float32(idf_sum + idfs[t])
-                root = {
-                    "kind": "spans",
-                    "match": bool(hit),
-                    "score": float(s[p]) if hit else 0.0,
-                    "node": spec["node"],
-                    "scoring_terms": sterms,
-                    "idf_sum": float(idf_sum),
-                    "description": (
-                        "spans: freq = sum of slop factors 1/(1+width) "
-                        "over the enumerated spans (SpanScorer), idf = "
-                        "f32 sum over the scoring terms (exclude sides "
-                        "never score)"
-                    ),
-                }
-            elif kind == "multi_phrase":
-                d, s = _eval_multi_phrase(
-                    spec["positions"], lt, _base, norms_map,
-                    np.float32(spec["idf_sum"]), dict(self._caches),
-                )
-                p = int(np.searchsorted(d, local))
-                hit = p < len(d) and d[p] == local
-                root = {
-                    "kind": "multi_phrase",
-                    "match": bool(hit),
-                    "score": float(s[p]) if hit else 0.0,
-                    "positions": [list(a) for a in spec["positions"]],
-                    "idf_sum": float(spec["idf_sum"]),
-                    "description": (
-                        "multi-phrase: BM25 over matching start "
-                        "positions, idf = f32 sum over indexed terms"
-                    ),
-                }
-            else:
-                node = (
-                    spec["tree"]
-                    if kind == "tree"
-                    else {"kind": "phrase", "terms": spec["terms"],
-                          "slop": spec.get("slop", 0)}
-                )
-                root = _explain_node(
-                    node, lt, _base, norms_map, idfs, dict(self._caches),
-                    local, self.max_doc,
-                )
-            return {
-                "doc_id": int(doc_id),
-                "match": root["match"],
-                "score": root["score"],
-                "description": root.get("description", kind),
-                "doc_len": int(dm.doc_len),
-                "details": [root],
-            }
-
-        def fld(t: str) -> str:
-            i = t.find(FIELD_SEP)
-            return self._default_field if i < 0 else t[:i]
-
-        dfs = self.term_dfs(terms)
-        fields = sorted({fld(t) for t in terms})
-        # per-field norm byte of the doc (Lucene53 norms read)
-        norm_bytes: dict[str, int] = {}
-        for r in self._norms.where(F.col("shard") == shard).collect():
-            f = r.field if r.field is not None else self._default_field
-            if f in fields and r.norms is not None:
-                arr = np.frombuffer(bytes(r.norms), np.uint8)
-                i = local - int(r.base)
-                if 0 <= i < len(arr):
-                    norm_bytes[f] = int(arr[i])
-        norm_bytes.setdefault(self._default_field, int(dm.norm))
-        # tf of each term at the doc (skip-seek analog, driver-side)
-        tfs: dict[str, int] = {}
-        for r in (
-            self._postings.where(
-                F.col("term").isin(terms) & (F.col("shard") == shard)
-            )
-            .select("term", "df", "doc_enc", "tf_enc")
-            .collect()
-        ):
-            d, t = decode_posting_list(
-                bytes(r.doc_enc), bytes(r.tf_enc), int(r.df),
-                codec=self._codec,
+            d, s = eval_spans(
+                spec["node"], lt, _base, norms_map, idfs,
+                dict(self._caches),
             )
             p = int(np.searchsorted(d, local))
-            if p < len(d) and d[p] == local:
-                tfs[r.term] = tfs.get(r.term, 0) + int(t[p])
-
-        details = []
-        leaf: dict[str, np.float32] = {}
-        for t in terms:
-            f = fld(t)
-            key = "" if f == self._default_field else f
-            cache = self._caches[key]
-            nb = norm_bytes.get(f, 0)
-            df = int(dfs.get(t, 0))
-            idf = bm25.idf(df, self.max_doc) if df else np.float32(0.0)
-            tf = int(tfs.get(t, 0))
-            wv = (np.float32(idf) * np.float32(1.0)) * (
-                np.float32(K1) + np.float32(1.0)
+            hit = p < len(d) and d[p] == local
+            resolved = _resolve(spec["node"], lt)
+            sterms = (
+                sorted(set(_scoring_terms(resolved)))
+                if resolved is not None else []
             )
-            sc = (
-                bm25.score_term(
-                    np.array([tf], np.int64),
-                    np.array([nb], np.uint8), idf, cache,
-                )[0]
-                if tf
-                else np.float32(0.0)
+            idf_sum = np.float32(0.0)
+            for t in sterms:
+                if t in idfs:
+                    idf_sum = np.float32(idf_sum + idfs[t])
+            root = {
+                "kind": "spans",
+                "match": bool(hit),
+                "score": float(s[p]) if hit else 0.0,
+                "node": spec["node"],
+                "scoring_terms": sterms,
+                "idf_sum": float(idf_sum),
+                "description": (
+                    "spans: freq = sum of slop factors 1/(1+width) "
+                    "over the enumerated spans (SpanScorer), idf = "
+                    "f32 sum over the scoring terms (exclude sides "
+                    "never score)"
+                ),
+            }
+        elif kind == "multi_phrase":
+            d, s = _eval_multi_phrase(
+                spec["positions"], lt, _base, norms_map,
+                np.float32(spec["idf_sum"]), dict(self._caches),
             )
-            leaf[t] = sc
-            details.append({
-                "term": t, "field": f, "match": tf > 0, "df": df,
-                "idf": float(idf), "tf": tf, "norm_byte": nb,
-                "norm_cache": float(cache[nb]),
-                "avgdl": float(bm25.avgdl(
-                    int(self._field_stats[f]), self.max_doc)),
-                "weight_value": float(wv), "score": float(sc),
-            })
-
-        def fsum(ts) -> np.float32:
-            return bm25.sum_bool([np.array([leaf[t]]) for t in ts])[0] \
-                if ts else np.float32(0.0)
-
-        matched = [t for t in terms if tfs.get(t, 0) > 0]
-        match, score, desc = False, np.float32(0.0), ""
-        if kind == "term":
-            t = terms[0]
-            match = t in matched
-            score = leaf[t] if match else np.float32(0.0)
-            desc = "weight(term)"
-        elif kind == "and":
-            must = spec["must"]
-            match = all(t in matched for t in must)
-            score = fsum(must) if match else np.float32(0.0)
-            desc = "sum of (all MUST match):"
-        elif kind == "not":
-            must, mn = spec["must"], spec["must_not"]
-            match = all(t in matched for t in must) and not any(
-                t in matched for t in mn
-            )
-            score = fsum(must) if match else np.float32(0.0)
-            desc = "sum of MUST (MUST_NOT excluded):"
-        elif kind == "or":
-            msm = spec.get("min_should_match", 1)
-            hit = [t for t in terms if t in matched]
-            match = len(hit) >= max(msm, 1)
-            score = fsum(hit) if match else np.float32(0.0)
-            desc = f"sum of matching SHOULD (msm={msm}):"
-        elif kind == "reqopt":
-            must, should = spec["must"], spec["should"]
-            match = all(t in matched for t in must)
-            if match:
-                req = fsum(must)
-                opt = fsum([t for t in should if t in matched])
-                score = np.float32(req + opt)
-            desc = "req + matching opt (ReqOptSumScorer):"
-        elif kind == "dismax":
-            hit = [t for t in terms if t in matched]
-            match = bool(hit)
-            if match:
-                mx = np.float32(max(leaf[t] for t in hit))
-                acc = np.float32(0.0)
-                for t in hit:
-                    acc = np.float32(acc + leaf[t])
-                tie = np.float32(spec.get("tie", 0.0))
-                score = np.float32(mx + np.float32(acc - mx) * tie)
-            desc = "max plus tie-scaled others (DisjunctionMax):"
+            p = int(np.searchsorted(d, local))
+            hit = p < len(d) and d[p] == local
+            root = {
+                "kind": "multi_phrase",
+                "match": bool(hit),
+                "score": float(s[p]) if hit else 0.0,
+                "positions": [list(a) for a in spec["positions"]],
+                "idf_sum": float(spec["idf_sum"]),
+                "description": (
+                    "multi-phrase: BM25 over matching start "
+                    "positions, idf = f32 sum over indexed terms"
+                ),
+            }
         else:
-            raise NotImplementedError(kind)
+            node = (
+                spec["tree"]
+                if kind == "tree"
+                else {"kind": "phrase", "terms": spec["terms"],
+                      "slop": spec.get("slop", 0)}
+            )
+            # leaf statistics from the driver's TermStates cache, so a
+            # leaf absent from this shard still reports its global df
+            gdfs = self.term_dfs(sorted(set(spec["terms"])))
+            leaf_stats = {}
+            for t, df in gdfs.items():
+                f = _field_key(t) or self._default_field
+                leaf_stats[t] = {
+                    "field": f,
+                    "df": int(df),
+                    "idf": float(bm25.idf(df, self.max_doc)) if df else 0.0,
+                    "avgdl": float(bm25.avgdl(
+                        int(self._field_stats[f]), self.max_doc)),
+                }
+            root = _explain_node(
+                node, lt, _base, norms_map, idfs, dict(self._caches),
+                local, leaf_stats,
+            )
         return {
-            "doc_id": int(doc_id), "match": bool(match),
-            "score": float(np.float32(score)), "description": desc,
-            "doc_len": int(dm.doc_len), "details": details,
+            "doc_id": int(doc_id),
+            "match": root["match"],
+            "score": root["score"],
+            "description": root.get("description", kind),
+            "doc_len": int(dm.doc_len),
+            "details": [root],
         }
 
     def diversified_topk(

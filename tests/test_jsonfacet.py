@@ -134,6 +134,33 @@ def test_errors(docs):
         json_facet(docs)
 
 
+def test_negative_limit_is_unlimited(docs):
+    """limit < 0 keeps every bucket (FacetField.java:562), at the root
+    and per parent bucket."""
+    from lucene_solr_spark.search.jsonfacet import json_facet
+
+    req = {"type": "terms", "field": "lang", "limit": -1,
+           "facet": {"srcs": {"type": "terms", "field": "source",
+                              "limit": -1}}}
+    got = _rows(json_facet(docs, req))
+    assert {bp for f, bp in got if f == "facet"} == {"en", "de", "fr"}
+    assert {bp for f, bp in got if f == "facet.srcs"} == {
+        "en|a", "en|b", "en|c", "de|a", "de|b", "fr|c",
+    }
+    assert got[("facet", "en")].asDict()["count"] == 5
+
+
+@pytest.mark.parametrize("alias", ["count", "facet", "bucket_path"])
+def test_reserved_stat_alias_rejected(docs, alias):
+    """A stat named like an output column of the bucket table fails at
+    parse time, naming the alias."""
+    from lucene_solr_spark.search.jsonfacet import json_facet
+
+    with pytest.raises(ValueError, match=f"stat alias '{alias}'"):
+        json_facet(docs, {"type": "terms", "field": "lang",
+                          "facet": {alias: "sum(n)"}})
+
+
 def test_mincount_prefix_missing_allbuckets(spark):
     from lucene_solr_spark.search.jsonfacet import json_facet
 

@@ -344,3 +344,63 @@ def test_similarity_min_should_match(lm_index, sim):
         assert np.float32(ex["score"]) == np.float32(r.score)
     ex4 = getattr(lm_index, explain)(q, 4, **ekw)
     assert ex4["match"] is False and ex4["score"] == 0.0
+
+
+# entry point -> (call, its ValueError message for a query it rejects)
+ENTRY_POINTS = {
+    "search_classic": (
+        lambda s, q: s.search_classic(q, k=5),
+        "search_classic supports term/and/or queries",
+    ),
+    "search_lm": (
+        lambda s, q: s.search_lm(q, k=5),
+        "search_lm supports term/and/or and nested boolean queries",
+    ),
+    "early_terminated_frame": (
+        lambda s, q: s.early_terminated_frame(q, 3),
+        "early-terminated collection supports term/and/or queries",
+    ),
+}
+
+
+def _shape(name):
+    from lucene_solr_spark.search.parser import parse_query
+    from lucene_solr_spark.search.query import (BooleanAnd,
+                                                BooleanMustShould,
+                                                BooleanNot, BooleanOr,
+                                                DisjunctionMax, PhraseQuery,
+                                                TermQuery)
+
+    return {
+        "term": TermQuery("table"),
+        "and": BooleanAnd(("table", "scan")),
+        "or": BooleanOr(("table", "scan")),
+        "not": BooleanNot(("table",), ("scan",)),
+        "reqopt": BooleanMustShould(("table",), ("scan",)),
+        "dismax": DisjunctionMax(("table", "scan"), tie=0.1),
+        "phrase": PhraseQuery(("table", "scan")),
+        "nested": parse_query("+table (scan merge)"),
+    }[name]
+
+
+@pytest.mark.parametrize("entry", sorted(ENTRY_POINTS))
+@pytest.mark.parametrize(
+    "shape",
+    ["term", "and", "or", "not", "reqopt", "dismax", "phrase", "nested"],
+)
+def test_accepted_query_sets(lm_index, entry, shape):
+    """The query shapes each similarity / early-termination entry point
+    accepts, and the exact ValueError for the rest: Term / BooleanAnd /
+    BooleanOr everywhere, nested BooleanQuery trees only under the
+    SimilarityBase family; NOT, req+opt, dismax and phrase nowhere."""
+    import re
+
+    call, msg = ENTRY_POINTS[entry]
+    q = _shape(shape)
+    if shape in ("term", "and", "or") or (
+        shape == "nested" and entry == "search_lm"
+    ):
+        assert call(lm_index, q).count() > 0
+    else:
+        with pytest.raises(ValueError, match=f"^{re.escape(msg)}$"):
+            call(lm_index, q)

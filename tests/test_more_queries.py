@@ -130,10 +130,10 @@ def test_more_like_this(spark, searcher):
 
 
 def test_explain_recomposes_search_scores(spark, docs_index):
-    """IndexSearcher.explain analog: for hits of every flat query kind,
-    explain(q, doc).score must equal the search score bitwise, leaf
-    details must recompose, and a non-matching doc must explain as
-    match=False score=0."""
+    """IndexSearcher.explain analog: for hits of every boolean query
+    class, explain(q, doc).score must equal the search score bitwise,
+    the term leaves under `details` must recompose, and a non-matching
+    doc must explain as match=False score=0."""
     from lucene_solr_spark.search.query import (
         BooleanAnd,
         BooleanMustShould,
@@ -144,11 +144,21 @@ def test_explain_recomposes_search_scores(spark, docs_index):
     )
     from lucene_solr_spark.search.searcher import IndexSearcher
 
+    def term_leaves(nodes):
+        out = []
+        for n in nodes:
+            if n["kind"] == "term":
+                out.append(n)
+            out += term_leaves(n.get("details", []))
+        return out
+
     s = IndexSearcher(spark, docs_index[0])
     queries = [
         TermQuery("table"),
         BooleanAnd(("scan", "table")),
         BooleanOr(("customer", "spark", "vector")),
+        # a repeated clause scores twice in search, so also in explain
+        BooleanOr(("table", "table", "scan")),
         BooleanNot(("table",), ("scan",)),
         BooleanMustShould(("vector",), ("table", "scan")),
         DisjunctionMax(("table", "scan"), tie=0.3),
@@ -160,9 +170,12 @@ def test_explain_recomposes_search_scores(spark, docs_index):
             ex = s.explain(q, r.doc_id)
             assert ex["match"] is True, (q, r.doc_id)
             assert np.float32(ex["score"]) == np.float32(r.score), (q, r.doc_id)
-            assert any(d["match"] for d in ex["details"])
+            leaves = term_leaves(ex["details"])
+            assert any(d["match"] for d in leaves)
             # every matching leaf's pieces recompose: wv*tf/(tf+cache)
-            for d in ex["details"]:
+            for d in leaves:
+                assert d["df"] > 0 and d["idf"] > 0, d  # global stats
+                assert d["field"] and d["avgdl"] > 0, d
                 if d["match"]:
                     wv = np.float32(d["weight_value"])
                     tf = np.float32(d["tf"])
