@@ -144,11 +144,7 @@ def _compact_routed(
     doc_map = s.doc_map()
     doc_offsets = dict(s._doc_offsets)  # shard -> generation docID offset
 
-    alive = doc_map
-    if s._has_tombstones():
-        alive = doc_map.join(
-            s.deleted_df().select("doc_id"), "doc_id", "left_anti"
-        )
+    alive = s._drop_deleted(doc_map)
     if keep is not None:
         alive = alive.where(keep)
     alive = alive.withColumn(

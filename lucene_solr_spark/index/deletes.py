@@ -15,9 +15,16 @@ surviving docs are bit-unchanged.
 
 Scale shape: tombstones are a (key, watermark) table; the searcher
 resolves them to docIDs DISTRIBUTIVELY (doc_map ⋈ tombstones, see
-IndexSearcher.deleted_df) and attaches each shard's deleted-id array
-to that shard's cogrouped norms row — the per-shard liveDocs-bitmap
-analog; no O(deleted) driver state anywhere on the query path.
+IndexSearcher.deleted_df) and attaches each shard's packed deleted
+bitmap to that shard's cogrouped norms row — the per-shard
+liveDocs-bitmap analog; no O(deleted) driver state anywhere on the
+query path.
+
+Point-in-time: like a SegmentReader's liveDocs, a searcher's deletes
+are fixed at open — it reads the tombstone table once, and preload()
+pins the resolved bitmaps with the norms. A searcher opened before
+`delete_by_keys` / `update_documents` keeps answering as of its open
+time; open a new searcher to see later writes.
 """
 
 from __future__ import annotations

@@ -264,7 +264,9 @@ def _publish_view(spark: SparkSession, s, dest: str, origin: str) -> dict:
         "term_stats_rev",
     )
     if s._has_tombstones():
-        io.write(s._io.read("tombstones"), "tombstones")
+        # the view's own open-time snapshot: a delete landing mid-publish
+        # must not be written beside tables that predate it
+        io.write(s._tombs, "tombstones")
 
     manifest = dict(s.manifest)
     manifest.pop("delta_generations", None)

@@ -16,9 +16,10 @@ Query lifecycle mirrors IndexSearcher.search (SURVEY.md §3.1):
    termination, the term automaton): scan `postings` with `term IN
    (...)` pushed to parquet (BlockTree term seek analog) minus the
    positions/payload streams no spec reads, cogroup with the shard's
-   norms + liveDocs row (exchange-free on a preloaded searcher), then
-   ONE applyInPandas group per shard = Lucene's leaf slice running the
-   caller's kernel; the seam shifts docIDs by the generation offset.
+   norms + open-time liveDocs row (pinned, exchange-free after
+   preload), then ONE applyInPandas group per shard = Lucene's leaf
+   slice running the caller's kernel; the seam shifts docIDs by the
+   generation offset.
    The scoring kernel is _score_spec: decode blocks, vectorized float32
    scoring, bounded top-k ordered (score desc, doc asc)
    (TopScoreDocCollector.java:63-80, HitQueue.java:76-81).
@@ -1576,6 +1577,14 @@ class IndexSearcher:
         self._postings = self._io.read("postings")
         self._norms = self._io.read("norms")
         self._term_stats = self._io.read("term_stats")
+        # liveDocs fixed at open, like a SegmentReader's: a frame's file
+        # listing is fixed when it is created, so every liveDocs reader
+        # resolves this open-time snapshot (reopen to see later writes)
+        self._tombs = (
+            self._io.read("tombstones")
+            if self._io.exists("tombstones") else None
+        )
+        self._live_norms: DataFrame | None = None
         # driver-side TermStates cache (Lucene caches TermStates per
         # query term at createWeight time): term -> global (df, cf).
         # Bounded by the distinct terms ever queried on this reader
@@ -1730,14 +1739,28 @@ class IndexSearcher:
         scoring cogroup needs NO exchange at all (the per-query
         repartition in _cogroup_inputs is skipped) — the open-reader
         analog extends to the physical layout, exactly like Lucene
-        serving from already-sorted segment files. Returns self."""
+        serving from already-sorted segment files. The open-time
+        liveDocs bitmaps are joined into the pinned norms, so a query
+        adds no tombstone read, join or Python stage; they stay fixed
+        at open — open a new searcher to see later writes. `_norms`
+        keeps the index's norms columns. Returns self."""
         p = self._serving_partitions()
         self._postings = self._postings.repartition(p, "shard").persist()
-        self._norms = self._norms.repartition(p, "shard").persist()
+        live = self._norms
+        if self._has_tombstones():
+            # the pin's lineage stops at the checkpointed bitmaps: Spark
+            # re-lists and recomputes a cached plan that scans a path a
+            # later write appends to (recache-by-path), so a pin that
+            # still read the tombstone table would pick up later deletes
+            live = live.join(
+                self._deleted_bitmaps().localCheckpoint(), "shard", "left"
+            )
+        self._live_norms = live.repartition(p, "shard").persist()
+        self._norms = self._live_norms.select(*self._norms.columns)
         self._term_stats = self._term_stats.persist()
         # one action materializes all three lineages
         self._postings.count()
-        self._norms.count()
+        self._live_norms.count()
         self._term_stats.count()
         self._served_p = p
         return self
@@ -1787,8 +1810,8 @@ class IndexSearcher:
         return self._doc_map
 
     def deleted_doc_ids(self) -> np.ndarray:
-        """Sorted global docIDs of tombstoned docs (liveDocs complement).
-        Resolved once per searcher (point-in-time view).
+        """Sorted global docIDs of tombstoned docs (liveDocs complement),
+        fixed at open; open a new searcher to see later writes.
 
         Driver-side materialization — used only by offline maintenance
         helpers; the query path ships deletes per shard via
@@ -1804,19 +1827,16 @@ class IndexSearcher:
         return self._deleted
 
     def _has_tombstones(self) -> bool:
-        return self._io.exists("tombstones")
+        return self._tombs is not None
 
     def deleted_df(self) -> DataFrame:
         """(shard, doc_id) of tombstoned docs, resolved DISTRIBUTIVELY
         against the doc_map (no driver materialization — the per-shard
-        liveDocs-bitmap analog, Lucene50LiveDocsFormat). A tombstone
-        kills only doc versions below its watermark (delGen
-        semantics, see index/deletes.py)."""
-        tombs = (
-            self._io.read("tombstones")
-            .groupBy("key")
-            .agg(F.max("wm").alias("wm"))
-        )
+        liveDocs-bitmap analog, Lucene50LiveDocsFormat). The tombstones
+        are the open-time snapshot (fixed at open; open a new searcher
+        to see later writes). A tombstone kills only doc versions below
+        its watermark (delGen semantics, see index/deletes.py)."""
+        tombs = self._tombs.groupBy("key").agg(F.max("wm").alias("wm"))
         # No broadcast hint: a deletes-heavy window between compactions
         # can grow tombstones past executor memory, so the join strategy
         # is left to Catalyst/AQE — small tombstone tables still
@@ -1829,47 +1849,62 @@ class IndexSearcher:
             .select("shard", "doc_id")
         )
 
+    def _drop_deleted(self, docs: DataFrame) -> DataFrame:
+        """`docs` minus the open-time tombstoned docIDs — liveDocs as a
+        distributed anti-join (no driver-side array)."""
+        if not self._has_tombstones():
+            return docs
+        return docs.join(
+            self.deleted_df().select("doc_id"), "doc_id", "left_anti"
+        )
+
+    def _deleted_bitmaps(self) -> DataFrame:
+        """(shard, deleted_bm): each shard's open-time tombstoned local
+        docIDs packed ONE BIT per docID (the liveDocs wire format), not
+        an int64 array — a majority-deleted shard of 10M docs ships
+        ~1.25 MB instead of 80 MB per task."""
+        offsets = dict(self._doc_offsets)
+
+        def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
+            shard = int(pdf["shard"].iloc[0])
+            local = pdf["doc_id"].to_numpy(np.int64) - np.int64(
+                offsets.get(shard, 0)
+            )
+            bm = np.zeros(int(local.max()) + 1, np.uint8)
+            bm[local] = 1
+            return pd.DataFrame(
+                {"shard": [shard], "deleted_bm": [np.packbits(bm).tobytes()]}
+            )
+
+        shard_t = self._norms.schema["shard"].dataType.simpleString()
+        return (
+            self.deleted_df()
+            .groupBy("shard")
+            .applyInPandas(_pack, f"shard {shard_t}, deleted_bm binary")
+        )
+
     def _norms_for_query(self, matched: DataFrame | None) -> DataFrame:
         """The cogroup right side: one small norms row per matched
-        shard, with the shard's tombstoned docIDs attached as an array
-        column. Replaces the old broadcast-blob join (which widened
-        every posting row by the whole shard's norm bytes) — the
-        norms blob now ships ONCE per shard into its leaf task, and
+        shard, with the shard's open-time liveDocs attached as a packed
+        `deleted_bm` bitmap. Replaces the old broadcast-blob join (which
+        widened every posting row by the whole shard's norm bytes) —
+        the norms blob now ships ONCE per shard into its leaf task, and
         only for shards the query actually touches (.nvd-per-segment
         read discipline). matched=None ships EVERY shard's norms row
         (needed when a FieldValueQuery clause must match docs in
-        shards the query terms never touch)."""
-        norms = self._norms
+        shards the query terms never touch). Preloaded: the frame
+        preload() pinned; otherwise the bitmaps are packed per query.
+        Fixed at open either way; open a new searcher to see later
+        writes."""
+        pinned = self._live_norms is not None
+        norms = self._live_norms if pinned else self._norms
         if matched is not None:
             norms = norms.join(
                 matched.select("shard").distinct(), "shard", "left_semi"
             )
-        if self._has_tombstones():
-            offsets = dict(self._doc_offsets)
-
-            def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-                shard = int(pdf["shard"].iloc[0])
-                local = pdf["doc_id"].to_numpy(np.int64) - np.int64(
-                    offsets.get(shard, 0)
-                )
-                bm = np.zeros(int(local.max()) + 1, np.uint8)
-                bm[local] = 1
-                return pd.DataFrame(
-                    {"shard": [shard],
-                     "deleted_bm": [np.packbits(bm).tobytes()]}
-                )
-
-            shard_t = self._norms.schema["shard"].dataType.simpleString()
-            # liveDocs wire format: ONE BIT per local docID (packed
-            # bytes), not an int64 array — a majority-deleted shard of
-            # 10M docs ships ~1.25 MB instead of 80 MB per task.
-            dd = (
-                self.deleted_df()
-                .groupBy("shard")
-                .applyInPandas(_pack, f"shard {shard_t}, deleted_bm binary")
-            )
-            norms = norms.join(dd, "shard", "left")
-        return norms
+        if pinned or not self._has_tombstones():
+            return norms
+        return norms.join(self._deleted_bitmaps(), "shard", "left")
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Global df per term, driver-cached (see _term_states)."""
@@ -3212,11 +3247,7 @@ class IndexSearcher:
         docs = matched.select("shard", "df", "doc_enc", "tf_enc").mapInPandas(
             dec, "doc_id long"
         ).distinct()
-        if self._has_tombstones():
-            # liveDocs as a distributed anti-join (no driver-side array)
-            docs = docs.join(
-                self.deleted_df().select("doc_id"), "doc_id", "left_anti"
-            )
+        docs = self._drop_deleted(docs)
         out = (
             docs.withColumn("score", F.lit(1.0).cast("float"))
             .orderBy("doc_id")
@@ -3252,11 +3283,7 @@ class IndexSearcher:
         out = matched.select("shard", "df", "doc_enc", "tf_enc").mapInPandas(
             dec, "doc_id long, tf long"
         )
-        if self._has_tombstones():
-            out = out.join(
-                self.deleted_df().select("doc_id"), "doc_id", "left_anti"
-            )
-        return out
+        return self._drop_deleted(out)
 
     def payload_rows(self, term: str, fn: str = "max") -> DataFrame:
         """PayloadTermQuery analog (core/.../search/payloads/
@@ -3337,11 +3364,7 @@ class IndexSearcher:
         out = matched.select(
             "shard", "df", "doc_enc", "tf_enc", "pay_enc"
         ).mapInPandas(dec, "doc_id long, score float")
-        if self._has_tombstones():
-            out = out.join(
-                self.deleted_df().select("doc_id"), "doc_id", "left_anti"
-            )
-        return out
+        return self._drop_deleted(out)
 
     def payload_score_topk(
         self, term: str, k: int = 10, fn: str = "max"
@@ -3536,10 +3559,7 @@ class IndexSearcher:
         docs = norms.select("shard", "base", "norms").mapInPandas(
             emit, "doc_id long"
         )
-        if self._has_tombstones():
-            docs = docs.join(
-                self.deleted_df().select("doc_id"), "doc_id", "left_anti"
-            )
+        docs = self._drop_deleted(docs)
         out = (
             docs.withColumn("score", F.lit(1.0).cast("float"))
             .orderBy("doc_id")
@@ -4031,27 +4051,23 @@ class IndexSearcher:
 
     def get_by_keys(self, keys: list) -> DataFrame:
         """Realtime get — RealTimeGetHandler analog (solr/core/.../
-        handler/RealTimeGetHandler.java + UpdateLog lookup: fetch the
-        CURRENT version of docs by unique key, seeing uncommitted NRT
-        appends and deletes without waiting for a commit). Here the
-        point-in-time view opened by IndexSearcher.open already spans
-        every delta generation (the tlog analog), so realtime get is a
-        broadcast semi-join of the probe keys against the doc_map with
-        tombstoned versions anti-joined away: an updated key returns
-        only its newest live row, a deleted key returns nothing.
-        Returns doc_map rows (doc_id, key, shard, g, doc_len, norm)
-        ordered by key."""
+        handler/RealTimeGetHandler.java + UpdateLog lookup by unique
+        key). Returns the version of each key LIVE IN THIS VIEW: the
+        point-in-time view opened by IndexSearcher.open spans every
+        delta generation committed before the open (the tlog analog),
+        and its liveDocs are fixed at open — open a new searcher to see
+        later writes. A broadcast semi-join of the probe keys against
+        the doc_map with the open-time tombstoned versions anti-joined
+        away: an updated key returns only its newest live row, a
+        deleted key returns nothing. Returns doc_map rows (doc_id, key,
+        shard, g, doc_len, norm) ordered by key."""
         kind = self.manifest.get("key_kind", "l")
         ktype = "string" if kind == "s" else "long"
         kdf = self.spark.createDataFrame(
             [(k,) for k in keys], f"key {ktype}"
         )
         dm = self.doc_map().join(F.broadcast(kdf), "key", "left_semi")
-        if self._has_tombstones():
-            dm = dm.join(
-                self.deleted_df(), ["shard", "doc_id"], "left_anti"
-            )
-        return dm.orderBy("key")
+        return self._drop_deleted(dm).orderBy("key")
 
     def term_vectors(
         self,

@@ -96,3 +96,36 @@ def test_repeated_similarity_planning_runs_no_job(spark, seam_index):
     assert jobs_in("seam-plan-cold", lambda: seam_index.search_lm(q, k=5))
     assert jobs_in("seam-plan-warm", lambda: seam_index.search_lm(q, k=5)) == []
     assert jobs_in("seam-exec", lambda: seam_index.search_lm(q, k=5).collect())
+
+
+@pytest.fixture(scope="module")
+def tombstoned_seam(spark, tmp_path_factory):
+    from lucene_solr_spark.index.builder import IndexConfig, build_index
+    from lucene_solr_spark.index.deletes import delete_by_keys
+    from lucene_solr_spark.search.searcher import IndexSearcher
+
+    out = str(tmp_path_factory.mktemp("seamdel") / "ix")
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    build_index(spark, docs, out, IndexConfig(n_shards=2, segs_per_shard=1))
+    delete_by_keys(spark, out, [1, 4])
+    yield IndexSearcher(spark, out).preload()
+    spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("path", ["search", "search_many"])
+def test_preloaded_live_docs_add_no_python_stage(tombstoned_seam, path):
+    """preload() pins the open-time liveDocs bitmaps with the norms, so
+    a query on a tombstoned view runs ONE Python node (the cogroup) and
+    shuffles nothing below it — no per-query tombstone resolve."""
+    import re
+
+    df = _plans(tombstoned_seam)[path]()
+    nodes = _nodes(df._jdf.queryExecution().executedPlan())
+    py = [n.nodeName() for n in nodes
+          if re.search("InPandas|InArrow|Python", n.nodeName())]
+    assert py == ["FlatMapCoGroupsInPandas"], py
+    cg = next(n for n in nodes if n.nodeName() == "FlatMapCoGroupsInPandas")
+    below = [n.nodeName() for n in _nodes(cg)[1:]]
+    assert "Exchange" not in below, below
+    got = {int(r.doc_id) for r in df.collect()}
+    assert got and not got & {1, 4}

@@ -125,6 +125,32 @@ def test_publish_folds_nrt_and_deletes(spark, small_index, tmp_path):
     assert len(_top(dst, "pubterm")) == 2
 
 
+def test_publish_writes_the_views_own_tombstones(spark, small_index, tmp_path):
+    """A delete that lands after the view opened (mid-publish) is not
+    written beside tables that predate it: the published copy ranks
+    exactly like the source view, and its norms table keeps the index's
+    schema (the preloaded view's pinned liveDocs column stays out)."""
+    from lucene_solr_spark.index.deletes import delete_by_keys
+    from lucene_solr_spark.index.storage import _publish_view
+    from lucene_solr_spark.search.searcher import IndexSearcher
+
+    delete_by_keys(spark, small_index, [0])
+    s = IndexSearcher.open(spark, small_index).preload()
+    try:
+        want = {t: _top(s, t) for t in ("table", "scan", "data")}
+        assert want["table"]
+        delete_by_keys(spark, small_index, [d for d, _ in want["table"][:3]])
+
+        dest = str(tmp_path / "pub_pit")
+        _publish_view(spark, s, dest, small_index)
+        dst = IndexSearcher.open(spark, dest)
+        assert {t: _top(dst, t) for t in want} == want
+        src_schema = IndexSearcher(spark, small_index)._norms.schema
+        assert dst._norms.schema == src_schema
+    finally:
+        spark.catalog.clearCache()
+
+
 def test_publish_writes_manifest_last(spark, small_index, tmp_path, monkeypatch):
     """Commit-point-last ordering: every data table lands through the
     seam before write_manifest (the segments_N contract)."""
