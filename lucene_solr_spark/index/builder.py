@@ -40,7 +40,7 @@ from dataclasses import asdict, dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -56,7 +56,7 @@ import sys as _sys
 import time as _time
 
 
-class _PhaseTimer:
+class PhaseTimer:
     """Prints per-phase wall times to stderr when LSS_TIMING=1."""
 
     def __init__(self):
@@ -68,8 +68,6 @@ class _PhaseTimer:
             now = _time.perf_counter()
             print(f"[build-phase] {name}: {now - self.t:.2f}s", file=_sys.stderr)
             self.t = now
-
-from lucene_solr_spark.index.codec import vbyte_encode
 
 
 # Term = (field, bytes) (index/Term.java:36). Internally a non-default
@@ -181,8 +179,18 @@ def _read_first_varint(buf: bytes) -> tuple[int, int]:
 
 
 def _encode_varint(v: int) -> bytes:
-    arr, _ = vbyte_encode(np.array([v], np.uint64))
-    return arr.tobytes()
+    """One VByte value (codec.vbyte_encode's format: low 7-bit group
+    first, high bit on all but the last group)."""
+    out = bytearray()
+    while v > 0x7F:
+        out.append((v & 0x7F) | 0x80)
+        v >>= 7
+    out.append(v)
+    return bytes(out)
+
+
+def _cat(parts: list[np.ndarray]) -> np.ndarray:
+    return parts[0] if len(parts) == 1 else np.concatenate(parts)
 
 
 def _make_merger(
@@ -293,11 +301,11 @@ def _make_merger(
             out["tf_enc"].append(b"".join(tf_parts))
             out["pos_enc"].append(b"".join(pos_parts) if pos_parts else None)
             out["pay_enc"].append(b"".join(pay_parts) if pay_parts else None)
-            out["block_last"].append(np.concatenate(blast_parts))
-            out["block_doc_off"].append(np.concatenate(bdoff_parts).astype(np.int32))
-            out["block_tf_off"].append(np.concatenate(btoff_parts).astype(np.int32))
-            out["block_max_tf"].append(np.concatenate(bmtf_parts))
-            out["block_max_norm"].append(np.concatenate(bmnorm_parts))
+            out["block_last"].append(_cat(blast_parts))
+            out["block_doc_off"].append(_cat(bdoff_parts).astype(np.int32))
+            out["block_tf_off"].append(_cat(btoff_parts).astype(np.int32))
+            out["block_max_tf"].append(_cat(bmtf_parts))
+            out["block_max_norm"].append(_cat(bmnorm_parts))
             i = j
         return pd.DataFrame(out)
 
@@ -315,17 +323,20 @@ NORMS_SCHEMA = StructType(
 )
 
 
-def build_index(
-    spark: SparkSession,
-    src: DataFrame,
-    out_dir: str,
-    config: IndexConfig | None = None,
-    resume: bool = True,
-) -> dict:
-    """Build the full index at `out_dir`. Returns the manifest dict."""
-    from lucene_solr_spark.session import ensure_on_workers
+def _doc_map_schema(key_kind: str) -> StructType:
+    return StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("key", StringType() if key_kind == "s" else LongType()),
+            StructField("shard", IntegerType()),
+            StructField("g", LongType()),
+            StructField("doc_len", LongType()),
+            StructField("norm", IntegerType()),
+        ]
+    )
 
-    cfg = config or IndexConfig()
+
+def _check_config(cfg: IndexConfig) -> None:
     if cfg.synonyms:
         from lucene_solr_spark.analysis.analyzers import DICT_STEMMERS
 
@@ -349,11 +360,11 @@ def build_index(
                 "index_payloads needs a payload-bearing analyzer chain "
                 "(delimited_payload)"
             )
-    ensure_on_workers(spark)
-    os.makedirs(out_dir, exist_ok=True)
-    _pt = _PhaseTimer()
-    G = cfg.n_shards * cfg.segs_per_shard
 
+
+def _keyed(src: DataFrame, cfg: IndexConfig) -> tuple[DataFrame, str]:
+    """(key, text, xf{i}) projection of the source and its key kind:
+    's' (string keys) or 'l' (int64 keys)."""
     key_type = dict((f.name, f.dataType.simpleString()) for f in src.schema.fields)[
         cfg.id_col
     ]
@@ -364,51 +375,27 @@ def build_index(
     ]
     for i, xf in enumerate(cfg.extra_fields):
         sel.append(F.col(xf).cast("string").alias(f"xf{i}"))
-    keyed = src.select(*sel)
+    return src.select(*sel), key_kind
 
-    if key_kind == "s" and cfg.sharding == "range_int":
-        raise ValueError("range_int sharding requires integer keys; use sharding='hash'")
 
-    if cfg.sharding == "range_int":
-        lo, hi, n_total = keyed.agg(
-            F.min("key"), F.max("key"), F.count(F.lit(1))
-        ).first()
-        span = int(hi) - int(lo) + 1
-        g_col = ((F.col("key") - F.lit(int(lo))) * G / F.lit(span)).cast("long")
-        g_col = F.least(g_col, F.lit(G - 1))
-    elif cfg.sharding == "hash":
-        n_total = keyed.count()
-    # (count folded into prep)
-        h = F.xxhash64(F.col("key"))
-        g_col = (
-            F.pmod(h, F.lit(cfg.n_shards)) * cfg.segs_per_shard
-            + F.pmod(F.xxhash64(F.col("key"), F.lit(1)), F.lit(cfg.segs_per_shard))
-        ).cast("long")
-    else:
-        raise ValueError(f"unknown sharding {cfg.sharding}")
+def _hash_segment(cfg: IndexConfig) -> Column:
+    """Segment g of a key under 'hash' sharding (Solr-style
+    xxhash64(key) pmod shards, then a second hash within the shard)."""
+    return (
+        F.pmod(F.xxhash64(F.col("key")), F.lit(cfg.n_shards)) * cfg.segs_per_shard
+        + F.pmod(F.xxhash64(F.col("key"), F.lit(1)), F.lit(cfg.segs_per_shard))
+    ).cast("long")
 
-    with_g = keyed.withColumn("g", g_col)
 
-    # ---- resumable segment build (tlog/commit analog) ----
-    ckpt_path = os.path.join(out_dir, "checkpoints")
-    seg_path = os.path.join(out_dir, "segments")
-    done: set[int] = set()
-    if resume and os.path.isdir(ckpt_path):
-        done = {
-            r.g for r in spark.read.parquet(ckpt_path).select("g").distinct().collect()
-        }
-    todo = with_g
-    if done:
-        todo = with_g.where(~F.col("g").isin([int(x) for x in done]))
-
-    # ---- per-field JVM analysis + one applyInArrow segment stage ----
-    from lucene_solr_spark.analysis.analyzers import DICT_STEMMERS
+def _analysis_cols(cfg: IndexConfig) -> list[Column]:
+    """The JVM-analyzed `toks{i}` (and `nlen{i}`) column of every field,
+    over the `text` / `xf{i}` columns of `_keyed` — the segment
+    builder's input next to `key` and `g`."""
     from lucene_solr_spark.analysis.jvm import (
         JVM_ANALYZERS,
         JVM_ANALYZERS_POS,
         JVM_NORM_LEN,
     )
-    from lucene_solr_spark.index.arrow_builder import make_arrow_segment_builder
 
     text_cols = ["text"] + [f"xf{i}" for i in range(len(cfg.extra_fields))]
     seg_cols = []
@@ -441,15 +428,156 @@ def build_index(
         seg_cols.append(toks_expr.alias(f"toks{fi}"))
         if nlen_expr is not None:
             seg_cols.append(nlen_expr.cast("long").alias(f"nlen{fi}"))
-    seg_rows = todo.select("key", "g", *seg_cols).groupBy("g").applyInArrow(
-        make_arrow_segment_builder(
-            key_kind, cfg.index_positions,
-            fields=(cfg.text_col,) + tuple(cfg.extra_fields),
-            codec=cfg.codec, stem=DICT_STEMMERS.get(cfg.analyzer),
-            with_payloads=cfg.index_payloads,
-        ),
-        SEGMENT_SCHEMA,
+    return seg_cols
+
+
+def _segment_builder(cfg: IndexConfig, key_kind: str):
+    from lucene_solr_spark.analysis.analyzers import DICT_STEMMERS
+    from lucene_solr_spark.index.arrow_builder import make_arrow_segment_builder
+
+    return make_arrow_segment_builder(
+        key_kind, cfg.index_positions,
+        fields=(cfg.text_col,) + tuple(cfg.extra_fields),
+        codec=cfg.codec, stem=DICT_STEMMERS.get(cfg.analyzer),
+        with_payloads=cfg.index_payloads,
     )
+
+
+def seg_bases(seg_meta: list[tuple[int, int]]) -> tuple[dict[int, int], int]:
+    """Doc base of every segment from sorted (g, n_docs) pairs — the
+    MergeState.docBase concatenation rule. Returns (bases, max_doc)."""
+    bases: dict[int, int] = {}
+    acc = 0
+    for g, nd in seg_meta:
+        bases[g] = acc
+        acc += nd
+    return bases, acc
+
+
+def explode_meta(pdfs, bases: dict[int, int], key_kind: str,
+                 segs_per_shard: int):
+    """Default-field segment meta rows -> doc_map rows (vectorized),
+    one frame per segment."""
+    for pdf in pdfs:
+        for row in pdf.itertuples(index=False):
+            g = int(row.g)
+            if key_kind == "s":
+                raw = bytes(row.keys_enc)
+                keys = raw.decode("utf-8").split("\n") if raw else []
+            else:
+                keys = np.frombuffer(row.keys_enc, "<i8")
+            dls = np.frombuffer(row.doc_lens_enc, "<i4")
+            nrm = np.frombuffer(row.norms_enc, np.uint8)
+            base = bases[g]
+            yield pd.DataFrame(
+                {
+                    "doc_id": base + np.arange(len(keys), dtype=np.int64),
+                    "key": keys,
+                    "shard": np.int32(g // segs_per_shard),
+                    "g": np.int64(g),
+                    "doc_len": dls.astype(np.int64),
+                    "norm": nrm.astype(np.int32),
+                }
+            )
+
+
+def build_norms(pdf: pd.DataFrame, bases: dict[int, int],
+                segs_per_shard: int) -> pd.DataFrame:
+    """One (shard, field)'s segment meta rows -> its norm blob row
+    (Lucene53NormsFormat analog)."""
+    pdf = pdf.sort_values("g")
+    blob = b"".join(bytes(x) for x in pdf["norms_enc"])
+    base = bases[int(pdf["g"].iloc[0])]
+    return pd.DataFrame(
+        {
+            "shard": [int(pdf["g"].iloc[0]) // segs_per_shard],
+            "field": [pdf["field"].iloc[0]],
+            "base": [base],
+            "n_docs": [len(blob)],
+            "norms": [blob],
+        }
+    )
+
+
+def _manifest(cfg: IndexConfig, key_kind: str, seg_meta, bases, max_doc,
+              field_stats: dict, n_total: int) -> dict:
+    shard_bases = {}
+    for g, _nd in seg_meta:
+        shard_bases.setdefault(g // cfg.segs_per_shard, bases[g])
+    cfg_dict = asdict(cfg)
+    cfg_dict["extra_fields"] = list(cfg.extra_fields)
+    return {
+        "version": 1,
+        "config": cfg_dict,
+        "key_kind": key_kind,
+        "max_doc": int(max_doc),
+        "sum_total_term_freq": int(field_stats.get(cfg.text_col, 0) or 0),
+        "field_stats": {k: int(v) for k, v in field_stats.items()},
+        "fields": [cfg.text_col] + list(cfg.extra_fields),
+        "n_input_rows": int(n_total),
+        "seg_bases": {str(k): v for k, v in bases.items()},
+        "shard_bases": {str(k): v for k, v in shard_bases.items()},
+    }
+
+
+def _write_manifest(out_dir: str, manifest: dict) -> None:
+    with open(os.path.join(out_dir, "manifest.json"), "w") as fh:
+        json.dump(manifest, fh, indent=1)
+
+
+def build_index(
+    spark: SparkSession,
+    src: DataFrame,
+    out_dir: str,
+    config: IndexConfig | None = None,
+    resume: bool = True,
+) -> dict:
+    """Build the full index at `out_dir`. Returns the manifest dict."""
+    from lucene_solr_spark.session import ensure_on_workers
+
+    cfg = config or IndexConfig()
+    _check_config(cfg)
+    ensure_on_workers(spark)
+    os.makedirs(out_dir, exist_ok=True)
+    _pt = PhaseTimer()
+    G = cfg.n_shards * cfg.segs_per_shard
+
+    keyed, key_kind = _keyed(src, cfg)
+
+    if key_kind == "s" and cfg.sharding == "range_int":
+        raise ValueError("range_int sharding requires integer keys; use sharding='hash'")
+
+    if cfg.sharding == "range_int":
+        lo, hi, n_total = keyed.agg(
+            F.min("key"), F.max("key"), F.count(F.lit(1))
+        ).first()
+        span = int(hi) - int(lo) + 1
+        g_col = ((F.col("key") - F.lit(int(lo))) * G / F.lit(span)).cast("long")
+        g_col = F.least(g_col, F.lit(G - 1))
+    elif cfg.sharding == "hash":
+        n_total = keyed.count()
+        g_col = _hash_segment(cfg)
+    else:
+        raise ValueError(f"unknown sharding {cfg.sharding}")
+
+    with_g = keyed.withColumn("g", g_col)
+
+    # ---- resumable segment build (tlog/commit analog) ----
+    ckpt_path = os.path.join(out_dir, "checkpoints")
+    seg_path = os.path.join(out_dir, "segments")
+    done: set[int] = set()
+    if resume and os.path.isdir(ckpt_path):
+        done = {
+            r.g for r in spark.read.parquet(ckpt_path).select("g").distinct().collect()
+        }
+    todo = with_g
+    if done:
+        todo = with_g.where(~F.col("g").isin([int(x) for x in done]))
+
+    # ---- per-field JVM analysis + one applyInArrow segment stage ----
+    seg_rows = todo.select("key", "g", *_analysis_cols(cfg)).groupBy(
+        "g"
+    ).applyInArrow(_segment_builder(cfg, key_kind), SEGMENT_SCHEMA)
     mode = "append" if done else "overwrite"
     seg_rows.write.mode(mode).parquet(seg_path)
     _pt.mark("seg_build_write")
@@ -486,81 +614,38 @@ def build_index(
         .agg(F.sum("sum_dl").alias("sttf"))
         .collect()
     }
-    sttf = field_stats.get(cfg.text_col, 0)
     _pt.mark("checkpoint")
 
-    # ---- doc bases (MergeState.docBase concatenation rule) ----
     seg_meta = sorted((int(r.g), int(r.n_docs)) for r in ckpt_rows)
-    bases: dict[int, int] = {}
-    acc = 0
-    for g, nd in seg_meta:
-        bases[g] = acc
-        acc += nd
-    max_doc = acc
+    bases, max_doc = seg_bases(seg_meta)
     bases_b = spark.sparkContext.broadcast(bases)
+    segs = cfg.segs_per_shard
 
     # ---- doc_map: explode segment meta rows (vectorized) ----
-    def explode_meta(iterator):
-        for pdf in iterator:
-            for row in pdf.itertuples(index=False):
-                g = int(row.g)
-                if key_kind == "s":
-                    raw = bytes(row.keys_enc)
-                    keys = raw.decode("utf-8").split("\n") if raw else []
-                else:
-                    keys = np.frombuffer(row.keys_enc, "<i8")
-                dls = np.frombuffer(row.doc_lens_enc, "<i4")
-                nrm = np.frombuffer(row.norms_enc, np.uint8)
-                base = bases_b.value[g]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": base + np.arange(len(keys), dtype=np.int64),
-                        "key": keys,
-                        "shard": np.int32(g // cfg.segs_per_shard),
-                        "g": np.int64(g),
-                        "doc_len": dls.astype(np.int64),
-                        "norm": nrm.astype(np.int32),
-                    }
-                )
-
-    key_sql_type = "string" if key_kind == "s" else "long"
-    doc_map_schema = (
-        f"doc_id long, key {key_sql_type}, shard int, g long, doc_len long, norm int"
-    )
     meta_rows = segments.where(
         (F.col("kind") == "m") & (F.col("field") == cfg.text_col)
     ).select("g", "keys_enc", "doc_lens_enc", "norms_enc")
-    doc_map = meta_rows.mapInPandas(explode_meta, doc_map_schema)
+    doc_map = meta_rows.mapInPandas(
+        lambda it: explode_meta(it, bases_b.value, key_kind, segs),
+        _doc_map_schema(key_kind),
+    )
     doc_map.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_map"))
     _pt.mark("doc_map")
 
     # ---- per-(shard, field) norm blobs (Lucene53NormsFormat analog) ----
-    def build_norms(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("g")
-        blob = b"".join(bytes(x) for x in pdf["norms_enc"])
-        base = bases_b.value[int(pdf["g"].iloc[0])]
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["g"].iloc[0]) // cfg.segs_per_shard],
-                "field": [pdf["field"].iloc[0]],
-                "base": [base],
-                "n_docs": [len(blob)],
-                "norms": [blob],
-            }
-        )
-
     norms_df = (
         segments.where(F.col("kind") == "m")
         .select("g", "field", "norms_enc")
         .withColumn("shard", (F.col("g") / cfg.segs_per_shard).cast("int"))
         .groupBy("shard", "field")
-        .applyInPandas(build_norms, NORMS_SCHEMA)
+        .applyInPandas(lambda pdf: build_norms(pdf, bases_b.value, segs), NORMS_SCHEMA)
     )
     norms_df.write.mode("overwrite").parquet(os.path.join(out_dir, "norms"))
     _pt.mark("norms")
 
     # ---- merge: ordered concat per (shard, term, part), salted for skew ----
     posting_rows = segments.where(F.col("kind") == "p")
+    # hot terms split into doc-range parts (`_hot_parts` is the same rule)
     part_col = F.when(
         F.col("df") > cfg.hot_seg_df,
         (F.pmod(F.col("g"), F.lit(cfg.segs_per_shard)) / cfg.hot_segs_per_part).cast("int"),
@@ -616,24 +701,169 @@ def build_index(
     _pt.mark("term_stats")
 
     # ---- collection stats + manifest ----
-    shard_bases = {}
-    for g, nd in seg_meta:
-        shard = g // cfg.segs_per_shard
-        shard_bases.setdefault(shard, bases[g])
-    cfg_dict = asdict(cfg)
-    cfg_dict["extra_fields"] = list(cfg.extra_fields)
-    manifest = {
-        "version": 1,
-        "config": cfg_dict,
-        "key_kind": key_kind,
-        "max_doc": int(max_doc),
-        "sum_total_term_freq": int(sttf or 0),
-        "field_stats": {k: int(v) for k, v in field_stats.items()},
-        "fields": [cfg.text_col] + list(cfg.extra_fields),
-        "n_input_rows": int(n_total),
-        "seg_bases": {str(k): v for k, v in bases.items()},
-        "shard_bases": {str(k): v for k, v in shard_bases.items()},
+    manifest = _manifest(cfg, key_kind, seg_meta, bases, max_doc,
+                         field_stats, n_total)
+    _write_manifest(out_dir, manifest)
+    return manifest
+
+
+# ---------------------------------------------------------------------
+# In-driver build of a small batch (the NRT flush fast path)
+# ---------------------------------------------------------------------
+
+
+def collect_segment_input(src: DataFrame, cfg: IndexConfig,
+                          limit: int) -> tuple["pa.Table", str]:
+    """Run the segment stage's input projection — key, g and the
+    JVM-analyzed `toks{i}` / `nlen{i}` columns that `build_index` feeds
+    its applyInArrow stage — as ONE Spark job and collect at most
+    `limit` rows of it as Arrow. 'hash' sharding only (a 'range_int' g
+    needs a min/max job first). Returns (rows, key_kind)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if cfg.sharding != "hash":
+        raise ValueError("collect_segment_input needs sharding='hash'")
+    keyed, key_kind = _keyed(src, cfg)
+    seg_input = (
+        keyed.withColumn("g", _hash_segment(cfg))
+        .select("key", "g", *_analysis_cols(cfg))
+        .limit(limit)
+    )
+    # plain (not large_) string/list types, whatever the session's
+    # arrow conf: the builder's output schemas are the Spark path's
+    rows = seg_input.toArrow().cast(to_arrow_schema(seg_input.schema))
+    return rows, key_kind
+
+
+def _hot_parts(df: np.ndarray, g: np.ndarray, cfg: IndexConfig) -> np.ndarray:
+    """The merge's doc-range part of each segment posting row (the
+    `part_col` rule of `build_index`)."""
+    return np.where(
+        df > cfg.hot_seg_df,
+        (g % cfg.segs_per_shard) // cfg.hot_segs_per_part,
+        0,
+    ).astype(np.int32)
+
+
+def _to_arrow(pdf: pd.DataFrame, schema: StructType) -> "pa.Table":
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.Table.from_pandas(
+        pdf, schema=to_arrow_schema(schema), preserve_index=False
+    ).replace_schema_metadata()
+
+
+def build_collected(
+    rows: "pa.Table",
+    out_dir: str,
+    cfg: IndexConfig,
+    key_kind: str,
+    timer: PhaseTimer | None = None,
+) -> dict:
+    """`build_index` over rows `collect_segment_input` collected, run in
+    this process: the same segment builder per g, seg-base rule,
+    merger, doc_map explode and norm blobs, written with pyarrow as the
+    same tables (postings in `shard=` dirs, doc_map, norms, term_stats,
+    term_stats_rev) and manifest; `out_dir` is replaced. No segments/
+    or checkpoints/ scratch: the build is one call, with nothing to
+    resume. Returns the manifest."""
+    import shutil
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    _check_config(cfg)
+    pt = timer or PhaseTimer()
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+
+    def write(tbl: pa.Table, *parts: str) -> None:
+        d = os.path.join(out_dir, *parts)
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(tbl, os.path.join(d, f"part-00000-{uuid.uuid4()}.parquet"))
+
+    build = _segment_builder(cfg, key_kind)
+    g_of_row = rows.column("g").to_numpy()
+    # the segment builder pins Arrow's pool to one thread (one task =
+    # one core); that must not outlive this call in the driver
+    n_cpu = pa.cpu_count()
+    try:
+        segments = pa.concat_tables(
+            [build(rows.take(np.flatnonzero(g_of_row == g)))
+             for g in np.unique(g_of_row)]
+        )
+    finally:
+        pa.set_cpu_count(n_cpu)
+    pt.mark("seg_build_write")
+
+    is_meta = pc.equal(segments.column("kind"), "m")
+    meta = segments.filter(is_meta).select(
+        ["g", "field", "sum_dl", "keys_enc", "doc_lens_enc", "norms_enc", "n_docs"]
+    ).to_pandas()
+    default_meta = meta[meta["field"] == cfg.text_col]
+    field_stats = {
+        f: int(v) for f, v in meta.groupby("field")["sum_dl"].sum().items()
     }
-    with open(os.path.join(out_dir, "manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1)
+    seg_meta = sorted(
+        (int(g), int(n)) for g, n in zip(default_meta["g"], default_meta["n_docs"])
+    )
+    bases, max_doc = seg_bases(seg_meta)
+    segs = cfg.segs_per_shard
+    pt.mark("checkpoint")
+
+    write(_to_arrow(pd.concat(
+        list(explode_meta([default_meta], bases, key_kind, segs)),
+        ignore_index=True,
+    ), _doc_map_schema(key_kind)), "doc_map")
+    pt.mark("doc_map")
+
+    write(_to_arrow(pd.concat(
+        [build_norms(grp, bases, segs)
+         for _, grp in meta.groupby([meta["g"] // segs, "field"])],
+        ignore_index=True,
+    ), NORMS_SCHEMA), "norms")
+    pt.mark("norms")
+
+    posting_rows = segments.filter(pc.invert(is_meta)).select(
+        ["g", "term", "df", "cf", "doc_enc", "tf_enc", "block_last",
+         "block_doc_off", "block_tf_off", "block_max_tf", "block_max_norm",
+         "pos_enc", "pay_enc"]
+    ).to_pandas()
+    posting_rows["part"] = _hot_parts(
+        posting_rows["df"].to_numpy(), posting_rows["g"].to_numpy(), cfg
+    )
+    merge = _make_merger(bases, segs, cfg.codec)
+    merged = _to_arrow(pd.concat(
+        [merge(grp) for _, grp in posting_rows.groupby(posting_rows["g"] // segs)]
+        or [merge(posting_rows)],
+        ignore_index=True,
+    ), POSTINGS_SCHEMA).sort_by(
+        [("shard", "ascending"), ("term", "ascending"), ("part", "ascending")]
+    )
+    shard_col = merged.column("shard").to_numpy()
+    for shard in np.unique(shard_col):
+        write(merged.filter(pa.array(shard_col == shard)).drop_columns(["shard"]),
+              "postings", f"shard={int(shard)}")
+    if not merged.num_rows:  # no tokens at all: keep a readable table
+        write(merged, "postings")
+    pt.mark("merge_write")
+
+    agg = merged.group_by("term").aggregate([("df", "sum"), ("cf", "sum")])
+    term_stats = pa.table(
+        {"term": agg.column("term"), "df": agg.column("df_sum"),
+         "cf": agg.column("cf_sum")}
+    ).sort_by("term")
+    write(term_stats, "term_stats")
+    write(pa.table(
+        {"rterm": pc.utf8_reverse(term_stats.column("term")),
+         "term": term_stats.column("term"), "df": term_stats.column("df")}
+    ).sort_by("rterm"), "term_stats_rev")
+    pt.mark("term_stats")
+
+    manifest = _manifest(cfg, key_kind, seg_meta, bases, max_doc,
+                         field_stats, rows.num_rows)
+    _write_manifest(out_dir, manifest)
     return manifest

@@ -98,6 +98,16 @@ def split_index(
     return _compact_routed(spark, index_dir, out_dirs, route)
 
 
+def _frame(out: dict, cols: list[str]) -> pd.DataFrame:
+    """A kernel's output columns as a frame. pandas types the columns of
+    an empty frame float64, which Arrow cannot convert to the binary and
+    list columns; an empty frame (e.g. a shard whose docs are all
+    deleted) gets object columns instead."""
+    if len(out[cols[0]]):
+        return pd.DataFrame(out)[cols]
+    return pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
+
+
 def _write_routed(df, order_by, partition_shard, tmp_root, name, out_dirs,
                   spark, empty_schema):
     """Write `df` (carrying a `route` column) once, partitioned by
@@ -227,7 +237,7 @@ def _compact_routed(
     def build_norms(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         cols = ["route"] + _NORM_COLS
         if len(right) == 0:
-            return pd.DataFrame({c: [] for c in cols})
+            return _frame({c: [] for c in cols}, cols)
         m = bmap.value
         right = right.sort_values("doc_id")
         old = int(right["shard"].iloc[0])
@@ -259,7 +269,7 @@ def _compact_routed(
                 out["base"].append(nb)
                 out["n_docs"].append(len(blob))
                 out["norms"].append(blob.tobytes())
-        return pd.DataFrame(out)[cols]
+        return _frame(out, cols)
 
     _write_routed(
         s._norms.groupBy("shard")
@@ -278,7 +288,7 @@ def _compact_routed(
 
     def rewrite(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         cols = ["route"] + _POST_COLS
-        empty = pd.DataFrame({c: [] for c in cols})
+        empty = _frame({c: [] for c in cols}, cols)
         if len(left) == 0 or len(right) == 0:
             return empty
         is_norm = left["term"].isna()
@@ -374,7 +384,7 @@ def _compact_routed(
                     out["pay_enc"].append(pay_vals[keep_rep].tobytes())
                 else:
                     out["pay_enc"].append(None)
-        return pd.DataFrame(out)[cols]
+        return _frame(out, cols)
 
     new_post = (
         left_df.groupBy("shard")

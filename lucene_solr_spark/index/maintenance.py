@@ -18,7 +18,9 @@ so the policy reduces to two triggers:
 unlike Lucene's segments_N indirection, the swap is path-based, so
 searchers opened BEFORE the swap must be discarded — their lazy Spark
 plans hold file paths under `index_dir`, which resolve to the NEW
-files (or fail) after the rename. The pre-swap directory is kept as
+files (or fail) after the rename. The swap refreshes the data Spark
+cached over `index_dir`, so the earlier searchers' pinned frames never
+answer a searcher opened after it. The pre-swap directory is kept as
 `<index_dir>.old.<ts>` for manual rollback only, not as a live
 snapshot for open readers.
 """
@@ -96,4 +98,9 @@ def compact_in_place(spark: SparkSession, index_dir: str, **policy) -> bool:
     old = f"{index_dir}.old.{int(time.time())}"
     os.rename(index_dir, old)
     os.rename(tmp, index_dir)
+    # Spark matches cached plans by file path: a frame pinned by an
+    # earlier searcher would answer a new searcher's identical plan from
+    # the pre-swap index. Drop the data cached over `index_dir` (each
+    # such plan re-lists its files when next used).
+    spark.catalog.refreshByPath(index_dir)
     return True

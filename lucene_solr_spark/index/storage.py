@@ -37,7 +37,8 @@ Resolution: ``resolve_io(spark, out)`` returns IcebergIO for
 
 Division of labour: ``build_index`` stages and publishes its parquet
 directory natively (segments/checkpoints are scratch space — at
-cluster scale a job-local HDFS/S3 prefix), and ``publish_index`` below
+cluster scale a job-local HDFS/S3 prefix; a small NRT delta built in
+the driver by ``build_collected`` writes none), and ``publish_index`` below
 re-publishes any built index — base + NRT delta generations + deletes,
 folded into ONE point-in-time snapshot — through a TableIO
 destination, manifest LAST. ``IndexSearcher`` opens either form: a

@@ -9,12 +9,22 @@ we mirror with idempotent, fingerprinted batch appends.
 
 Spark mapping:
 - a micro-batch == one flush generation: each batch builds NEW segments
-  (fresh g ids beyond the existing range) with the same applyInArrow
-  segment kernel, appends postings/doc_map/norms partitions, and
-  bumps the manifest (the segments_N commit analog — last write wins,
-  readers see a consistent snapshot because all data files land before
-  the manifest swap, exactly Lucene's file-then-commit ordering,
+  (fresh g ids beyond the existing range), writes postings/doc_map/norms
+  and its term dictionary under `delta/batch_<id>/`, and bumps the
+  manifest (the segments_N commit analog — last write wins, readers see
+  a consistent snapshot because all data files land before the manifest
+  swap, exactly Lucene's file-then-commit ordering,
   index/IndexWriter.java:178-186).
+- Small batches flush in process, like a DWPT inverting its in-RAM docs
+  (index/DocumentsWriterPerThread.java): one Spark job runs the JVM
+  analysis and collects the analyzed rows as Arrow (at most
+  `DRIVER_FLUSH_MAX_ROWS` + 1 of them), and the driver runs the same
+  segment builder, merger, doc_map and norms kernels as `build_index`
+  and writes the same tables with pyarrow (`build_collected`). Through
+  Spark, a mini-build runs six phases and about 140 tasks, a fixed
+  cost that dominates a flush of a few hundred docs. A batch above the
+  cap runs the distributed `build_index` (its applyInArrow segment
+  stage) instead.
 - `index_stream` wires it as foreachBatch; the Structured Streaming
   checkpoint gives exactly-once batch ids, and `append_batch` is
   additionally idempotent by batch fingerprint (tlog replay safety:
@@ -33,7 +43,22 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lucene_solr_spark.index.builder import IndexConfig, build_index
+from lucene_solr_spark.index.builder import (
+    IndexConfig,
+    PhaseTimer,
+    build_collected,
+    build_index,
+    collect_segment_input,
+)
+
+# Largest batch (rows) flushed in the driver. Measured on a 4-core host
+# (local[4], pages of the perfbench corpus, append_batch wall time,
+# driver vs distributed): 61 rows 0.5-0.8 vs 7.4-8.7 s, 4k 1.4-1.9 vs
+# 8.6-9.1 s, 40k 5.4-5.6 vs 10.8-11.3 s, 150k 17.8 vs 22.8 s. Time
+# alone would put the crossover past 150k rows, but the driver holds
+# about 11 KB per row at the peak (1.6 GB RSS at 150k); at this cap it
+# stays near 0.7 GB and the flush is still about 2x faster.
+DRIVER_FLUSH_MAX_ROWS = 50_000
 
 
 def _manifest_path(index_dir: str) -> str:
@@ -61,9 +86,6 @@ def append_batch(
         base_cfg = IndexConfig(
             **{k: v for k, v in manifest["config"].items() if k in known}
         )
-        n = batch.count()
-        if n == 0:
-            return manifest
         # delta generations use few segments (mini-flush); every other
         # setting (analyzer, fields, positions, payloads, synonyms,
         # codec) is the base index's
@@ -71,10 +93,25 @@ def append_batch(
             base_cfg,
             n_shards=max(1, min(base_cfg.n_shards, 2)),
             segs_per_shard=1,
-            sharding=base_cfg.sharding if base_cfg.sharding != "range_int" else "hash",
+            sharding="hash",  # range_int would need the batch's key range
             extra_fields=tuple(base_cfg.extra_fields),
         )
-        build_index(spark, batch, gen_dir, delta_cfg, resume=False)
+        timer = PhaseTimer()
+        sc = spark.sparkContext
+        desc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"nrt flush {batch_id}: analyze batch")
+        try:
+            rows, key_kind = collect_segment_input(
+                batch, delta_cfg, DRIVER_FLUSH_MAX_ROWS + 1
+            )
+        finally:
+            sc.setJobDescription(desc)
+        if rows.num_rows == 0:
+            return manifest
+        if rows.num_rows <= DRIVER_FLUSH_MAX_ROWS:
+            build_collected(rows, gen_dir, delta_cfg, key_kind, timer)
+        else:
+            build_index(spark, batch, gen_dir, delta_cfg, resume=False)
     # register generation in the top-level manifest (commit point)
     with open(_manifest_path(gen_dir)) as fh:
         gen_manifest = json.load(fh)
