@@ -69,6 +69,8 @@ class PhaseTimer:
             print(f"[build-phase] {name}: {now - self.t:.2f}s", file=_sys.stderr)
             self.t = now
 
+from lucene_solr_spark.index.codec import vbyte_encode
+
 
 # Term = (field, bytes) (index/Term.java:36). Internally a non-default
 # field's term is stored as "<field>\x1d<token>" — the dictionary then
@@ -179,18 +181,8 @@ def _read_first_varint(buf: bytes) -> tuple[int, int]:
 
 
 def _encode_varint(v: int) -> bytes:
-    """One VByte value (codec.vbyte_encode's format: low 7-bit group
-    first, high bit on all but the last group)."""
-    out = bytearray()
-    while v > 0x7F:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-    return bytes(out)
-
-
-def _cat(parts: list[np.ndarray]) -> np.ndarray:
-    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+    arr, _ = vbyte_encode(np.array([v], np.uint64))
+    return arr.tobytes()
 
 
 def _make_merger(
@@ -301,11 +293,11 @@ def _make_merger(
             out["tf_enc"].append(b"".join(tf_parts))
             out["pos_enc"].append(b"".join(pos_parts) if pos_parts else None)
             out["pay_enc"].append(b"".join(pay_parts) if pay_parts else None)
-            out["block_last"].append(_cat(blast_parts))
-            out["block_doc_off"].append(_cat(bdoff_parts).astype(np.int32))
-            out["block_tf_off"].append(_cat(btoff_parts).astype(np.int32))
-            out["block_max_tf"].append(_cat(bmtf_parts))
-            out["block_max_norm"].append(_cat(bmnorm_parts))
+            out["block_last"].append(np.concatenate(blast_parts))
+            out["block_doc_off"].append(np.concatenate(bdoff_parts).astype(np.int32))
+            out["block_tf_off"].append(np.concatenate(btoff_parts).astype(np.int32))
+            out["block_max_tf"].append(np.concatenate(bmtf_parts))
+            out["block_max_norm"].append(np.concatenate(bmnorm_parts))
             i = j
         return pd.DataFrame(out)
 
@@ -645,7 +637,6 @@ def build_index(
 
     # ---- merge: ordered concat per (shard, term, part), salted for skew ----
     posting_rows = segments.where(F.col("kind") == "p")
-    # hot terms split into doc-range parts (`_hot_parts` is the same rule)
     part_col = F.when(
         F.col("df") > cfg.hot_seg_df,
         (F.pmod(F.col("g"), F.lit(cfg.segs_per_shard)) / cfg.hot_segs_per_part).cast("int"),
@@ -712,37 +703,25 @@ def build_index(
 # ---------------------------------------------------------------------
 
 
-def collect_segment_input(src: DataFrame, cfg: IndexConfig,
-                          limit: int) -> tuple["pa.Table", str]:
+def collect_segment_input(src: DataFrame,
+                          cfg: IndexConfig) -> tuple["pa.Table", str]:
     """Run the segment stage's input projection — key, g and the
     JVM-analyzed `toks{i}` / `nlen{i}` columns that `build_index` feeds
-    its applyInArrow stage — as ONE Spark job and collect at most
-    `limit` rows of it as Arrow. 'hash' sharding only (a 'range_int' g
-    needs a min/max job first). Returns (rows, key_kind)."""
+    its applyInArrow stage — as ONE Spark job and collect it as Arrow.
+    'hash' sharding only (a 'range_int' g needs a min/max job first).
+    Returns (rows, key_kind)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if cfg.sharding != "hash":
         raise ValueError("collect_segment_input needs sharding='hash'")
     keyed, key_kind = _keyed(src, cfg)
-    seg_input = (
-        keyed.withColumn("g", _hash_segment(cfg))
-        .select("key", "g", *_analysis_cols(cfg))
-        .limit(limit)
+    seg_input = keyed.withColumn("g", _hash_segment(cfg)).select(
+        "key", "g", *_analysis_cols(cfg)
     )
     # plain (not large_) string/list types, whatever the session's
     # arrow conf: the builder's output schemas are the Spark path's
     rows = seg_input.toArrow().cast(to_arrow_schema(seg_input.schema))
     return rows, key_kind
-
-
-def _hot_parts(df: np.ndarray, g: np.ndarray, cfg: IndexConfig) -> np.ndarray:
-    """The merge's doc-range part of each segment posting row (the
-    `part_col` rule of `build_index`)."""
-    return np.where(
-        df > cfg.hot_seg_df,
-        (g % cfg.segs_per_shard) // cfg.hot_segs_per_part,
-        0,
-    ).astype(np.int32)
 
 
 def _to_arrow(pdf: pd.DataFrame, schema: StructType) -> "pa.Table":
@@ -765,9 +744,11 @@ def build_collected(
     this process: the same segment builder per g, seg-base rule,
     merger, doc_map explode and norm blobs, written with pyarrow as the
     same tables (postings in `shard=` dirs, doc_map, norms, term_stats,
-    term_stats_rev) and manifest; `out_dir` is replaced. No segments/
-    or checkpoints/ scratch: the build is one call, with nothing to
-    resume. Returns the manifest."""
+    term_stats_rev) and manifest; `out_dir` is replaced. One segment
+    per shard (segs_per_shard=1), so shard == g and every posting row
+    is part 0 of its term (the merge's hot-term split is within a
+    shard's segments). No segments/ or checkpoints/ scratch: the build
+    is one call, with nothing to resume. Returns the manifest."""
     import shutil
     import uuid
 
@@ -776,6 +757,8 @@ def build_collected(
     import pyarrow.parquet as pq
 
     _check_config(cfg)
+    if cfg.segs_per_shard != 1:
+        raise ValueError("build_collected builds one segment per shard")
     pt = timer or PhaseTimer()
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir)
@@ -811,18 +794,16 @@ def build_collected(
         (int(g), int(n)) for g, n in zip(default_meta["g"], default_meta["n_docs"])
     )
     bases, max_doc = seg_bases(seg_meta)
-    segs = cfg.segs_per_shard
     pt.mark("checkpoint")
 
     write(_to_arrow(pd.concat(
-        list(explode_meta([default_meta], bases, key_kind, segs)),
+        list(explode_meta([default_meta], bases, key_kind, 1)),
         ignore_index=True,
     ), _doc_map_schema(key_kind)), "doc_map")
     pt.mark("doc_map")
 
     write(_to_arrow(pd.concat(
-        [build_norms(grp, bases, segs)
-         for _, grp in meta.groupby([meta["g"] // segs, "field"])],
+        [build_norms(grp, bases, 1) for _, grp in meta.groupby(["g", "field"])],
         ignore_index=True,
     ), NORMS_SCHEMA), "norms")
     pt.mark("norms")
@@ -832,12 +813,10 @@ def build_collected(
          "block_doc_off", "block_tf_off", "block_max_tf", "block_max_norm",
          "pos_enc", "pay_enc"]
     ).to_pandas()
-    posting_rows["part"] = _hot_parts(
-        posting_rows["df"].to_numpy(), posting_rows["g"].to_numpy(), cfg
-    )
-    merge = _make_merger(bases, segs, cfg.codec)
+    posting_rows["part"] = np.int32(0)
+    merge = _make_merger(bases, 1, cfg.codec)
     merged = _to_arrow(pd.concat(
-        [merge(grp) for _, grp in posting_rows.groupby(posting_rows["g"] // segs)]
+        [merge(grp) for _, grp in posting_rows.groupby("g")]
         or [merge(posting_rows)],
         ignore_index=True,
     ), POSTINGS_SCHEMA).sort_by(

@@ -75,19 +75,31 @@ def update_documents(
     """updateDocument = delete-by-key + NRT append of the new docs.
 
     The tombstones are written straight from the batch DataFrame (one
-    distributed projection, no driver-side key collection), so an
-    update batch of any size stays executor-bound end-to-end."""
+    distributed projection, no driver-side key collection); the same
+    pass measures the batch (rows, text characters) for the NRT flush,
+    which builds a small batch in the driver and a large one with the
+    distributed `build_index`."""
     import json
 
-    from lucene_solr_spark.streaming.nrt import append_batch
+    from pyspark.sql import Observation
+
+    from lucene_solr_spark.streaming.nrt import (
+        _append,
+        _base_config,
+        _size_columns,
+    )
 
     with open(os.path.join(index_dir, "manifest.json")) as fh:
         manifest = json.load(fh)
     id_col = manifest["config"]["id_col"]
     key_type = "string" if manifest.get("key_kind") == "s" else "long"
     wm = _current_total_docs(manifest)
-    batch.select(
+    # the tombstone write also measures the batch for the flush (an
+    # observed metric, not a second pass over the batch)
+    size = Observation()
+    batch.observe(size, *_size_columns(_base_config(manifest))).select(
         F.col(id_col).cast(key_type).alias("key"),
         F.lit(wm).cast("long").alias("wm"),
     ).write.mode("append").parquet(_tomb_dir(index_dir))
-    append_batch(spark, batch, index_dir, batch_id)
+    got = size.get
+    _append(spark, batch, index_dir, batch_id, (got["rows"], got["chars"] or 0))

@@ -16,15 +16,18 @@ Spark mapping:
   swap, exactly Lucene's file-then-commit ordering,
   index/IndexWriter.java:178-186).
 - Small batches flush in process, like a DWPT inverting its in-RAM docs
-  (index/DocumentsWriterPerThread.java): one Spark job runs the JVM
-  analysis and collects the analyzed rows as Arrow (at most
-  `DRIVER_FLUSH_MAX_ROWS` + 1 of them), and the driver runs the same
-  segment builder, merger, doc_map and norms kernels as `build_index`
-  and writes the same tables with pyarrow (`build_collected`). Through
-  Spark, a mini-build runs six phases and about 140 tasks, a fixed
-  cost that dominates a flush of a few hundred docs. A batch above the
-  cap runs the distributed `build_index` (its applyInArrow segment
-  stage) instead.
+  (index/DocumentsWriterPerThread.java): one aggregate over the raw
+  batch counts its rows and the characters of its text fields
+  (`update_documents` observes both on its tombstone write); at or
+  below both caps (`DRIVER_FLUSH_MAX_ROWS`, `DRIVER_FLUSH_MAX_CHARS`)
+  one Spark job runs the JVM analysis and collects the analyzed rows
+  as Arrow, and the driver runs the same segment builder, merger,
+  doc_map and norms kernels as `build_index` and writes the same
+  tables with pyarrow (`build_collected`). Through Spark, a mini-build
+  runs six phases and about 140 tasks, a fixed cost that dominates a
+  flush of a few hundred docs. A batch above either cap runs the
+  distributed `build_index` (its applyInArrow segment stage) instead,
+  without analyzing anything in the driver first.
 - `index_stream` wires it as foreachBatch; the Structured Streaming
   checkpoint gives exactly-once batch ids, and `append_batch` is
   additionally idempotent by batch fingerprint (tlog replay safety:
@@ -41,7 +44,8 @@ import dataclasses
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.builder import (
     IndexConfig,
@@ -51,18 +55,50 @@ from lucene_solr_spark.index.builder import (
     collect_segment_input,
 )
 
-# Largest batch (rows) flushed in the driver. Measured on a 4-core host
-# (local[4], pages of the perfbench corpus, append_batch wall time,
-# driver vs distributed): 61 rows 0.5-0.8 vs 7.4-8.7 s, 4k 1.4-1.9 vs
-# 8.6-9.1 s, 40k 5.4-5.6 vs 10.8-11.3 s, 150k 17.8 vs 22.8 s. Time
-# alone would put the crossover past 150k rows, but the driver holds
-# about 11 KB per row at the peak (1.6 GB RSS at 150k); at this cap it
-# stays near 0.7 GB and the flush is still about 2x faster.
+# Largest batch flushed in the driver, in rows and in characters of
+# its text fields. The driver holds the analyzed tokens (about 100
+# bytes of RSS each, positions on), and every token takes at least one
+# character, so the character cap bounds the driver's memory whatever
+# the analyzer. append_batch on a 4-core host (local[4], 2 GB driver
+# heap), driver vs distributed wall time and the growth of the
+# driver's RSS, by text kind (tokens per character):
+#   perfbench pages (0.17): 4M chars 2.3 vs 7.5 s (+0.07 GB), 16M
+#     3.0-3.3 vs 8.3-8.4 s (+0.15-0.2 GB);
+#   edge n-grams (0.71): 4M 8.0 vs 15.5 s (+0.34 GB), 8M 9.2 vs 15.5 s
+#     (+0.57 GB);
+#   CJK ideographs, standard analyzer (1.0): 4M 5.8 vs 12.9 s (+0.55
+#     GB), 8M 10.8 vs 17.4 s (+0.81 GB, 84 MB of collected Arrow), 16M
+#     19.4 vs 29.2 s (+1.9 GB).
+# The driver path is faster at every size; the character cap keeps its
+# extra memory under about 0.8 GB. Each row also carries a key and a
+# doc_map entry that the character count does not see (an empty text
+# counts 0); the row cap bounds those: 61 pages 0.5-0.8 vs 7.4-8.7 s,
+# 40k pages 5.4-5.6 vs 10.8-11.3 s, 66k three-word docs 3.2 vs 8.6 s
+# (+0.07 GB).
 DRIVER_FLUSH_MAX_ROWS = 50_000
+DRIVER_FLUSH_MAX_CHARS = 8_000_000
 
 
 def _manifest_path(index_dir: str) -> str:
     return os.path.join(index_dir, "manifest.json")
+
+
+def _base_config(manifest: dict) -> IndexConfig:
+    """The IndexConfig a manifest was built with."""
+    # only IndexConfig fields: older manifests carry retired keys
+    # (e.g. "engine") that the dataclass no longer accepts
+    known = {f.name for f in dataclasses.fields(IndexConfig)}
+    return IndexConfig(**{k: v for k, v in manifest["config"].items() if k in known})
+
+
+def _size_columns(cfg: IndexConfig) -> list[Column]:
+    """Aggregate columns `rows` and `chars` (characters of the text
+    fields) of a batch: the size the driver-flush caps are checked on."""
+    chars = sum(
+        F.coalesce(F.length(F.col(c).cast("string")), F.lit(0))
+        for c in [cfg.text_col, *cfg.extra_fields]
+    )
+    return [F.count(F.lit(1)).alias("rows"), F.sum(chars).alias("chars")]
 
 
 def append_batch(
@@ -76,16 +112,28 @@ def append_batch(
     Idempotent per batch_id: a generation directory that already has a
     manifest is skipped (tlog replay / foreachBatch retry safety).
     Returns the updated top-level manifest."""
+    return _append(spark, batch, index_dir, batch_id, None)
+
+
+def _append(
+    spark: SparkSession,
+    batch: DataFrame,
+    index_dir: str,
+    batch_id: int | str,
+    size: tuple[int, int] | None,
+) -> dict:
+    """`append_batch` with the batch's (rows, chars) when the caller
+    already has them (`update_documents` observes them on its tombstone
+    write); with None, one aggregate over the batch measures them."""
     gen_dir = os.path.join(index_dir, "delta", f"batch_{batch_id}")
     with open(_manifest_path(index_dir)) as fh:
         manifest = json.load(fh)
     if not os.path.exists(_manifest_path(gen_dir)):
-        # only IndexConfig fields: older manifests carry retired keys
-        # (e.g. "engine") that the dataclass no longer accepts
-        known = {f.name for f in dataclasses.fields(IndexConfig)}
-        base_cfg = IndexConfig(
-            **{k: v for k, v in manifest["config"].items() if k in known}
-        )
+        base_cfg = _base_config(manifest)
+        # the raw batch's size picks the path before anything is analyzed
+        n_rows, n_chars = size or batch.agg(*_size_columns(base_cfg)).first()
+        if n_rows == 0:
+            return manifest
         # delta generations use few segments (mini-flush); every other
         # setting (analyzer, fields, positions, payloads, synonyms,
         # codec) is the base index's
@@ -96,19 +144,15 @@ def append_batch(
             sharding="hash",  # range_int would need the batch's key range
             extra_fields=tuple(base_cfg.extra_fields),
         )
-        timer = PhaseTimer()
-        sc = spark.sparkContext
-        desc = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(f"nrt flush {batch_id}: analyze batch")
-        try:
-            rows, key_kind = collect_segment_input(
-                batch, delta_cfg, DRIVER_FLUSH_MAX_ROWS + 1
-            )
-        finally:
-            sc.setJobDescription(desc)
-        if rows.num_rows == 0:
-            return manifest
-        if rows.num_rows <= DRIVER_FLUSH_MAX_ROWS:
+        if n_rows <= DRIVER_FLUSH_MAX_ROWS and n_chars <= DRIVER_FLUSH_MAX_CHARS:
+            timer = PhaseTimer()
+            sc = spark.sparkContext
+            desc = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription(f"nrt flush {batch_id}: analyze batch")
+            try:
+                rows, key_kind = collect_segment_input(batch, delta_cfg)
+            finally:
+                sc.setJobDescription(desc)
             build_collected(rows, gen_dir, delta_cfg, key_kind, timer)
         else:
             build_index(spark, batch, gen_dir, delta_cfg, resume=False)

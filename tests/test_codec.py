@@ -33,19 +33,6 @@ def test_vbyte_edge_values():
     assert len(e1) == 1
 
 
-def test_merger_head_varint_matches_vbyte_encode():
-    """The merger rewrites each run's head docID with a scalar VByte
-    writer; its bytes are vbyte_encode's."""
-    from lucene_solr_spark.index.builder import _encode_varint, _read_first_varint
-
-    vals = [0, 1, 127, 128, 255, 16383, 16384, 2**21, 2**31 - 1, 2**35 + 7,
-            2**63 - 1]
-    for v in vals:
-        want = vbyte_encode(np.array([v], np.uint64))[0].tobytes()
-        assert _encode_varint(v) == want
-        assert _read_first_varint(want + b"\x05") == (v, len(want))
-
-
 @pytest.mark.parametrize("seed", range(8))
 def test_posting_lists_roundtrip(seed):
     rng = np.random.default_rng(seed)

@@ -139,26 +139,32 @@ def test_driver_flush_matches_spark_path(spark, bases, monkeypatch, name):
         driver_ids.append(f"large_{name}")
 
     a = os.path.join(ix, "delta", f"batch_spark_{name}")
-    assert os.path.isdir(os.path.join(a, "segments"))  # the Spark path ran
-    with open(os.path.join(a, "manifest.json")) as fh:
-        ma = json.load(fh)
     for bid in driver_ids:
         b = os.path.join(ix, "delta", f"batch_{bid}")
-        assert not os.path.exists(os.path.join(b, "segments"))
-        assert not os.path.exists(os.path.join(b, "checkpoints"))
-        for table in TABLES:
-            sa, ra = _rows(spark, os.path.join(a, table))
-            sb, rb = _rows(spark, os.path.join(b, table))
-            assert sa == sb, table
-            assert ra == rb, table
+        _assert_same_generation(spark, a, b)
         if name == "one_shard":
             assert os.listdir(os.path.join(b, "postings")) == ["shard=0"]
-        with open(os.path.join(b, "manifest.json")) as fh:
-            mb = json.load(fh)
-        for k in ("max_doc", "sum_total_term_freq", "field_stats", "seg_bases",
-                  "shard_bases"):
-            assert ma[k] == mb[k], k
-        assert ma == mb
+
+
+def _assert_same_generation(spark, a, b):
+    """Generation `a` (built by the Spark path) and `b` (built in the
+    driver) hold the same tables and manifest."""
+    assert os.path.isdir(os.path.join(a, "segments"))  # the Spark path ran
+    assert not os.path.exists(os.path.join(b, "segments"))
+    assert not os.path.exists(os.path.join(b, "checkpoints"))
+    for table in TABLES:
+        sa, ra = _rows(spark, os.path.join(a, table))
+        sb, rb = _rows(spark, os.path.join(b, table))
+        assert sa == sb, table
+        assert ra == rb, table
+    with open(os.path.join(a, "manifest.json")) as fh:
+        ma = json.load(fh)
+    with open(os.path.join(b, "manifest.json")) as fh:
+        mb = json.load(fh)
+    for k in ("max_doc", "sum_total_term_freq", "field_stats", "seg_bases",
+              "shard_bases"):
+        assert ma[k] == mb[k], k
+    assert ma == mb
 
 
 def test_update_through_driver_flush_matches_oracle(spark, bases):
@@ -221,3 +227,37 @@ def test_driver_flush_of_a_batch_without_tokens(spark, bases):
     assert s.max_doc == before.max_doc + 3
     assert s.search(TermQuery("table"), k=None).count() == hits
     assert s.search(MatchAllDocsQuery(), k=None).count() == s.max_doc
+
+
+@pytest.mark.parametrize("how", ["append_batch", "update_documents"])
+def test_long_docs_over_the_char_cap_take_the_spark_path(spark, bases,
+                                                         monkeypatch, how):
+    """The path is picked from the raw batch's text size before anything
+    is analyzed: three long docs over the character cap (well under the
+    row cap) build through `build_index` with nothing collected to the
+    driver; at the cap the same batch flushes in the driver.
+    `update_documents` takes the size from its tombstone write."""
+    from lucene_solr_spark.index.deletes import update_documents
+    from lucene_solr_spark.streaming import nrt
+
+    append = nrt.append_batch if how == "append_batch" else (
+        lambda spark, batch, ix, batch_id: update_documents(spark, ix, batch,
+                                                            batch_id))
+    ix = bases("extra_fields")
+    texts = [" ".join(_texts(60, seed)) for seed in (21, 22, 23)]
+    batch = _frame(spark, _keys("l", 700, 703), texts, "l")
+    n_chars = sum(len(r.text) + len(r.source) for r in batch.collect())
+    assert 3 < nrt.DRIVER_FLUSH_MAX_ROWS
+
+    def no_collect(*args, **kwargs):
+        raise AssertionError("analyzed rows collected to the driver")
+
+    monkeypatch.setattr(nrt, "DRIVER_FLUSH_MAX_CHARS", n_chars - 1)
+    monkeypatch.setattr(nrt, "collect_segment_input", no_collect)
+    append(spark, batch, ix, batch_id=f"long_spark_{how}")
+    monkeypatch.undo()
+    monkeypatch.setattr(nrt, "DRIVER_FLUSH_MAX_CHARS", n_chars)
+    append(spark, batch, ix, batch_id=f"long_driver_{how}")
+    delta = os.path.join(ix, "delta")
+    _assert_same_generation(spark, os.path.join(delta, f"batch_long_spark_{how}"),
+                            os.path.join(delta, f"batch_long_driver_{how}"))
