@@ -667,6 +667,17 @@ def build_index(
         .parquet(os.path.join(out_dir, "postings"))
     )
     merged.unpersist()
+    postings_dir = os.path.join(out_dir, "postings")
+    if not any(f.endswith(".parquet") for _, _, fs in os.walk(postings_dir)
+               for f in fs):
+        # no doc yielded a token: the partitioned write left no file,
+        # so keep a readable (schema-bearing, empty) table, as
+        # build_collected does
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        pq.write_table(to_arrow_schema(POSTINGS_SCHEMA).empty_table(),
+                       os.path.join(postings_dir, "part-00000-empty.parquet"))
     _pt.mark("merge_write")
 
     # ---- global term stats (df/cf across shards) ----

@@ -78,7 +78,9 @@ def update_documents(
     distributed projection, no driver-side key collection); the same
     pass measures the batch (rows, text characters) for the NRT flush,
     which builds a small batch in the driver and a large one with the
-    distributed `build_index`."""
+    distributed `build_index`. Idempotent per batch_id, like
+    `append_batch`: a batch_id the manifest already lists as a delta
+    generation writes nothing."""
     import json
 
     from pyspark.sql import Observation
@@ -91,6 +93,13 @@ def update_documents(
 
     with open(os.path.join(index_dir, "manifest.json")) as fh:
         manifest = json.load(fh)
+    committed = {g["batch_id"] for g in manifest.get("delta_generations") or []}
+    if str(batch_id) in committed:
+        # a retry (foreachBatch re-delivery, tlog replay) of a committed
+        # update writes nothing: its tombstones would take their
+        # watermark from a manifest that already counts the new
+        # version, and kill it
+        return
     id_col = manifest["config"]["id_col"]
     key_type = "string" if manifest.get("key_kind") == "s" else "long"
     wm = _current_total_docs(manifest)

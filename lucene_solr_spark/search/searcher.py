@@ -11,20 +11,30 @@ Query lifecycle mirrors IndexSearcher.search (SURVEY.md §3.1):
    (_term_states — one pushed-down `term IN` seek per never-seen term),
    maxDoc/sumTotalTermFreq from the manifest -> float32 idf, avgdl, the
    256-entry norm cache (BM25Similarity.computeWeight:200-212).
-3. per-shard physical plan — ONE seam, _run_shards, for every scoring
+3. per-shard execution — ONE seam, _run_shards, for every scoring
    caller (search, search_many, the similarity wrappers, early
-   termination, the term automaton): scan `postings` with `term IN
-   (...)` pushed to parquet (BlockTree term seek analog) minus the
-   positions/payload streams no spec reads, cogroup with the shard's
-   norms + open-time liveDocs row (pinned, exchange-free after
-   preload), then ONE applyInPandas group per shard = Lucene's leaf
-   slice running the caller's kernel; the seam shifts docIDs by the
-   generation offset.
+   termination, the term automaton), with two tiers that run the SAME
+   per-shard function (Lucene's leaf slice running the caller's
+   kernel; the seam shifts docIDs by the generation offset):
+   - Spark tier: scan `postings` with `term IN (...)` pushed to parquet
+     (BlockTree term seek analog) minus the positions/payload streams
+     no spec reads, cogroup with the shard's norms + open-time liveDocs
+     row (pinned, exchange-free after preload), then ONE applyInPandas
+     group per shard.
+   - driver tier: after a preload() of an index whose postings + norms
+     files take at most IN_PROCESS_MAX_BYTES, the driver holds a copy
+     of the pins (_DriverIndex) and scores every shard in process — a
+     binary-search term seek per shard, no Spark job, no Python stage
+     (Lucene's IndexSearcher looping over an in-process reader's
+     leaves). Scoring then runs inside search(), not at collect().
    The scoring kernel is _score_spec: decode blocks, vectorized float32
    scoring, bounded top-k ordered (score desc, doc asc)
    (TopScoreDocCollector.java:63-80, HitQueue.java:76-81).
-4. driver reduce: ORDER BY score DESC, doc_id ASC LIMIT k. Global docIDs
-   are monotone in (shard, local doc), so this reproduces TopDocs.merge's
+4. global merge: score desc, doc_id asc, first k — ORDER BY ... LIMIT k
+   on the Spark tier; a numpy top-k (_merge_topk, per qid for
+   search_many) on the driver tier, returned as a DataFrame over local
+   rows (a LocalRelation: collect() starts no job). Global docIDs are
+   monotone in (shard, local doc), so both reproduce TopDocs.merge's
    tie-breaks exactly (score desc, earlier shard, shard-internal order;
    TopDocs.java:94-116).
 
@@ -65,8 +75,17 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from lucene_solr_spark import B, K1
 from lucene_solr_spark.functions import bm25
@@ -1245,15 +1264,15 @@ def _spec_needs_payloads(spec: dict) -> bool:
     return span_needs_payloads(spec["node"])
 
 
-def _unread_dropped(matched: DataFrame, specs: list[dict]) -> DataFrame:
-    """Posting rows without the positions / payload streams no spec
-    reads — pruned before the shard exchange (and from the parquet
-    ReadSchema); _decode_shard handles either column's absence."""
+def _unread_columns(specs: list[dict]) -> tuple[str, ...]:
+    """The positions / payload streams no spec reads, dropped before
+    the shard exchange (and from the parquet ReadSchema);
+    _decode_shard handles either column's absence."""
     if not any(_spec_needs_positions(s) for s in specs):
-        return matched.drop("pos_enc", "pay_enc")
+        return ("pos_enc", "pay_enc")
     if not any(_spec_needs_payloads(s) for s in specs):
-        return matched.drop("pay_enc")
-    return matched
+        return ("pay_enc",)
+    return ()
 
 
 def _tree_has_field_exists(node: dict) -> bool:
@@ -1509,6 +1528,121 @@ def _score_term_pruned(pdf, term, base, norms, idfs, cache, k,
 # beat the block-skip paths (per-block overhead); see _score_spec.
 PRUNE_MIN_POSTINGS = 16384
 
+# Largest index, in on-disk bytes of its postings + norms files, that
+# preload() also copies into the driver; _run_shards then scores every
+# shard in process, with no Spark job and no Python stage per query.
+# Measured on a 4-core host (local[4]) with perfbench-style pages
+# (n_shards=4, segs_per_shard=2), per on-disk size (Arrow bytes of the
+# driver copy): warm p50 of a 40-query pool and one 12-query
+# search_many, driver vs Spark tier; then the growth of the driver's
+# RSS at preload, Python process and JVM (Spark tier's JVM in brackets):
+#   2k pages, 0.5 MB (2.2 MB): 55 vs 524 ms, 179 vs 836 ms; +11 MB, +9 MB
+#   40k, 4.2 MB (8.7 MB): 46 vs 723 ms, 178 vs 840 ms; +26 MB, +22 MB
+#   200k, 19 MB (33 MB): 63 vs 649 ms, 415 vs 1,238 ms; +72 MB, +55 MB
+#   350k, 33 MB (56 MB): 116 vs 993 ms, 1,610 vs 2,728 ms; +66 MB,
+#     +1.29 GB (+0.58 GB)
+#   600k, 56 MB (95 MB): 175 vs 625 ms, 3,079 vs 2,704 ms; +106 MB,
+#     +1.44 GB (+0.67 GB)
+# A single query is faster in process at every size; a batch, whose
+# kernels the Spark tier spreads over the cores, crosses over between
+# 33 and 56 MB. The cap sits below that crossover. The Python process
+# holds 1-5x the Arrow bytes (not the 10x of build_collected); the JVM
+# buffers the collected Arrow on its way to Python, far below
+# spark.driver.maxResultSize.
+IN_PROCESS_MAX_BYTES = 32 << 20
+
+
+class _DriverIndex:
+    """The driver copy preload() takes of an index below
+    IN_PROCESS_MAX_BYTES: the pinned postings as one Arrow table sorted
+    by (shard, term, part), and each shard's pinned norms rows with its
+    open-time liveDocs bitmap. A query seeks its terms by binary search
+    on each shard's slice of the sorted term column, so its cost scales
+    with the rows it matches, not with the index."""
+
+    def __init__(self, postings: pa.Table, norms: pa.Table):
+        self.postings = postings.sort_by(
+            [("shard", "ascending"), ("term", "ascending"),
+             ("part", "ascending")]
+        )
+        shard = self.postings.column("shard").to_numpy()
+        self._terms = self.postings.column("term").to_numpy(
+            zero_copy_only=False
+        )
+        norms_pdf = norms.to_pandas()
+        # shard -> its norms rows (one per field), as the cogroup's
+        # right side hands them to per_shard
+        self.norms = {
+            int(s): g.reset_index(drop=True)
+            for s, g in norms_pdf.groupby("shard", sort=True)
+        }
+        self._bounds = {
+            s: (int(np.searchsorted(shard, s, "left")),
+                int(np.searchsorted(shard, s, "right")))
+            for s in self.norms
+        }
+        self.nbytes = int(self.postings.nbytes + norms.nbytes)
+
+    def seek(self, terms: list[str], dfs: dict[str, int],
+             drop: tuple[str, ...]) -> dict[int, pd.DataFrame]:
+        """Each shard's posting rows of the sorted distinct `terms`,
+        without the `drop` columns and with `df_total` attached: the
+        frames the cogroup's left side hands per_shard."""
+        q = np.asarray(terms, dtype=object)
+        idx, counts = [], []
+        for lo, hi in self._bounds.values():
+            col = self._terms[lo:hi]
+            a = np.searchsorted(col, q, "left")
+            b = np.searchsorted(col, q, "right")
+            rows = [np.arange(lo + x, lo + y) for x, y in zip(a, b) if y > x]
+            idx.extend(rows)
+            counts.append(sum(len(r) for r in rows))
+        table = self.postings.drop_columns(
+            [c for c in drop if c in self.postings.column_names]
+        )
+        taken = table.take(
+            np.concatenate(idx) if idx else np.empty(0, np.int64)
+        ).to_pandas()
+        taken["df_total"] = taken["term"].map(dfs).astype("int64")
+        ends = np.cumsum(counts)
+        return {
+            s: taken.iloc[end - n:end].reset_index(drop=True)
+            for s, n, end in zip(self._bounds, counts, ends)
+        }
+
+
+# Spark and pandas type of each column type a _run_shards schema uses
+_COL_TYPES = {"long": (LongType(), "int64"), "int": (IntegerType(), "int32"),
+              "float": (FloatType(), "float32"),
+              "string": (StringType(), "object")}
+
+
+def _columns(schema: str) -> list[list[str]]:
+    """[name, type] per column of a "name type, ..." schema string."""
+    return [f.split() for f in schema.split(",")]
+
+
+def _no_rows(schema: str) -> pd.DataFrame:
+    return pd.DataFrame({n: pd.Series(dtype=_COL_TYPES[t][1])
+                         for n, t in _columns(schema)})
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of a frame (for a file scan, the bytes
+    of its files), read off the optimized plan: no job runs."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _merge_topk(rows: pd.DataFrame, k: int | None) -> pd.DataFrame:
+    """The driver-side global merge of per-shard top-k rows: score
+    desc, doc_id asc, first k — the order of the Spark tier's
+    TakeOrderedAndProject (TopDocs.merge, TopDocs.java:94-116)."""
+    docs, scores = _topk_arrays(
+        rows["doc_id"].to_numpy(np.int64),
+        rows["score"].to_numpy(np.float32), k,
+    )
+    return pd.DataFrame({"doc_id": docs, "score": scores})
+
 
 class _Similarity(NamedTuple):
     """A non-BM25 similarity for the shared kernels (the
@@ -1585,6 +1719,7 @@ class IndexSearcher:
             if self._io.exists("tombstones") else None
         )
         self._live_norms: DataFrame | None = None
+        self._driver: _DriverIndex | None = None  # in-process tier
         # driver-side TermStates cache (Lucene caches TermStates per
         # query term at createWeight time): term -> global (df, cf).
         # Bounded by the distinct terms ever queried on this reader
@@ -1743,7 +1878,20 @@ class IndexSearcher:
         liveDocs bitmaps are joined into the pinned norms, so a query
         adds no tombstone read, join or Python stage; they stay fixed
         at open — open a new searcher to see later writes. `_norms`
-        keeps the index's norms columns. Returns self."""
+        keeps the index's norms columns.
+
+        In-process tier: when the postings and norms files take at most
+        IN_PROCESS_MAX_BYTES on disk (decided from the plan statistics,
+        before anything runs), the pins are materialized by `toArrow()`
+        instead of `count()`: the same action fills the cache and hands
+        the driver a copy (_DriverIndex), and _run_shards then scores
+        every shard in the driver. The copy is taken here, so it is as
+        point-in-time as the pins. `serving_tier` and `driver_bytes`
+        report the outcome. Returns self."""
+        in_process = (
+            _plan_bytes(self._postings) + _plan_bytes(self._norms)
+            <= IN_PROCESS_MAX_BYTES
+        )
         p = self._serving_partitions()
         self._postings = self._postings.repartition(p, "shard").persist()
         live = self._norms
@@ -1758,12 +1906,38 @@ class IndexSearcher:
         self._live_norms = live.repartition(p, "shard").persist()
         self._norms = self._live_norms.select(*self._norms.columns)
         self._term_stats = self._term_stats.persist()
-        # one action materializes all three lineages
-        self._postings.count()
-        self._live_norms.count()
-        self._term_stats.count()
+        sc = self.spark.sparkContext
+        desc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"preload {self.index_dir}: pin postings, "
+                             f"norms, dictionary")
+        try:
+            # one action materializes each lineage
+            if in_process:
+                self._driver = _DriverIndex(
+                    self._postings.toArrow(), self._live_norms.toArrow()
+                )
+            else:
+                self._postings.count()
+                self._live_norms.count()
+            self._term_stats.count()
+        finally:
+            sc.setJobDescription(desc)
         self._served_p = p
         return self
+
+    @property
+    def serving_tier(self) -> str:
+        """Where scoring runs: "driver" after a preload() below
+        IN_PROCESS_MAX_BYTES (every shard scored in this process, no
+        Spark job per query), else "spark" (one applyInPandas cogroup
+        group per shard)."""
+        return "spark" if self._driver is None else "driver"
+
+    @property
+    def driver_bytes(self) -> int:
+        """Arrow bytes of the driver copy of postings and norms (0 on
+        the Spark tier)."""
+        return 0 if self._driver is None else self._driver.nbytes
 
     def _serving_partitions(self) -> int:
         return max(
@@ -2332,12 +2506,21 @@ class IndexSearcher:
     def _run_shards(
         self, terms: list[str], specs: list[dict], kernel, schema: str,
         all_shards: bool = False,
-    ) -> DataFrame:
-        """The one per-shard execution seam (Lucene's leaf-slice loop):
-        the pushed-down term seek (_matched) without the positions /
-        payload streams no spec reads, the shard-keyed cogroup with the
-        norms + liveDocs side (_cogroup_inputs — exchange-free on a
-        preloaded searcher), then ONE applyInPandas group per shard.
+    ) -> DataFrame | pd.DataFrame:
+        """The one per-shard execution seam (Lucene's leaf-slice loop).
+
+        Spark tier: the pushed-down term seek (_matched) without the
+        positions / payload streams no spec reads, the shard-keyed
+        cogroup with the norms + liveDocs side (_cogroup_inputs —
+        exchange-free on a preloaded searcher), then ONE applyInPandas
+        group per shard. Returns that lazy per-shard frame.
+
+        Driver tier (preload() took a _DriverIndex): the same per_shard
+        function runs for each shard in this process, over the rows a
+        binary-search seek of the driver copy finds and the shard's
+        pinned norms + liveDocs rows. Scoring therefore happens HERE,
+        not at collect(); returns the per-shard rows as a pandas frame
+        (_frame / _top_hits turn it into a DataFrame).
 
         `kernel(left, decoded, deleted, off)` scores one shard: `left`
         is its posting rows, `decoded` the _decode_shard tuple,
@@ -2345,19 +2528,11 @@ class IndexSearcher:
         its generation's docID offset. It returns rows of `schema` with
         generation-local doc_ids (None = no rows); the seam shifts them
         by `off`. all_shards=True also runs shards no query term
-        touches. Returns the per-shard frame."""
-        matched, norms_side = self._cogroup_inputs(
-            _unread_dropped(self._matched(terms), specs), all_shards
-        )
+        touches."""
         default_field = self._default_field
         codec = self._codec
         offsets = dict(self._doc_offsets)
-        pd_types = {"long": "int64", "int": "int32", "float": "float32",
-                    "string": "object"}
-        empty = pd.DataFrame({
-            name: pd.Series(dtype=pd_types[typ])
-            for name, typ in (f.split() for f in schema.split(","))
-        })
+        empty = _no_rows(schema)
 
         def per_shard(left: pd.DataFrame, nr: pd.DataFrame) -> pd.DataFrame:
             if len(nr) == 0 or (len(left) == 0 and not all_shards):
@@ -2374,11 +2549,48 @@ class IndexSearcher:
                 out["doc_id"] = out["doc_id"] + off
             return out
 
+        if self._driver is not None:
+            uterms = sorted(set(terms))
+            lefts = self._driver.seek(
+                uterms, self.term_dfs(uterms), _unread_columns(specs)
+            )
+            outs = [per_shard(lefts[s], nr)
+                    for s, nr in self._driver.norms.items()]
+            return pd.concat([o for o in outs if len(o)] or [empty],
+                             ignore_index=True)
+        matched, norms_side = self._cogroup_inputs(
+            self._matched(terms).drop(*_unread_columns(specs)), all_shards
+        )
         return (
             matched.groupBy("shard")
             .cogroup(norms_side.groupBy("shard"))
             .applyInPandas(per_shard, schema)
         )
+
+    def _frame(self, rows: DataFrame | pd.DataFrame, schema: str) -> DataFrame:
+        """A _run_shards result as a DataFrame: the Spark tier's frame as
+        it is, driver rows as local data — a LocalRelation, so collect()
+        starts no job."""
+        if isinstance(rows, DataFrame):
+            return rows
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        st = StructType([StructField(n, _COL_TYPES[t][0])
+                         for n, t in _columns(schema)])
+        return self.spark.createDataFrame(
+            pa.Table.from_pandas(rows, schema=to_arrow_schema(st),
+                                 preserve_index=False), st,
+        )
+
+    def _top_hits(self, per_shard: DataFrame | pd.DataFrame,
+                  k: int | None) -> DataFrame:
+        """The global merge of per-shard (doc_id, score) top-k rows:
+        score desc, doc_id asc, first k — TakeOrderedAndProject on the
+        Spark tier, _merge_topk in the driver."""
+        if isinstance(per_shard, pd.DataFrame):
+            return self._frame(_merge_topk(per_shard, k), "doc_id long, score float")
+        ordered = per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
+        return ordered if k is None else ordered.limit(k)
 
     def search(self, query: Query, k: int | None = 10, prune: bool = True,
                cursor: tuple[float, int] | None = None,
@@ -2397,7 +2609,12 @@ class IndexSearcher:
         `df_override` substitutes artificial per-term doc freqs into the
         idf computation (TermContext.accumulateStatistics analog,
         BlendedTermQuery.java:299-318) — the postings themselves are
-        untouched, only the weights change."""
+        untouched, only the weights change.
+
+        On a searcher preloaded below IN_PROCESS_MAX_BYTES (the driver
+        tier, see _run_shards) the spec-based shapes are scored inside
+        this call and the returned frame holds local rows; otherwise
+        scoring runs when the frame is collected."""
         q = rewrite(query)
         if isinstance(q, BlendedTermQuery):
             # blended df = max over the terms' real global dfs
@@ -2474,8 +2691,7 @@ class IndexSearcher:
             sorted(set(spec["terms"])), [spec], kernel,
             "doc_id long, score float", all_shards,
         )
-        ordered = per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        return ordered if k is None else ordered.limit(k)
+        return self._top_hits(per_shard, k)
 
     def early_terminated_frame(
         self, query: Query, max_docs_per_shard: int
@@ -2589,10 +2805,11 @@ class IndexSearcher:
                  "n_scanned": np.full(len(cut), n_scanned, np.int64)}
             )
 
-        return self._run_shards(
-            sorted(set(clause_terms)), [spec], kernel,
-            "doc_id long, score float, shard int, "
-            "n_collected long, n_scanned long",
+        schema = ("doc_id long, score float, shard int, "
+                  "n_collected long, n_scanned long")
+        return self._frame(
+            self._run_shards(sorted(set(clause_terms)), [spec], kernel, schema),
+            schema,
         )
 
     def search_early_terminated(
@@ -2783,8 +3000,7 @@ class IndexSearcher:
             real, [{"kind": "automaton", "terms": real}], kernel,
             "doc_id long, score float",
         )
-        ordered = per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        return ordered if k is None else ordered.limit(k)
+        return self._top_hits(per_shard, k)
 
     def search_lm(
         self, query: Query, k: int | None = 10, model: str = "dirichlet",
@@ -3167,7 +3383,9 @@ class IndexSearcher:
         stage decodes each matched posting list ONCE and scores every
         query against it (Solr's query-result-cache economy, without
         the cache); per-query top-k happens shard-side (bounded rows:
-        shards x k x |queries|), the global cut is a tiny window."""
+        shards x k x |queries|), the global cut is a tiny window — or,
+        on the driver tier (see _run_shards), a per-qid numpy top-k
+        computed inside this call, with no Spark job at all."""
         from pyspark.sql import Window
 
         specs = {qid: self._spec(rewrite(q)) for qid, q in queries.items()}
@@ -3188,10 +3406,19 @@ class IndexSearcher:
                 outs.append(r)
             return pd.concat(outs, ignore_index=True)
 
+        schema = "qid string, doc_id long, score float"
         per_shard = self._run_shards(
-            all_terms, list(specs.values()), kernel,
-            "qid string, doc_id long, score float",
+            all_terms, list(specs.values()), kernel, schema
         )
+        if isinstance(per_shard, pd.DataFrame):
+            merged = [
+                _merge_topk(rows, k).assign(qid=qid)
+                for qid, rows in per_shard.groupby("qid", sort=True)
+            ]
+            return self._frame(
+                pd.concat(merged, ignore_index=True) if merged
+                else per_shard, schema,
+            )
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             per_shard.withColumn("rn", F.row_number().over(w))
@@ -3201,7 +3428,8 @@ class IndexSearcher:
         )
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score float")
+        schema = "doc_id long, score float"
+        return self._frame(_no_rows(schema), schema)
 
     def _search_constant(self, q, k: int | None) -> DataFrame:
         """CONSTANT_SCORE multi-term rewrite (MultiTermQuery.java:68-94):
@@ -3618,7 +3846,9 @@ class IndexSearcher:
         """_decode_shard of ONE shard's posting rows for the spec's terms
         (the explain slow path: the seam's seek + column pruning,
         collected to the driver)."""
-        m = _unread_dropped(self._matched(sorted(set(spec["terms"]))), [spec])
+        m = self._matched(sorted(set(spec["terms"]))).drop(
+            *_unread_columns([spec])
+        )
         pdf = m.where(F.col("shard") == shard).toPandas()
         nr = (
             self._norms_for_query(None)

@@ -101,3 +101,26 @@ def test_resume_completes_partial_build(spark, tmp_path):
 
     build_index(spark, src, partial, cfg, resume=True)
     assert _results(spark, partial) == want
+
+
+def test_build_without_tokens_writes_empty_tables(spark, tmp_path, monkeypatch):
+    """Input where no doc yields a token (empty text, stopwords only):
+    a base build and a distributed delta build write schema-bearing
+    empty postings / term_stats / term_stats_rev tables, and the index
+    opens and answers an empty top-k."""
+    from lucene_solr_spark.index.builder import IndexConfig, build_index
+    from lucene_solr_spark.search.query import TermQuery
+    from lucene_solr_spark.search.searcher import IndexSearcher
+    from lucene_solr_spark.streaming import nrt
+
+    rows = [(0, ""), (1, "the a"), (2, "a")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = str(tmp_path / "ix")
+    build_index(spark, docs, out, IndexConfig(n_shards=2, segs_per_shard=1))
+    monkeypatch.setattr(nrt, "DRIVER_FLUSH_MAX_ROWS", 0)
+    nrt.append_batch(spark, docs, out, "empty")
+    s = IndexSearcher.open(spark, out)
+    assert s.max_doc == 6
+    for table in ("postings", "term_stats", "term_stats_rev"):
+        assert spark.read.parquet(f"{out}/{table}").count() == 0
+    assert s.search(TermQuery("table"), k=5).collect() == []

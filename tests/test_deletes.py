@@ -135,3 +135,29 @@ def test_delete_then_readd_watermark(spark, del_index):
     s = IndexSearcher.open(spark, del_index)
     hits = s.search_with_keys(TermQuery("zombiedoc"), k=5).collect()
     assert len(hits) == 1 and hits[0].key == 0
+
+
+def test_retried_update_keeps_its_new_version(spark, tmp_path):
+    """update_documents is idempotent as one unit: run again with a
+    batch_id that is already committed (a foreachBatch retry or a tlog
+    replay), it writes nothing — no tombstone that would kill the
+    update's own new version."""
+    from lucene_solr_spark.index.builder import IndexConfig, build_index
+    from lucene_solr_spark.index.deletes import update_documents
+    from lucene_solr_spark.search.query import TermQuery
+    from lucene_solr_spark.search.searcher import IndexSearcher
+
+    out = str(tmp_path / "ix")
+    docs = spark.createDataFrame(
+        [(i, f"table doc{i}") for i in range(10)], "doc_id long, text string"
+    )
+    build_index(spark, docs, out, IndexConfig(n_shards=2, segs_per_shard=1))
+    new = spark.createDataFrame([(3, "zebra new version")],
+                                "doc_id long, text string")
+    update_documents(spark, out, new, "u1")
+    update_documents(spark, out, new, "u1")
+    s = IndexSearcher.open(spark, out)
+    hits = s.search_with_keys(TermQuery("zebra"), k=5).collect()
+    assert [r.key for r in hits] == [3]
+    got = s.get_by_keys([3]).collect()
+    assert len(got) == 1 and got[0].doc_id >= 10

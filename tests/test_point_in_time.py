@@ -53,6 +53,7 @@ def pit(spark, tmp_path_factory):
     an update and a delete written behind their backs."""
     from lucene_solr_spark.index.builder import IndexConfig, build_index
     from lucene_solr_spark.index.deletes import delete_by_keys, update_documents
+    from lucene_solr_spark.search import searcher
     from lucene_solr_spark.search.searcher import IndexSearcher
 
     out = str(tmp_path_factory.mktemp("pit") / "ix")
@@ -61,7 +62,14 @@ def pit(spark, tmp_path_factory):
     # an earlier delete, so the open-time view already has tombstones
     delete_by_keys(spark, out, [5])
     plain = IndexSearcher.open(spark, out)
+    # preloaded on both serving tiers: below the in-process cap (the
+    # driver copy) and with the cap forced to 0 (the Spark pins)
     pinned = IndexSearcher.open(spark, out).preload()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(searcher, "IN_PROCESS_MAX_BYTES", 0)
+        pinned_spark = IndexSearcher.open(spark, out).preload()
+    assert (pinned.serving_tier, pinned_spark.serving_tier) == (
+        "driver", "spark")
     before = _answers(plain)
     got_before = _get(plain, UPDATED)
     update_documents(
@@ -72,11 +80,12 @@ def pit(spark, tmp_path_factory):
     )
     delete_by_keys(spark, out, [DELETED])
     yield {"out": out, "plain": plain, "pinned": pinned,
+           "pinned_spark": pinned_spark,
            "before": before, "got_before": got_before}
     spark.catalog.clearCache()
 
 
-@pytest.mark.parametrize("which", ["plain", "pinned"])
+@pytest.mark.parametrize("which", ["plain", "pinned", "pinned_spark"])
 def test_search_answers_as_of_open(pit, which):
     """Top-k on the seam, the constant-score and field-value anti-joins
     and match-all all ignore writes that landed after the open."""
@@ -85,7 +94,7 @@ def test_search_answers_as_of_open(pit, which):
     assert _answers(pit[which]) == before
 
 
-@pytest.mark.parametrize("which", ["plain", "pinned"])
+@pytest.mark.parametrize("which", ["plain", "pinned", "pinned_spark"])
 def test_get_by_keys_returns_open_time_version(pit, which):
     """The updated key keeps its open-time version: the new tombstone
     must not kill it (the new version lives in a generation this

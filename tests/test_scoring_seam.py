@@ -14,6 +14,17 @@ DOCS = [
 ]
 
 
+def _seam_preload(searcher):
+    """preload() with the in-process cap forced to 0: these tests pin
+    the Spark seam's plan, which a preloaded index below the cap skips
+    (tests/test_in_process_serving.py covers that tier)."""
+    from lucene_solr_spark.search import searcher as S
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(S, "IN_PROCESS_MAX_BYTES", 0)
+        return searcher.preload()
+
+
 @pytest.fixture(scope="module")
 def seam_index(spark, tmp_path_factory):
     from lucene_solr_spark.index.builder import IndexConfig, build_index
@@ -23,7 +34,7 @@ def seam_index(spark, tmp_path_factory):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
     build_index(spark, docs, out, IndexConfig(n_shards=2, segs_per_shard=1,
                                               index_positions=True))
-    return IndexSearcher(spark, out).preload()
+    return _seam_preload(IndexSearcher(spark, out))
 
 
 def _nodes(plan):
@@ -108,7 +119,7 @@ def tombstoned_seam(spark, tmp_path_factory):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
     build_index(spark, docs, out, IndexConfig(n_shards=2, segs_per_shard=1))
     delete_by_keys(spark, out, [1, 4])
-    yield IndexSearcher(spark, out).preload()
+    yield _seam_preload(IndexSearcher(spark, out))
     spark.catalog.clearCache()
 
 

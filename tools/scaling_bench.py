@@ -129,10 +129,15 @@ def worker_build(cpus: int, pages_dir: str, out_file: str) -> None:
 
 def worker_query(cpus: int, ix_dir: str, out_file: str) -> None:
     spark = _make_spark(cpus)
+    from lucene_solr_spark.search import searcher
     from lucene_solr_spark.search.searcher import IndexSearcher
 
     # serving mode: pinned index frames (open-IndexReader analog) —
-    # the reference's SearchTasks reuse one reader over cached files
+    # the reference's SearchTasks reuse one reader over cached files.
+    # The in-process cap is forced to 0: this leg measures how the
+    # Spark seam scales with executor cores, and an index below the
+    # cap would otherwise be scored in the driver at every level.
+    searcher.IN_PROCESS_MAX_BYTES = 0
     s = IndexSearcher(spark, ix_dir).preload()
     base = query_set()
     qs = {
