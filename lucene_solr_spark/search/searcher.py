@@ -8,9 +8,11 @@ Query lifecycle mirrors IndexSearcher.search (SURVEY.md §3.1):
    to the term/bool/dismax node tree; only phrase, multi_phrase and
    spans keep their own positional kernels.
 2. bind global stats: (df, cf) per term from the driver TermStates cache
-   (_term_states — one pushed-down `term IN` seek per never-seen term),
-   maxDoc/sumTotalTermFreq from the manifest -> float32 idf, avgdl, the
-   256-entry norm cache (BM25Similarity.computeWeight:200-212).
+   (_term_states — a never-seen term is a binary search in the driver's
+   copy of the term dictionary on the driver tier, else one pushed-down
+   `term IN` seek), maxDoc/sumTotalTermFreq from the manifest -> float32
+   idf, avgdl, the 256-entry norm cache
+   (BM25Similarity.computeWeight:200-212).
 3. per-shard execution — ONE seam, _run_shards, for every scoring
    caller (search, search_many, the similarity wrappers, early
    termination, the term automaton), with two tiers that run the SAME
@@ -23,10 +25,11 @@ Query lifecycle mirrors IndexSearcher.search (SURVEY.md §3.1):
      group per shard.
    - driver tier: after a preload() of an index whose postings + norms
      files take at most IN_PROCESS_MAX_BYTES, the driver holds a copy
-     of the pins (_DriverIndex) and scores every shard in process — a
-     binary-search term seek per shard, no Spark job, no Python stage
-     (Lucene's IndexSearcher looping over an in-process reader's
-     leaves). Scoring then runs inside search(), not at collect().
+     of the pins and the term dictionary (_DriverIndex) and plans and
+     scores every shard in process — binary-search term seeks, no
+     Spark job, no Python stage, cold terms included (Lucene's
+     IndexSearcher looping over an in-process reader's leaves).
+     Scoring then runs inside search(), not at collect().
    The scoring kernel is _score_spec: decode blocks, vectorized float32
    scoring, bounded top-k ordered (score desc, doc asc)
    (TopScoreDocCollector.java:63-80, HitQueue.java:76-81).
@@ -70,6 +73,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 from functools import partial, reduce
 from typing import Callable, NamedTuple
 
@@ -1555,12 +1559,20 @@ IN_PROCESS_MAX_BYTES = 32 << 20
 class _DriverIndex:
     """The driver copy preload() takes of an index below
     IN_PROCESS_MAX_BYTES: the pinned postings as one Arrow table sorted
-    by (shard, term, part), and each shard's pinned norms rows with its
-    open-time liveDocs bitmap. A query seeks its terms by binary search
-    on each shard's slice of the sorted term column, so its cost scales
-    with the rows it matches, not with the index."""
+    by (shard, term, part), each shard's pinned norms rows with its
+    open-time liveDocs bitmap, and the term dictionary as a sorted term
+    array with its df and cf arrays (the terms index Lucene holds in
+    heap from open, BlockTreeTermsReader). A query seeks its terms by
+    binary search on each shard's slice of the sorted term column, and
+    its global (df, cf) by binary search on the dictionary, so its cost
+    scales with the rows it matches, not with the index.
 
-    def __init__(self, postings: pa.Table, norms: pa.Table):
+    Both term columns are sorted by Arrow (UTF-8 byte order) and
+    searched with numpy over Python strings (code-point order): for
+    UTF-8 the two orders are the same."""
+
+    def __init__(self, postings: pa.Table, norms: pa.Table,
+                 term_stats: pa.Table):
         self.postings = postings.sort_by(
             [("shard", "ascending"), ("term", "ascending"),
              ("part", "ascending")]
@@ -1581,7 +1593,32 @@ class _DriverIndex:
                 int(np.searchsorted(shard, s, "right")))
             for s in self.norms
         }
-        self.nbytes = int(self.postings.nbytes + norms.nbytes)
+        term_stats = term_stats.sort_by("term")
+        self._dict = term_stats.column("term").to_numpy(zero_copy_only=False)
+        self._df = term_stats.column("df").to_numpy()
+        self._cf = term_stats.column("cf").to_numpy()
+
+    @property
+    def nbytes(self) -> int:
+        """Bytes the copy holds: the postings table, the norms frames,
+        and the term arrays with their Python str objects."""
+        strs = sum(a.nbytes + sum(map(sys.getsizeof, a))
+                   for a in (self._terms, self._dict))
+        norms = sum(int(g.memory_usage(deep=True).sum())
+                    for g in self.norms.values())
+        return int(self.postings.nbytes + norms + strs
+                   + self._df.nbytes + self._cf.nbytes)
+
+    def term_states(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        """Global (df, cf) of each of `terms` found in the dictionary,
+        by one vectorised binary search (absent terms are left out)."""
+        if not len(self._dict):
+            return {}
+        q = np.asarray(terms, dtype=object)
+        i = np.minimum(np.searchsorted(self._dict, q), len(self._dict) - 1)
+        hit = np.nonzero(self._dict[i] == q)[0]
+        return {terms[j]: (int(self._df[i[j]]), int(self._cf[i[j]]))
+                for j in hit}
 
     def seek(self, terms: list[str], dfs: dict[str, int],
              drop: tuple[str, ...]) -> dict[int, pd.DataFrame]:
@@ -1882,12 +1919,16 @@ class IndexSearcher:
 
         In-process tier: when the postings and norms files take at most
         IN_PROCESS_MAX_BYTES on disk (decided from the plan statistics,
-        before anything runs), the pins are materialized by `toArrow()`
-        instead of `count()`: the same action fills the cache and hands
-        the driver a copy (_DriverIndex), and _run_shards then scores
-        every shard in the driver. The copy is taken here, so it is as
-        point-in-time as the pins. `serving_tier` and `driver_bytes`
-        report the outcome. Returns self."""
+        before anything runs), the postings, norms and term-dictionary
+        pins are materialized by `toArrow()` instead of `count()`: the
+        same action fills each cache and hands the driver a copy
+        (_DriverIndex). _run_shards then scores every shard in the
+        driver, and _term_states reads (df, cf) from the dictionary
+        copy, so no query starts a Spark job. The copy is taken here,
+        so it is as point-in-time as the pins. `serving_tier` and
+        `driver_bytes` report the outcome. The pins stay: the multi-term
+        rewrites, term vectors and the constant-score paths still read
+        them. Returns self."""
         in_process = (
             _plan_bytes(self._postings) + _plan_bytes(self._norms)
             <= IN_PROCESS_MAX_BYTES
@@ -1914,12 +1955,13 @@ class IndexSearcher:
             # one action materializes each lineage
             if in_process:
                 self._driver = _DriverIndex(
-                    self._postings.toArrow(), self._live_norms.toArrow()
+                    self._postings.toArrow(), self._live_norms.toArrow(),
+                    self._term_stats.select("term", "df", "cf").toArrow(),
                 )
             else:
                 self._postings.count()
                 self._live_norms.count()
-            self._term_stats.count()
+                self._term_stats.count()
         finally:
             sc.setJobDescription(desc)
         self._served_p = p
@@ -1927,16 +1969,18 @@ class IndexSearcher:
 
     @property
     def serving_tier(self) -> str:
-        """Where scoring runs: "driver" after a preload() below
-        IN_PROCESS_MAX_BYTES (every shard scored in this process, no
-        Spark job per query), else "spark" (one applyInPandas cogroup
+        """Where planning and scoring run: "driver" after a preload()
+        below IN_PROCESS_MAX_BYTES (term statistics from the driver's
+        dictionary copy and every shard scored in this process, no
+        Spark job per query, cold or warm), else "spark" (a dictionary
+        lookup job per never-seen term set, one applyInPandas cogroup
         group per shard)."""
         return "spark" if self._driver is None else "driver"
 
     @property
     def driver_bytes(self) -> int:
-        """Arrow bytes of the driver copy of postings and norms (0 on
-        the Spark tier)."""
+        """Bytes of the driver copy of postings, norms and the term
+        dictionary, Python objects included (0 on the Spark tier)."""
         return 0 if self._driver is None else self._driver.nbytes
 
     def _serving_partitions(self) -> int:
@@ -2081,21 +2125,27 @@ class IndexSearcher:
         return norms.join(self._deleted_bitmaps(), "shard", "left")
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Global df per term, driver-cached (see _term_states)."""
+        """Global df per term, driver-cached (see _term_states): no
+        Spark job on the driver tier."""
         return {t: st[0] for t, st in self._term_states(terms).items()}
 
     def _term_states(self, terms) -> dict[str, tuple[int, int]]:
-        """Global (df, cf) per term, driver-cached (the TermStates pull
-        — one tiny pushed-down dictionary seek per never-seen term set,
-        free afterwards). Absent terms cache as (0, 0)."""
+        """Global (df, cf) per term, driver-cached (the TermStates pull,
+        free after a term's first lookup). A never-seen term set is one
+        vectorised binary search in the driver's dictionary copy on the
+        driver tier, and one tiny pushed-down dictionary seek (a Spark
+        job) without one. Absent terms cache as (0, 0)."""
         missing = sorted({t for t in terms if t not in self._ts_cache})
         if missing:
-            rows = (
-                self._term_stats.where(F.col("term").isin(missing))
-                .select("term", "df", "cf")
-                .collect()
-            )
-            found = {r.term: (int(r.df), int(r.cf)) for r in rows}
+            if self._driver is not None:
+                found = self._driver.term_states(missing)
+            else:
+                rows = (
+                    self._term_stats.where(F.col("term").isin(missing))
+                    .select("term", "df", "cf")
+                    .collect()
+                )
+                found = {r.term: (int(r.df), int(r.cf)) for r in rows}
             for t in missing:
                 self._ts_cache[t] = found.get(t, (0, 0))
         return {t: self._ts_cache[t] for t in terms}

@@ -3,8 +3,10 @@ copied into the driver, and `_run_shards` scores every shard there.
 
 Every scoring shape must give the same top-k doc ids and the same f32
 score bits as the Spark seam (the same searcher preloaded with the cap
-forced to 0), on one tombstoned, two-generation index; and a warm query
-on the driver tier must start no Spark job at all.
+forced to 0), on one tombstoned, two-generation index; a query on the
+driver tier, warm or cold, must start no Spark job at all; and the
+driver's copy of the term dictionary must give the Spark lookup's
+(df, cf) for every term.
 """
 
 from __future__ import annotations
@@ -54,8 +56,33 @@ def tiers(spark, tmp_path_factory):
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(S, "IN_PROCESS_MAX_BYTES", 0)
         seam = S.IndexSearcher.open(spark, out).preload()
-    yield {"driver": driver, "spark": seam, "restored": restored}
+    yield {"driver": driver, "spark": seam, "restored": restored, "dir": out}
     spark.catalog.clearCache()
+
+
+def _fresh(spark, index_dir):
+    """A newly opened and preloaded searcher on each tier, so no term
+    lookup of an earlier test can have warmed their TermStates caches."""
+    from lucene_solr_spark.search import searcher as S
+
+    driver = S.IndexSearcher.open(spark, index_dir).preload()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(S, "IN_PROCESS_MAX_BYTES", 0)
+        seam = S.IndexSearcher.open(spark, index_dir).preload()
+    assert (driver.serving_tier, seam.serving_tier) == ("driver", "spark")
+    assert not driver._ts_cache and not seam._ts_cache
+    return driver, seam
+
+
+def _jobs_in(sc, group, fn):
+    """Ids of the Spark jobs `fn()` starts."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _automaton():
@@ -193,18 +220,89 @@ def test_warm_queries_start_no_job(spark, tiers):
     q = BooleanOr(("table", "scan"))
     many = {"a": TermQuery("vector"), "b": q}
 
-    def jobs_in(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return list(sc.statusTracker().getJobIdsForGroup(group))
-
     s.term_dfs(["table", "scan", "vector"])  # warm the TermStates cache
-    assert jobs_in("ips-search", lambda: s.search(q, k=5).collect()) == []
-    assert jobs_in("ips-many", lambda: s.search_many(many, k=5).collect()) == []
+    assert _jobs_in(sc, "ips-search",
+                    lambda: s.search(q, k=5).collect()) == []
+    assert _jobs_in(sc, "ips-many",
+                    lambda: s.search_many(many, k=5).collect()) == []
     # the same calls on the Spark tier do run jobs (the check can fail)
     tiers["spark"].term_dfs(["table", "scan", "vector"])
-    assert jobs_in("ips-seam", lambda: tiers["spark"].search(q, k=5).collect())
+    assert _jobs_in(sc, "ips-seam",
+                    lambda: tiers["spark"].search(q, k=5).collect())
+
+
+def test_cold_queries_start_no_job(spark, tiers):
+    """On a freshly preloaded driver-tier searcher, queries on
+    never-queried terms start no Spark job either: their (df, cf) come
+    from the driver's copy of the term dictionary. The cap-0 searcher
+    still runs its dictionary lookup job."""
+    from lucene_solr_spark.search.query import (
+        BlendedTermQuery, BooleanAnd, BooleanOr, TermQuery)
+
+    driver, seam = _fresh(spark, tiers["dir"])  # preload jobs run here
+    sc = spark.sparkContext
+    many = {"a": TermQuery("vector"), "b": BooleanAnd(("merge", "sort"))}
+    runs = {
+        "search": lambda: driver.search(BooleanOr(("table", "scan")),
+                                        k=5).collect(),
+        "many": lambda: driver.search_many(many, k=5).collect(),
+        "blended": lambda: driver.search(
+            BlendedTermQuery(("spark", "window"), tie=0.01), k=5).collect(),
+        "lm": lambda: driver.search_lm(BooleanOr(("batch", "stream")),
+                                       k=5).collect(),
+    }
+    for name, run in runs.items():
+        cached = set(driver._ts_cache)
+        assert _jobs_in(sc, f"ips-cold-{name}", run) == [], name
+        assert set(driver._ts_cache) > cached, f"{name} looked up no term"
+    assert _jobs_in(sc, "ips-cold-seam", lambda: seam.term_dfs(["hash", "join"]))
+
+
+def _dictionary_probe(seam, extra):
+    terms = sorted(r.term for r in seam._term_stats.select("term").collect())
+    return terms, terms + extra
+
+
+def test_driver_dictionary_matches_spark_lookup(spark, tiers):
+    """_term_states from the driver's dictionary equals the Spark
+    lookup for every dictionary term, absent terms and field-prefixed
+    keys, on the tombstoned two-generation view (df and cf summed over
+    both generations)."""
+    from lucene_solr_spark.index.builder import FIELD_SEP
+
+    driver, seam = _fresh(spark, tiers["dir"])
+    terms, probe = _dictionary_probe(seam, [
+        "absentterm", "", "tabl", "tablez", "~", f"source{FIELD_SEP}table",
+        f"text{FIELD_SEP}table",
+    ])
+    assert set(VOCAB) <= set(terms)
+    want = seam._term_states(probe)
+    assert driver._term_states(probe) == want
+    assert want["absentterm"] == (0, 0) and want["table"][0] > 0
+
+
+def test_driver_dictionary_orders_non_ascii_terms(spark, tmp_path):
+    """The dictionary's sort and search share one comparator: an
+    accented Latin term, a CJK term, a supplementary-plane term (whose
+    UTF-16 order differs from its code-point order) and a U+FFxx term
+    are all found, in the default field and a second field, with the
+    Spark lookup's (df, cf)."""
+    from lucene_solr_spark.index.builder import FIELD_SEP, IndexConfig, build_index
+
+    odd = ["café", "東京", "a\U0001d4b3b", "\U00020000", "ｆｕｌｌ", "\uffe5x"]
+    rows = [(i, " ".join([odd[i % len(odd)], odd[(i * 5 + 1) % len(odd)],
+                          VOCAB[i % len(VOCAB)]]),
+             odd[(i + 2) % len(odd)]) for i in range(24)]
+    out = str(tmp_path / "ix")
+    build_index(spark, spark.createDataFrame(
+        rows, "doc_id long, text string, source string"), out,
+        IndexConfig(n_shards=2, segs_per_shard=1, analyzer="whitespace",
+                    extra_fields=("source",)))
+    driver, seam = _fresh(spark, out)
+    prefixed = [f"source{FIELD_SEP}{t}" for t in odd]
+    terms, probe = _dictionary_probe(seam, ["zz", "\U0010ffff", "\uffff",
+                                            f"source{FIELD_SEP}zz"])
+    assert set(odd + prefixed) <= set(terms)
+    want = seam._term_states(probe)
+    assert driver._term_states(probe) == want
+    assert all(want[t][0] > 0 for t in odd + prefixed)
